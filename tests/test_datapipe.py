@@ -1006,6 +1006,135 @@ def test_curate_stream_replay_idempotent(spark, tmp_path):
     assert state.count() == state.select("__fp").distinct().count() == 12
 
 
+def test_curate_stream_cross_batch_dedup_file_uri(spark, tmp_path):
+    """The state/index existence probes go through the Hadoop FS, so a
+    ``file://`` out/state dir still screens batch 2 against batch 1 (an
+    os.path probe never sees a URI and silently turned dedup off: 35
+    rows instead of 25)."""
+    import pandas as pd
+    from vaex_spark import streaming as st
+
+    texts = ["a real document with plenty of words to pass the filters %d" % i
+             for i in range(20)]
+    src = tmp_path / "src"
+    src.mkdir()
+    pd.DataFrame({"doc_id": range(20), "text": texts}).to_parquet(src / "b1.parquet")
+    common = dict(out_dir=f"file://{tmp_path}/out", state_dir=f"file://{tmp_path}/state",
+                  checkpoint=str(tmp_path / "ckpt"),
+                  min_quality=None, repetition_filter=False, dedup=None)
+    st.curate_stream(st.open_stream(str(src), spark=spark), **common)
+    pd.DataFrame({"doc_id": range(100, 115),
+                  "text": texts[:10] + ["fresh unseen document number %d with enough words" % i
+                                        for i in range(5)]}).to_parquet(src / "b2.parquet")
+    st.curate_stream(st.open_stream(str(src), spark=spark), **common)
+
+    ids = sorted(r["doc_id"] for r in
+                 spark.read.parquet(str(tmp_path / "out")).select("doc_id").collect())
+    assert ids == list(range(20)) + list(range(110, 115))
+    assert spark.read.parquet(str(tmp_path / "state")).count() == 25
+
+
+def _stream_sinks(spark, tmp_path, batch_id):
+    """(out ids, out fingerprints, state fps, lsh ids) of one batch."""
+    from vaex_spark.datapipe.text import fingerprint
+
+    def part(d):
+        return spark.read.parquet(str(tmp_path / d)).filter(F.col("__batch_id") == batch_id)
+
+    out = part("out")
+    ids = {r[0] for r in out.select("doc_id").collect()}
+    fps = {r[0] for r in out.select(fingerprint(F.col("text"))).collect()}
+    state = {r[0] for r in part("state").select("__fp").collect()}
+    lsh = {r[0] for r in part("lsh").select("doc_id").distinct().collect()}
+    return ids, fps, state, lsh
+
+
+def test_curate_stream_derived_sinks_match_out(spark, tmp_path):
+    """The state and LSH sinks of batch N describe exactly the rows
+    emitted to out's batch-N partition — on a normal run and after
+    batch 1 replays from a checkpoint that never committed it (its
+    out/state/lsh partitions already on disk).  Batch 1 carries
+    within-batch, cross-batch exact and cross-batch near duplicates, so
+    every screen drops rows."""
+    import shutil
+
+    import pandas as pd
+    from vaex_spark import streaming as st
+
+    base = ("the quick brown fox jumps over the lazy dog again and again "
+            "for testing purposes in document number %d")
+    texts = [base % i for i in range(10)]
+    src = tmp_path / "src"
+    src.mkdir()
+    pd.DataFrame({"doc_id": range(12), "source": "s",
+                  "text": texts + [texts[0].upper(), texts[1] + "  "]}
+                 ).to_parquet(src / "b0.parquet")
+    common = dict(out_dir=str(tmp_path / "out"), state_dir=str(tmp_path / "state"),
+                  fuzzy_lsh_dir=str(tmp_path / "lsh"), sketch_dir=str(tmp_path / "sk"),
+                  min_quality=None, repetition_filter=False)
+    ckpt = str(tmp_path / "ckpt")
+    st.curate_stream(st.open_stream(str(src), spark=spark), checkpoint=ckpt, **common)
+    shutil.copytree(ckpt, str(tmp_path / "ckpt_before_1"))
+
+    fresh = ["completely different content about distributed engines "
+             "and columnar formats variant %d with extra words" % i for i in range(4)]
+    pd.DataFrame({"doc_id": range(100, 111), "source": "s",
+                  "text": [texts[2].title(), texts[3],                     # exact
+                           texts[4].replace("lazy", "sleepy"),             # near
+                           texts[5].replace("lazy", "sleepy")]
+                          + fresh + [fresh[0].upper(), fresh[1], "x"]}     # within
+                 ).to_parquet(src / "b1.parquet")
+    st.curate_stream(st.open_stream(str(src), spark=spark), checkpoint=ckpt, **common)
+
+    want = {0: set(range(10)), 1: {104, 105, 106, 107, 110}}
+    for b in (0, 1):
+        ids, fps, state, lsh = _stream_sinks(spark, tmp_path, b)
+        assert ids == want[b], (b, ids)
+        assert state == fps and lsh == ids
+
+    st.curate_stream(st.open_stream(str(src), spark=spark),
+                     checkpoint=str(tmp_path / "ckpt_before_1"), **common)
+    ids, fps, state, lsh = _stream_sinks(spark, tmp_path, 1)
+    assert ids == want[1]
+    assert state == fps and lsh == ids
+
+
+def test_curate_stream_all_duplicate_batch_writes_nothing(spark, tmp_path):
+    """A batch whose documents all duplicate earlier emissions emits no
+    rows: no sink gets a partition for it, the missing out partition is
+    not an error, and the next batch screens and lands normally."""
+    import os
+
+    import pandas as pd
+    from vaex_spark import streaming as st
+
+    texts = ["a real document with plenty of words to pass the filters %d" % i
+             for i in range(8)]
+    src = tmp_path / "src"
+    src.mkdir()
+    dirs = dict(out_dir="out", state_dir="state", fuzzy_lsh_dir="lsh", sketch_dir="sk")
+    common = dict({k: str(tmp_path / v) for k, v in dirs.items()},
+                  checkpoint=str(tmp_path / "ckpt"),
+                  min_quality=None, repetition_filter=False)
+    batches = [
+        pd.DataFrame({"doc_id": range(8), "text": texts}),
+        pd.DataFrame({"doc_id": range(100, 104), "text": [t.upper() for t in texts[:4]]}),
+        pd.DataFrame({"doc_id": range(200, 203),
+                      "text": ["fresh unseen document number %d with enough words" % i
+                               for i in range(2)] + [texts[5]]}),
+    ]
+    for b, pdf in enumerate(batches):
+        pdf.assign(source="s").to_parquet(src / f"b{b}.parquet")
+        st.curate_stream(st.open_stream(str(src), spark=spark), **common)
+
+    for d in dirs.values():
+        parts = sorted(e for e in os.listdir(tmp_path / d) if e.startswith("__batch_id="))
+        assert parts == ["__batch_id=0", "__batch_id=2"], (d, parts)
+    ids = sorted(r["doc_id"] for r in
+                 spark.read.parquet(str(tmp_path / "out")).select("doc_id").collect())
+    assert ids == list(range(8)) + [200, 201]
+
+
 # ---------------------------------------------------------------------------
 # round 4: semantic dedup / substring dedup / chunking / PMI
 # ---------------------------------------------------------------------------

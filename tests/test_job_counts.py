@@ -238,3 +238,61 @@ def test_connected_components_one_action_per_round(spark):
     j8, j16 = cc_jobs(8), cc_jobs(16)
     per_round = (j16 - j8) / 8.0
     assert per_round <= 4.0, (j8, j16, per_round)
+
+
+# curate_stream incremental batch (fuzzy_lsh_dir + sketch_dir): jobs of
+# each derived sink's write and of the whole batch.  Measured + 1; the
+# derived sinks are built from the read-back out partition, so a revert
+# to writing them from the screened plan (16-28 jobs a sink) fails.
+# Measured at local[4]: state 2, lsh 1, sketch 2, batch 34 (36 when
+# curate dedups the batch a second time).
+STREAM_SINK_JOB_CEILING = {"state": 3, "lsh": 2, "sketch": 3}
+STREAM_BATCH_JOB_CEILING = 35
+
+
+def test_curate_stream_batch_job_ceiling(spark, tmp_path, monkeypatch):
+    """Counted as ``numTotalJobs`` deltas: foreachBatch runs on the
+    stream thread, which does not carry the caller's job group."""
+    import pandas as pd
+    from pyspark.sql.readwriter import DataFrameWriter
+    from vaex_spark import streaming as st
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    sinks: dict = {}
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        j0 = dag.numTotalJobs()
+        try:
+            return orig(self, path, *a, **kw)
+        finally:
+            d = path.rstrip("/").rsplit("/", 1)[-1]
+            sinks[d] = sinks.get(d, 0) + dag.numTotalJobs() - j0
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    texts = ["the quick brown fox jumps over the lazy dog again and again "
+             "for testing purposes in document number %d" % i for i in range(12)]
+    texts += ["completely different content about distributed engines and "
+              "columnar formats variant %d with extra words" % i for i in range(8)]
+    src = tmp_path / "src"
+    src.mkdir()
+    common = {d: str(tmp_path / n) for d, n in (
+        ("out_dir", "out"), ("state_dir", "state"),
+        ("fuzzy_lsh_dir", "lsh"), ("sketch_dir", "sketch"))}
+    common.update(checkpoint=str(tmp_path / "ckpt"), min_quality=None,
+                  repetition_filter=False)
+    pd.DataFrame({"doc_id": range(12), "text": texts[:12], "source": "s"}
+                 ).to_parquet(src / "b0.parquet")
+    st.curate_stream(st.open_stream(str(src), spark=spark), **common)
+    pd.DataFrame({"doc_id": range(100, 110), "source": "s",
+                  "text": [texts[0].upper(), texts[1].replace("lazy", "sleepy")]
+                  + texts[12:20]}).to_parquet(src / "b1.parquet")
+    sinks.clear()
+    j0 = dag.numTotalJobs()
+    st.curate_stream(st.open_stream(str(src), spark=spark), **common)
+    total = dag.numTotalJobs() - j0
+    assert spark.read.parquet(common["out_dir"]).count() == 20
+    over = {d: (sinks.get(d), c) for d, c in STREAM_SINK_JOB_CEILING.items()
+            if not 0 < sinks.get(d, 0) <= c}
+    assert not over, f"derived sink jobs (got, ceiling): {over}"
+    assert total <= STREAM_BATCH_JOB_CEILING, (total, sinks)

@@ -293,6 +293,21 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
     checkpoint.  At 100 TB the state table is fingerprints only (8 B a
     row before encoding), shuffled hash-to-hash.
 
+    Each batch is screened ONCE.  The survivors are written to
+    ``out_dir`` first; every derived sink (fingerprint state, LSH,
+    winnow and vector indexes, sketches) is then built from a read-back
+    of the ``__batch_id=N`` partition just written, so each sink
+    describes exactly the rows emitted and costs one or two jobs
+    instead of a re-run of curate plus every screen.  A ``persist`` of
+    the screened plan cannot do this: after the ``out_dir`` write Spark
+    re-caches every cached plan that reads a written path
+    (``recacheByPath``), and the screens read ``out_dir`` and the
+    state dirs, so the cache is dropped and recomputed per sink.  A
+    batch that emits nothing writes no partition to any sink.  With
+    curate's default ``dedup="exact"`` (and no ``pack_tokens``) the
+    within-batch exact dedup runs once, in the screen, not again inside
+    curate.
+
     ``fuzzy_lsh_dir`` additionally enables CROSS-batch NEAR-dup dedup:
     each batch's survivors are checked against every earlier batch's
     emitted documents via the persisted MinHash-LSH index
@@ -365,63 +380,65 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
     (``keep_latest=1``), so checkpoint replays of the in-flight batch
     stay idempotent.
     """
-    import os
-
     from ..datapipe import dedup as D
     from ..dataframe import DataFrame as VDF
 
+    kw = dict(curate_kw)
+    if kw.get("dedup", "exact") == "exact" and kw.get("pack_tokens") is None:
+        # the exact screen below dedups the batch again with the same
+        # min-id rule, and its anti-join drops whole fingerprint groups,
+        # so curate's own pass would only add jobs, not change rows
+        kw["dedup"] = None
+
     def do_batch(bdf, batch_id):
         from ..datapipe.curate import curate
-        if compact_every and int(batch_id) > 0 \
-                and int(batch_id) % int(compact_every) == 0:
+        spark = bdf.sparkSession
+        bid = int(batch_id)
+
+        def has_parts(d):
+            # through _Fs, not os.path: file://, hdfs:// and s3a:// dirs
+            # are real paths a local check can never see
+            return any(e.startswith("__batch_id=")
+                       for e in _Fs(spark, d).listdir())
+
+        def prior(d):
+            # strictly-earlier batches only: on replay this batch's own
+            # rows may already be in the dir
+            return spark.read.parquet(d).filter(F.col("__batch_id") < bid)
+
+        def write(sdf, d):
+            (sdf.withColumn("__batch_id", F.lit(bid))
+             .write.mode("overwrite").partitionBy("__batch_id").parquet(d))
+
+        if compact_every and bid > 0 and bid % int(compact_every) == 0:
             for d in (out_dir, state_dir, fuzzy_lsh_dir, winnow_index_dir,
                       vector_index_dir, sketch_dir):
-                # existence probed through _Fs, not os.path.isdir —
-                # hdfs://s3a state dirs are real paths the local check
-                # can never see (r11 ADVICE); an empty listing means
-                # never-written, and compaction would be a no-op anyway
-                if d is not None and _Fs(bdf.sparkSession, d).listdir():
-                    compact_index_dir(bdf.sparkSession, d)
-        curated = curate(VDF(bdf), text_col=text_col, id_col=id_col, **curate_kw)
-        csdf = curated._spark_df()
-        spark = csdf.sparkSession
-        has_state = os.path.isdir(state_dir) and any(
-            e.startswith("__batch_id=") for e in os.listdir(state_dir))
-        if has_state:
-            # strictly-earlier batches only: on replay this batch's own
-            # fingerprints may already be in the state table
-            seen = VDF(spark.read.parquet(state_dir)
-                       .filter(F.col("__batch_id") < int(batch_id)))
-            fresh = D.exact_dedup_incremental(VDF(csdf), seen,
+                # an empty listing means never-written, and compaction
+                # would be a no-op anyway
+                if d is not None and _Fs(spark, d).listdir():
+                    compact_index_dir(spark, d)
+        fresh = curate(VDF(bdf), text_col=text_col, id_col=id_col, **kw)
+        if has_parts(state_dir):
+            fresh = D.exact_dedup_incremental(fresh, VDF(prior(state_dir)),
                                               text_col=text_col, id_col=id_col)
         else:
-            fresh = D.exact_dedup(VDF(csdf), text_col=text_col, id_col=id_col)
-        if fuzzy_lsh_dir is not None:
-            fp = {**dict(shingle_k=5, num_perm=64, num_bands=32),
-                  **(fuzzy_params or {})}
-            has_index = os.path.isdir(fuzzy_lsh_dir) and any(
-                e.startswith("__batch_id=") for e in os.listdir(fuzzy_lsh_dir))
-            if has_index:
-                prior = F.col("__batch_id") < int(batch_id)
-                corpus = VDF(spark.read.parquet(out_dir).filter(prior))
-                index = VDF(spark.read.parquet(fuzzy_lsh_dir).filter(prior))
-                fresh = D.near_dup_against_corpus(
-                    fresh, corpus, text_col=text_col, id_col=id_col,
-                    threshold=float(fuzzy_threshold), corpus_index=index,
-                    **fp)
+            fresh = D.exact_dedup(fresh, text_col=text_col, id_col=id_col)
+        fp = {**dict(shingle_k=5, num_perm=64, num_bands=32),
+              **(fuzzy_params or {})}
+        if fuzzy_lsh_dir is not None and has_parts(fuzzy_lsh_dir):
+            fresh = D.near_dup_against_corpus(
+                fresh, VDF(prior(out_dir)), text_col=text_col, id_col=id_col,
+                threshold=float(fuzzy_threshold),
+                corpus_index=VDF(prior(fuzzy_lsh_dir)), **fp)
         if winnow_index_dir is not None:
             from ..datapipe import text as T
             wp = {**dict(k=5, window=4, fp_type="hash", max_df=256),
                   **(winnow_params or {})}
-            has_widx = os.path.isdir(winnow_index_dir) and any(
-                e.startswith("__batch_id=") for e in os.listdir(winnow_index_dir))
-            if has_widx:
-                widx = (spark.read.parquet(winnow_index_dir)
-                        .filter(F.col("__batch_id") < int(batch_id)))
+            if has_parts(winnow_index_dir):
                 fresh = T.winnow_dedup_against_corpus(
                     fresh, text_col=text_col, id_col=id_col,
-                    min_shared=int(winnow_min_shared), corpus_index=widx,
-                    **wp)
+                    min_shared=int(winnow_min_shared),
+                    corpus_index=prior(winnow_index_dir), **wp)
         if vector_index_dir is not None:
             from ..datapipe import similarity as SIM
             if vec_col not in fresh._spark_df().columns:
@@ -430,46 +447,41 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
                     f"{vec_col!r}; columns: {fresh._spark_df().columns}")
             vp = {**dict(bits=6, n_tables=8, seed=42),
                   **(vector_params or {})}
-            has_vidx = os.path.isdir(vector_index_dir) and any(
-                e.startswith("__batch_id=") for e in os.listdir(vector_index_dir))
-            if has_vidx:
-                vidx = (spark.read.parquet(vector_index_dir)
-                        .filter(F.col("__batch_id") < int(batch_id)))
+            if has_parts(vector_index_dir):
                 fresh = SIM.embedding_dedup_against_corpus(
                     fresh, vec_col=vec_col, id_col=id_col,
-                    threshold=float(vector_threshold), corpus_index=vidx,
-                    **vp)
-        fsdf = fresh._spark_df().withColumn("__batch_id", F.lit(int(batch_id)))
+                    threshold=float(vector_threshold),
+                    corpus_index=prior(vector_index_dir), **vp)
+        fsdf = fresh._spark_df()
         prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
                                    "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            (fsdf.write.mode("overwrite").partitionBy("__batch_id")
-             .parquet(out_dir))
-            (D.corpus_fingerprints(fresh, text_col=text_col)._spark_df()
-             .withColumn("__batch_id", F.lit(int(batch_id)))
-             .write.mode("overwrite").partitionBy("__batch_id")
-             .parquet(state_dir))
+            write(fsdf, out_dir)
+            # the derived sinks read back the partition just written
+            # instead of re-running the screened plan once per sink; the
+            # explicit schema skips the footer-inference job.  A batch
+            # that emitted nothing has no partition, and neither do its
+            # derived sinks.
+            part = f"__batch_id={bid}"
+            if not _Fs(spark, out_dir).exists(part):
+                return
+            emitted = VDF(spark.read.schema(fsdf.schema)
+                          .parquet(out_dir.rstrip("/") + "/" + part))
+            write(D.corpus_fingerprints(emitted, text_col=text_col)
+                  ._spark_df(), state_dir)
             if fuzzy_lsh_dir is not None:
-                fp = {**dict(shingle_k=5, num_perm=64, num_bands=32),
-                      **(fuzzy_params or {})}
-                (D.corpus_lsh_index(fresh, text_col=text_col, id_col=id_col,
-                                    **fp)._spark_df()
-                 .withColumn("__batch_id", F.lit(int(batch_id)))
-                 .write.mode("overwrite").partitionBy("__batch_id")
-                 .parquet(fuzzy_lsh_dir))
+                write(D.corpus_lsh_index(emitted, text_col=text_col,
+                                         id_col=id_col, **fp)._spark_df(),
+                      fuzzy_lsh_dir)
             if winnow_index_dir is not None:
-                from ..datapipe import text as T
                 wp = {**dict(k=5, window=4, fp_type="hash"),
                       **{k_: v for k_, v in (winnow_params or {}).items()
                          if k_ in ("k", "window", "fp_type")}}
-                (T.corpus_winnow_index(fresh, text_col=text_col,
-                                       id_col=id_col, **wp)._spark_df()
-                 .withColumn("__batch_id", F.lit(int(batch_id)))
-                 .write.mode("overwrite").partitionBy("__batch_id")
-                 .parquet(winnow_index_dir))
+                write(T.corpus_winnow_index(emitted, text_col=text_col,
+                                            id_col=id_col, **wp)._spark_df(),
+                      winnow_index_dir)
             if vector_index_dir is not None:
-                from ..datapipe import similarity as SIM
                 # key-filter to the BUILD signature, mirroring the
                 # winnow branch above: a screen-only key in
                 # vector_params (strategy, round_to, max_dense_batch)
@@ -479,11 +491,9 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
                 vp = {**dict(bits=6, n_tables=8, seed=42),
                       **{k_: v for k_, v in (vector_params or {}).items()
                          if k_ in ("bits", "n_tables", "seed", "dim")}}
-                (SIM.corpus_vector_index(fresh, vec_col=vec_col,
-                                         id_col=id_col, **vp)
-                 .withColumn("__batch_id", F.lit(int(batch_id)))
-                 .write.mode("overwrite").partitionBy("__batch_id")
-                 .parquet(vector_index_dir))
+                write(SIM.corpus_vector_index(emitted, vec_col=vec_col,
+                                              id_col=id_col, **vp),
+                      vector_index_dir)
             if sketch_dir is not None:
                 # per-batch HLL sketch of the EMITTED documents: a
                 # few-KB mergeable state row per group, same
@@ -492,11 +502,9 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
                 # running per-group distinct counts without rescanning
                 # any document batch.
                 from ..datapipe.sketches import distinct_sketch
-                (distinct_sketch(fresh, text_col, group_col=sketch_group)
-                 ._spark_df()
-                 .withColumn("__batch_id", F.lit(int(batch_id)))
-                 .write.mode("overwrite").partitionBy("__batch_id")
-                 .parquet(sketch_dir))
+                write(distinct_sketch(emitted, text_col,
+                                      group_col=sketch_group)._spark_df(),
+                      sketch_dir)
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
