@@ -868,6 +868,14 @@ def test_exact_dedup_incremental_and_fingerprint_table(spark):
     out2 = sorted(r["doc_id"] for r in
                   exact_dedup_incremental(batch, fps).spark.collect())
     assert out2 == [11, 13]
+    # a seen text dies even when a fresh row shares its id, and a
+    # caller column named __fp rides through untouched
+    batch2 = vs.from_arrays(doc_id=[20, 20, 21], text=["zeta", "gamma", "eta"],
+                            __fp=[7, 8, 9], spark=spark)
+    for s_ in (seen, fps):
+        rows = sorted((r["doc_id"], r["text"], r["__fp"]) for r in
+                      exact_dedup_incremental(batch2, s_).spark.collect())
+        assert rows == [(20, "zeta", 7), (21, "eta", 9)]
 
 
 def test_near_dup_against_corpus_drops_fuzzy_matches(spark):
@@ -1133,6 +1141,156 @@ def test_curate_stream_all_duplicate_batch_writes_nothing(spark, tmp_path):
     ids = sorted(r["doc_id"] for r in
                  spark.read.parquet(str(tmp_path / "out")).select("doc_id").collect())
     assert ids == list(range(8)) + [200, 201]
+
+
+def _seeded_batches(seed: int = 7, n: int = 6):
+    """Micro-batches of fresh documents plus exact (case/whitespace
+    variants), near (one word swapped) and within-batch duplicates."""
+    import random
+
+    import pandas as pd
+    rng = random.Random(seed)
+    word = lambda: "".join(rng.choice("abcdefghij") for _ in range(5))  # noqa: E731
+    earlier, batches, next_id = [], [], 0
+    for b in range(n):
+        texts = [" ".join(word() for _ in range(25)) for _ in range(12)]
+        texts.append(texts[0].upper())
+        if earlier:
+            texts += [rng.choice(earlier) + "  ", rng.choice(earlier).title()]
+            for t in rng.sample(earlier, 2):
+                words = t.split()
+                words[rng.randrange(len(words))] = word()
+                texts.append(" ".join(words))
+        earlier += texts[:12]
+        ids = list(range(next_id, next_id + len(texts)))
+        next_id += len(texts)
+        batches.append(pd.DataFrame({"doc_id": ids, "text": texts,
+                                     "source": [f"s{i % 2}" for i in ids]}))
+    return batches
+
+
+_SEEDED_DIRS = dict(out_dir="out", state_dir="state", fuzzy_lsh_dir="lsh",
+                    sketch_dir="sketch")
+
+
+def _curate_seeded(spark, base):
+    """One curate_stream call: processes the source files under
+    ``base/src`` its checkpoint has not committed."""
+    from vaex_spark import streaming as st
+    st.curate_stream(st.open_stream(str(base / "src"), spark=spark),
+                     **{k: str(base / v) for k, v in _SEEDED_DIRS.items()},
+                     checkpoint=str(base / "ckpt"), min_quality=None,
+                     repetition_filter=False)
+
+
+def _run_seeded(spark, base, batches, first: int = 0):
+    (base / "src").mkdir(exist_ok=True)
+    for b, pdf in enumerate(batches, start=first):
+        pdf.to_parquet(base / "src" / f"b{b}.parquet")
+        _curate_seeded(spark, base)
+
+
+def _sink_rows(spark, d, max_batch: int | None = None) -> list:
+    """A sink's rows, sorted; sketches as their HLL estimates, which
+    do not depend on the order rows reached the sketch."""
+    sdf = spark.read.parquet(str(d))
+    if max_batch is not None:
+        sdf = sdf.filter(F.col("__batch_id") <= max_batch)
+    if "__hll" in sdf.columns:
+        sdf = sdf.withColumn("__hll", F.hll_sketch_estimate("__hll"))
+    return sorted((tuple(r) for r in sdf.collect()), key=repr)
+
+
+@pytest.fixture(scope="module")
+def seeded_stream(spark, tmp_path_factory):
+    """Batches 0-5 of the seeded stream through curate_stream with the
+    exact, fuzzy and sketch sinks, recording every session conf key set
+    and the operator-persist registry around the run."""
+    from pyspark.sql.conf import RuntimeConfig
+    from vaex_spark.cache import _OP_PERSISTED
+
+    base = tmp_path_factory.mktemp("seeded_stream")
+    keys, orig = [], RuntimeConfig.set
+
+    def conf_set(self, key, value):
+        keys.append(key)
+        return orig(self, key, value)
+
+    before = [id(x) for x in _OP_PERSISTED]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(RuntimeConfig, "set", conf_set)
+        _run_seeded(spark, base, _seeded_batches())
+    return {"base": base, "conf_keys": keys,
+            "persisted": (before, [id(x) for x in _OP_PERSISTED])}
+
+
+# (rows, sha256 of repr(_sink_rows(...))) per sink after batches 0-5
+# of _seeded_batches(), recorded from the batch that wrote its sinks
+# one after another and cached its near-dup screen's relations
+_SEEDED_SINK_DIGESTS = {
+    "out": (72, "6a5aa8a790200129b5c7fefd45cbb94d4b40ad2db56c50659cf27d06ad0c3ea7"),
+    "state": (72, "0ae5875fa39ba49bd45a3a290b75a6cb57441515aa7337554fa5caf87b927e73"),
+    "lsh": (2304, "66e9effea340781fe9e60e004415225cf249bff381dfa90a8dbe9f6c2e1f2e1d"),
+    "sketch": (12, "28b2e708e2aeeeb184f647deb260e36879ea6db27a120ce315c0f57cce572180"),
+}
+
+
+def test_curate_stream_seeded_sinks_unchanged(spark, seeded_stream):
+    """Every sink of a seeded six-batch stream holds exactly the rows
+    the sequential batch wrote, so overlapping the batch's actions and
+    dropping the screen's persists changed no sink content."""
+    import hashlib
+    got = {}
+    for d in _SEEDED_DIRS.values():
+        rows = _sink_rows(spark, seeded_stream["base"] / d)
+        got[d] = (len(rows), hashlib.sha256(repr(rows).encode()).hexdigest())
+    assert got == _SEEDED_SINK_DIGESTS
+
+
+def test_curate_stream_leaves_session_conf_alone(seeded_stream):
+    """Dynamic partition overwrite is a per-write option: the batch
+    never sets the session's partitionOverwriteMode, which every other
+    query on the session would otherwise see while the batch runs."""
+    assert "spark.sql.sources.partitionOverwriteMode" not in seeded_stream["conf_keys"]
+
+
+def test_curate_stream_registers_no_operator_persists(seeded_stream):
+    """Six batches without a release_operator_caches() leave the
+    operator-persist registry as they found it: a long-running stream
+    holds no cached relation of any earlier batch."""
+    before, after = seeded_stream["persisted"]
+    assert after == before
+
+
+def test_curate_stream_failed_sink_fails_batch_and_replay_converges(
+        spark, tmp_path, seeded_stream, monkeypatch):
+    """An LSH index write that raises in batch 2 fails the stream while
+    the other sinks of that batch run to completion.  A rerun from the
+    same checkpoint replays batch 2, and after batch 3 every sink
+    equals the clean run's batches 0-3 row for row."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    fail = []
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        if fail and path.rstrip("/").endswith("/lsh"):
+            raise RuntimeError("injected lsh sink failure")
+        return orig(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    batches = _seeded_batches()
+    _run_seeded(spark, tmp_path, batches[:2])
+    fail.append(True)
+    with pytest.raises(StreamingQueryException, match="injected lsh sink failure"):
+        _run_seeded(spark, tmp_path, batches[2:3], first=2)
+    fail.clear()
+    _curate_seeded(spark, tmp_path)  # replays batch 2
+    _run_seeded(spark, tmp_path, batches[3:4], first=3)
+    for d in _SEEDED_DIRS.values():
+        assert (_sink_rows(spark, tmp_path / d)
+                == _sink_rows(spark, seeded_stream["base"] / d, max_batch=3)), d
 
 
 # ---------------------------------------------------------------------------

@@ -244,30 +244,41 @@ def test_connected_components_one_action_per_round(spark):
 # each derived sink's write and of the whole batch.  Measured + 1; the
 # derived sinks are built from the read-back out partition, so a revert
 # to writing them from the screened plan (16-28 jobs a sink) fails.
-# Measured at local[4]: state 2, lsh 1, sketch 2, batch 34 (36 when
-# curate dedups the batch a second time).
+# Measured at local[4]: state 2, lsh 1, sketch 2, batch 27 (34 while the
+# near-dup screen persisted its band and candidate relations and the
+# exact screen anti-joined fingerprints and semi-joined back by id).
 STREAM_SINK_JOB_CEILING = {"state": 3, "lsh": 2, "sketch": 3}
-STREAM_BATCH_JOB_CEILING = 35
+STREAM_BATCH_JOB_CEILING = 28
 
 
 def test_curate_stream_batch_job_ceiling(spark, tmp_path, monkeypatch):
-    """Counted as ``numTotalJobs`` deltas: foreachBatch runs on the
-    stream thread, which does not carry the caller's job group."""
+    """Each sink write runs under its own job group, set inside the
+    writer on the thread that runs the write: the derived sinks write
+    concurrently, so a global job-counter delta would count the other
+    sinks' jobs too.  The batch total is a ``numTotalJobs`` delta over
+    the whole stream run."""
     import pandas as pd
     from pyspark.sql.readwriter import DataFrameWriter
     from vaex_spark import streaming as st
 
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    sinks: dict = {}
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    groups: dict = {}
     orig = DataFrameWriter.parquet
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
 
     def parquet(self, path, *a, **kw):
-        j0 = dag.numTotalJobs()
+        d = path.rstrip("/").rsplit("/", 1)[-1]
+        group = f"sink-{d}-{uuid.uuid4().hex[:8]}"
+        groups.setdefault(d, []).append(group)
+        saved = {k: sc.getLocalProperty(k) for k in keys}
+        sc.setJobGroup(group, f"{d} sink write")
         try:
             return orig(self, path, *a, **kw)
         finally:
-            d = path.rstrip("/").rsplit("/", 1)[-1]
-            sinks[d] = sinks.get(d, 0) + dag.numTotalJobs() - j0
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     texts = ["the quick brown fox jumps over the lazy dog again and again "
@@ -287,10 +298,14 @@ def test_curate_stream_batch_job_ceiling(spark, tmp_path, monkeypatch):
     pd.DataFrame({"doc_id": range(100, 110), "source": "s",
                   "text": [texts[0].upper(), texts[1].replace("lazy", "sleepy")]
                   + texts[12:20]}).to_parquet(src / "b1.parquet")
-    sinks.clear()
+    groups.clear()
     j0 = dag.numTotalJobs()
     st.curate_stream(st.open_stream(str(src), spark=spark), **common)
     total = dag.numTotalJobs() - j0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    sinks = {d: sum(len(tracker.getJobIdsForGroup(g)) for g in gs)
+             for d, gs in groups.items()}
     assert spark.read.parquet(common["out_dir"]).count() == 20
     over = {d: (sinks.get(d), c) for d, c in STREAM_SINK_JOB_CEILING.items()
             if not 0 < sinks.get(d, 0) <= c}

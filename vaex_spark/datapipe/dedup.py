@@ -1055,24 +1055,36 @@ def exact_dedup_incremental(new_df, seen_df, text_col: str = "text",
                 f"{bool(_im['normalize'])} but the screen was called "
                 f"with normalize={bool(normalize)}: the fingerprints "
                 f"cannot match — pass the table's setting (or rebuild)")
-        seen_fp = ssdf.select("__fp").distinct()
+        seen_fp = ssdf.select("__fp")
     else:
-        seen_fp = ssdf.select(fp.alias("__fp")).distinct()
-    keyed = nsdf.select(fp.alias("__fp"), F.col(id_col))
+        seen_fp = ssdf.select(fp.alias("__fp"))
     if bloom is not None and _bloom_plan_loses(nsdf, ssdf,
                                                bloom_min_corpus_ratio):
         bloom = None  # CONFIRMED corpus-too-small; unknown stats keep
         # the supplied bloom (the caller already paid its build scan)
     if bloom is not None:
+        keyed = nsdf.select(fp.alias("__fp"), F.col(id_col))
         maybe_flag = bloom_might_contain(bloom, F.col("__fp"), nsdf.sparkSession)
         maybe_fps = keyed.filter(maybe_flag).select("__fp").distinct()
-        dup_fps = seen_fp.join(F.broadcast(maybe_fps), on="__fp", how="left_semi")
+        dup_fps = seen_fp.distinct().join(F.broadcast(maybe_fps), on="__fp",
+                                          how="left_semi")
         fresh_ids = (keyed.join(F.broadcast(dup_fps), on="__fp", how="left_anti")
                      .select(id_col))
+        fresh = nsdf.join(fresh_ids, on=id_col, how="left_semi")
     else:
-        fresh_ids = (keyed.join(seen_fp, on="__fp", how="left_anti")
-                     .select(id_col))
-    fresh = nsdf.join(fresh_ids, on=id_col, how="left_semi")
+        # one anti-join of the rows themselves: an anti-join ignores
+        # duplicates on its right side, so the seen fingerprints need
+        # no distinct and the rows no semi-join back by id.  The
+        # fingerprint rides under a name none of the caller's columns
+        # has; null-id rows go, as the bloom path's id semi-join drops
+        # them.
+        tmp = "__fp"
+        while tmp in nsdf.columns:
+            tmp = "_" + tmp
+        fresh = (nsdf.filter(F.col(id_col).isNotNull()).withColumn(tmp, fp)
+                 .join(seen_fp.withColumnRenamed("__fp", tmp), on=tmp,
+                       how="left_anti")
+                 .drop(tmp))
     return exact_dedup(_wrap(fresh), text_col=text_col, id_col=id_col,
                        normalize=normalize, keep=keep)
 
@@ -1286,13 +1298,18 @@ def near_dup_against_corpus(batch, corpus, text_col: str = "text",
     re-hashed on every batch.
     """
     bsdf = _spread(_sdf(batch).select(F.col(id_col), F.col(text_col)))
-    csdf = _spread(_sdf(corpus).select(F.col(id_col), F.col(text_col)))
+    csdf = _sdf(corpus).select(F.col(id_col), F.col(text_col))
 
     def band_table(sdf):  # stats-gated fast path, Column-form-identical
         return _banded_auto(sdf, id_col, text_col,
                             num_perm, num_bands, shingle_k)
 
-    bb = _register_persist(band_table(bsdf))
+    # no persists: a cached relation plans as its own nested AQE query
+    # and would run the batch's whole upstream screen a second time
+    # beside the main plan.  Uncached, AQE's exchange reuse shares cand
+    # across its three uses (its rows are a deterministic set), and the
+    # call leaves nothing cached behind.
+    bb = band_table(bsdf)
     if corpus_index is not None:
         cix = _sdf(corpus_index)
         # validate the index's parameter stamp (corpus_lsh_index
@@ -1316,21 +1333,23 @@ def near_dup_against_corpus(batch, corpus, text_col: str = "text",
                     f"parameters (or rebuild the index)")
         cb = cix.select(F.col(id_col), "band", "bucket")
     else:
+        # spread only when the corpus is minhashed here; with an index
+        # it is just semi-joined below to fetch candidate texts
+        csdf = _spread(csdf)
         cb = band_table(csdf)
-    cand = _register_persist(
-        bb.alias("b").join(cb.alias("c"),
-                           on=[F.col("b.band") == F.col("c.band"),
-                               F.col("b.bucket") == F.col("c.bucket")])
-        .select(F.col(f"b.{id_col}").alias("__bid"),
-                F.col(f"c.{id_col}").alias("__cid"))
-        .distinct())
+    cand = (bb.alias("b").join(cb.alias("c"),
+                               on=[F.col("b.band") == F.col("c.band"),
+                                   F.col("b.bucket") == F.col("c.bucket")])
+            .select(F.col(f"b.{id_col}").alias("__bid"),
+                    F.col(f"c.{id_col}").alias("__cid"))
+            .distinct())
     sets = lambda sdf, idc: sdf.select(  # noqa: E731
         F.col(id_col).alias(idc),
         F.array_distinct(shingles(text_col, k=shingle_k)).alias(f"__s_{idc}"))\
         .select(idc, f"__s_{idc}", F.size(f"__s_{idc}").alias(f"__n_{idc}"))
     # no .distinct() on the semi-join probe sides (r14, the q35 lesson
     # applied here too): left_semi dedups by construction, so the
-    # projection of the persisted cand relation probes directly — one
+    # projection of the cand relation probes directly — one
     # aggregate exchange fewer per side at every scale
     bsets = sets(bsdf.join(cand.select(F.col("__bid").alias(id_col)),
                            on=id_col, how="left_semi"), "__bid")

@@ -13,6 +13,8 @@ swapping in kafka/kinesis sources is a config change.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column
 from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import SparkSession
@@ -257,6 +259,24 @@ def run_foreach_batch(stream_sdf: SparkDataFrame, fn, checkpoint: str,
     return q
 
 
+def _concurrently(spark, fns) -> list:
+    """Run the zero-argument callables on one thread each and return
+    their results in order.  Each thread carries the calling thread's
+    Spark local properties and tags (job group, description, the
+    stream's query ids).  Every call runs to completion before the
+    first error, in call order, is re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=max(1, len(fns))) as pool:
+        # wrapped one by one: each wrap clones the properties, so no two
+        # threads set job groups or execution ids on one shared object
+        futures = [pool.submit(inheritable_thread_target(spark)(fn))
+                   for fn in fns]
+    return [f.result() for f in futures]
+
+
 def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
                   text_col: str = "text", id_col: str = "doc_id",
                   sketch_dir: str | None = None,
@@ -307,6 +327,25 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
     curate's default ``dedup="exact"`` (and no ``pack_tokens``) the
     within-batch exact dedup runs once, in the screen, not again inside
     curate.
+
+    Actions that do not depend on each other overlap.  The prior dirs
+    the screens read are opened together (each open is a
+    schema-inference job), and the derived-sink writes run together
+    once the out write has landed, each on its own thread carrying the
+    stream's Spark local properties.  This is safe because every write
+    is a per-batch idempotent overwrite of its own dir's
+    ``__batch_id=N`` partition and reads only the out partition, which
+    is complete before any of them starts.  The batch waits for every
+    write and re-raises the first error, so a failed sink fails the
+    batch; the checkpoint then replays it, the replay rewrites every
+    partition of that batch in place, and the sinks converge to a
+    clean run's contents.  Overwrite mode is dynamic per write, so the
+    session's ``partitionOverwriteMode`` is never touched.  The screens
+    hold no ``persist``: each cached relation would plan as its own
+    nested query and re-run the screens upstream of it, while uncached
+    plans share their repeated subtrees through AQE's exchange reuse,
+    and a long-running stream leaves nothing in
+    ``vaex_spark.cache``'s operator-persist registry.
 
     ``fuzzy_lsh_dir`` additionally enables CROSS-batch NEAR-dup dedup:
     each batch's survivors are checked against every earlier batch's
@@ -407,8 +446,12 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
             return spark.read.parquet(d).filter(F.col("__batch_id") < bid)
 
         def write(sdf, d):
+            # dynamic overwrite per write, never via the session conf:
+            # only this batch's partition is replaced, and other queries
+            # on the session keep their own overwrite mode
             (sdf.withColumn("__batch_id", F.lit(bid))
-             .write.mode("overwrite").partitionBy("__batch_id").parquet(d))
+             .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+             .partitionBy("__batch_id").parquet(d))
 
         if compact_every and bid > 0 and bid % int(compact_every) == 0:
             for d in (out_dir, state_dir, fuzzy_lsh_dir, winnow_index_dir,
@@ -417,28 +460,39 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
                 # would be a no-op anyway
                 if d is not None and _Fs(spark, d).listdir():
                     compact_index_dir(spark, d)
+        # each open infers the dir's schema (one job) and keeps the
+        # parameter stamps the screens check, so open them together
+        dirs = {k_: d for k_, d in (("state", state_dir), ("lsh", fuzzy_lsh_dir),
+                                    ("winnow", winnow_index_dir),
+                                    ("vector", vector_index_dir))
+                if d is not None and has_parts(d)}
+        if "lsh" in dirs:
+            dirs["out"] = out_dir
+        priors = dict(zip(dirs, _concurrently(
+            spark, [functools.partial(prior, d) for d in dirs.values()])))
+
         fresh = curate(VDF(bdf), text_col=text_col, id_col=id_col, **kw)
-        if has_parts(state_dir):
-            fresh = D.exact_dedup_incremental(fresh, VDF(prior(state_dir)),
+        if "state" in priors:
+            fresh = D.exact_dedup_incremental(fresh, VDF(priors["state"]),
                                               text_col=text_col, id_col=id_col)
         else:
             fresh = D.exact_dedup(fresh, text_col=text_col, id_col=id_col)
         fp = {**dict(shingle_k=5, num_perm=64, num_bands=32),
               **(fuzzy_params or {})}
-        if fuzzy_lsh_dir is not None and has_parts(fuzzy_lsh_dir):
+        if "lsh" in priors:
             fresh = D.near_dup_against_corpus(
-                fresh, VDF(prior(out_dir)), text_col=text_col, id_col=id_col,
+                fresh, VDF(priors["out"]), text_col=text_col, id_col=id_col,
                 threshold=float(fuzzy_threshold),
-                corpus_index=VDF(prior(fuzzy_lsh_dir)), **fp)
+                corpus_index=VDF(priors["lsh"]), **fp)
         if winnow_index_dir is not None:
             from ..datapipe import text as T
             wp = {**dict(k=5, window=4, fp_type="hash", max_df=256),
                   **(winnow_params or {})}
-            if has_parts(winnow_index_dir):
+            if "winnow" in priors:
                 fresh = T.winnow_dedup_against_corpus(
                     fresh, text_col=text_col, id_col=id_col,
                     min_shared=int(winnow_min_shared),
-                    corpus_index=prior(winnow_index_dir), **wp)
+                    corpus_index=priors["winnow"], **wp)
         if vector_index_dir is not None:
             from ..datapipe import similarity as SIM
             if vec_col not in fresh._spark_df().columns:
@@ -447,66 +501,59 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
                     f"{vec_col!r}; columns: {fresh._spark_df().columns}")
             vp = {**dict(bits=6, n_tables=8, seed=42),
                   **(vector_params or {})}
-            if has_parts(vector_index_dir):
+            if "vector" in priors:
                 fresh = SIM.embedding_dedup_against_corpus(
                     fresh, vec_col=vec_col, id_col=id_col,
                     threshold=float(vector_threshold),
-                    corpus_index=prior(vector_index_dir), **vp)
+                    corpus_index=priors["vector"], **vp)
         fsdf = fresh._spark_df()
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                                   "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            write(fsdf, out_dir)
-            # the derived sinks read back the partition just written
-            # instead of re-running the screened plan once per sink; the
-            # explicit schema skips the footer-inference job.  A batch
-            # that emitted nothing has no partition, and neither do its
-            # derived sinks.
-            part = f"__batch_id={bid}"
-            if not _Fs(spark, out_dir).exists(part):
-                return
-            emitted = VDF(spark.read.schema(fsdf.schema)
-                          .parquet(out_dir.rstrip("/") + "/" + part))
-            write(D.corpus_fingerprints(emitted, text_col=text_col)
-                  ._spark_df(), state_dir)
-            if fuzzy_lsh_dir is not None:
-                write(D.corpus_lsh_index(emitted, text_col=text_col,
-                                         id_col=id_col, **fp)._spark_df(),
-                      fuzzy_lsh_dir)
-            if winnow_index_dir is not None:
-                wp = {**dict(k=5, window=4, fp_type="hash"),
+        write(fsdf, out_dir)
+        # the derived sinks read back the partition just written instead
+        # of re-running the screened plan once per sink; the explicit
+        # schema skips the footer-inference job.  A batch that emitted
+        # nothing has no partition, and neither do its derived sinks.
+        part = f"__batch_id={bid}"
+        if not _Fs(spark, out_dir).exists(part):
+            return
+        emitted = VDF(spark.read.schema(fsdf.schema)
+                      .parquet(out_dir.rstrip("/") + "/" + part))
+        sinks = [lambda: write(D.corpus_fingerprints(
+            emitted, text_col=text_col)._spark_df(), state_dir)]
+        if fuzzy_lsh_dir is not None:
+            sinks.append(lambda: write(D.corpus_lsh_index(
+                emitted, text_col=text_col, id_col=id_col, **fp)._spark_df(),
+                fuzzy_lsh_dir))
+        if winnow_index_dir is not None:
+            wbuild = {**dict(k=5, window=4, fp_type="hash"),
                       **{k_: v for k_, v in (winnow_params or {}).items()
                          if k_ in ("k", "window", "fp_type")}}
-                write(T.corpus_winnow_index(emitted, text_col=text_col,
-                                            id_col=id_col, **wp)._spark_df(),
-                      winnow_index_dir)
-            if vector_index_dir is not None:
-                # key-filter to the BUILD signature, mirroring the
-                # winnow branch above: a screen-only key in
-                # vector_params (strategy, round_to, max_dense_batch)
-                # is legal for the screen but would TypeError the
-                # index-build write AFTER the batch's output emission
-                # — wedging the stream on an argument error
-                vp = {**dict(bits=6, n_tables=8, seed=42),
+            sinks.append(lambda: write(T.corpus_winnow_index(
+                emitted, text_col=text_col, id_col=id_col, **wbuild)._spark_df(),
+                winnow_index_dir))
+        if vector_index_dir is not None:
+            # key-filter to the BUILD signature, mirroring the winnow
+            # branch above: a screen-only key in vector_params
+            # (strategy, round_to, max_dense_batch) is legal for the
+            # screen but would TypeError the index-build write AFTER the
+            # batch's output emission — wedging the stream on an
+            # argument error
+            vbuild = {**dict(bits=6, n_tables=8, seed=42),
                       **{k_: v for k_, v in (vector_params or {}).items()
                          if k_ in ("bits", "n_tables", "seed", "dim")}}
-                write(SIM.corpus_vector_index(emitted, vec_col=vec_col,
-                                              id_col=id_col, **vp),
-                      vector_index_dir)
-            if sketch_dir is not None:
-                # per-batch HLL sketch of the EMITTED documents: a
-                # few-KB mergeable state row per group, same
-                # idempotent-by-batch-id discipline as the other sinks.
-                # stream_cardinality() reads + unions the whole dir for
-                # running per-group distinct counts without rescanning
-                # any document batch.
-                from ..datapipe.sketches import distinct_sketch
-                write(distinct_sketch(emitted, text_col,
-                                      group_col=sketch_group)._spark_df(),
-                      sketch_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+            sinks.append(lambda: write(SIM.corpus_vector_index(
+                emitted, vec_col=vec_col, id_col=id_col, **vbuild),
+                vector_index_dir))
+        if sketch_dir is not None:
+            # per-batch HLL sketch of the EMITTED documents: a few-KB
+            # mergeable state row per group, same idempotent-by-batch-id
+            # discipline as the other sinks.  stream_cardinality() reads
+            # + unions the whole dir for running per-group distinct
+            # counts without rescanning any document batch.
+            from ..datapipe.sketches import distinct_sketch
+            sinks.append(lambda: write(distinct_sketch(
+                emitted, text_col, group_col=sketch_group)._spark_df(),
+                sketch_dir))
+        _concurrently(spark, sinks)
 
     return run_foreach_batch(stream_df, do_batch, checkpoint=checkpoint)
 
