@@ -634,7 +634,7 @@ def test_pack_chunk_partition_count_invariance(spark):
     """Pins the r14 scale-adaptive range-partition count: chunk
     packing's global cumsum (_before_local + _poff) must yield
     IDENTICAL bin/end_bin/offset at ANY partition count.  Forcing a
-    tiny advisory partition size makes _range_partition_count pick a
+    tiny advisory partition size makes range_partition_count pick a
     different (larger) n than the default run — outputs must match
     row for row."""
     import vaex_spark as vs
@@ -1622,8 +1622,8 @@ def test_supplied_bloom_survives_unknown_stats(spark):
     seen = vs.DataFrame(docs.spark.filter("doc_id % 3 != 0"))
     raw = docs.spark.filter("doc_id % 3 = 0")
     batch = vs.DataFrame(spark.createDataFrame(raw.rdd, raw.schema))
-    from vaex_spark.datapipe.dedup import _plan_size_bytes
-    assert _plan_size_bytes(batch.spark) is None  # stats truly unknown
+    from vaex_spark.plan import size_bytes
+    assert size_bytes(batch.spark) is None  # stats truly unknown
     bf = build_fingerprint_bloom(seen)
     out = exact_dedup_incremental(batch, seen, bloom=bf).spark
     plan = out._jdf.queryExecution().executedPlan().toString()

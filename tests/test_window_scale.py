@@ -184,10 +184,10 @@ def test_partition_count_none_on_unknown_stats(spark):
     into ~200k near-empty range partitions and trip the frame-depth
     guard on valid queries.  Unknown stats must fall back to the
     session's shuffle partitioning (None)."""
-    from vaex_spark.operators.window import _range_partition_count
+    from vaex_spark.plan import range_partition_count
     rdd = spark.sparkContext.parallelize([(i, float(i)) for i in range(100)])
     sdf = spark.createDataFrame(rdd, "i long, v double")
-    assert _range_partition_count(sdf) is None
+    assert range_partition_count(sdf) is None
 
 
 def test_partition_count_capped_after_join(spark):
@@ -195,13 +195,13 @@ def test_partition_count_capped_after_join(spark):
     overestimate); the derived partition count must stay within the
     parallelism-derived ceiling, never the old 200k blowup."""
     import vaex_spark as vs
-    from vaex_spark.operators.window import _range_partition_count
+    from vaex_spark.plan import range_partition_count
     a = vs.from_arrays(k=list(range(2000)), x=[float(i) for i in range(2000)],
                        spark=spark)
     b = vs.from_arrays(k=list(range(2000)), y=[float(i) for i in range(2000)],
                        spark=spark)
     joined = a.join(b, on="k")._spark_df()
-    n = _range_partition_count(joined)
+    n = range_partition_count(joined)
     cap = 16 * max(spark.sparkContext.defaultParallelism,
                    int(spark.conf.get("spark.sql.shuffle.partitions")))
     assert n is None or 1 <= n <= cap

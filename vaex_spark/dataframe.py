@@ -2857,6 +2857,17 @@ class _Projected(DataFrame):
         return out
 
 
+def _sdf(df) -> SparkDataFrame:
+    """The Spark plan behind a frame: a :class:`DataFrame` (or a
+    projection view) compiles its plan; a raw Spark DataFrame passes
+    through — the datapipe and operator entry points accept both."""
+    return df._spark_df() if isinstance(df, DataFrame) else df
+
+
+def _wrap(sdf: SparkDataFrame) -> DataFrame:
+    return DataFrame(sdf)
+
+
 class _Executor:
     """Delayed-statistics batcher (vaex execution.py:243-262 _pop_tasks /
     _merge): all scheduled aggregates run as ONE ``.agg(...)`` job."""

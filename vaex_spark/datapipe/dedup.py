@@ -27,16 +27,8 @@ from pyspark.sql import functions as F
 
 from .text import _let, fingerprint, shingles
 from ..cache import _register_persist
-
-
-def _sdf(df):
-    from ..dataframe import DataFrame
-    return df._spark_df() if isinstance(df, DataFrame) else df
-
-
-def _wrap(sdf):
-    from ..dataframe import DataFrame
-    return DataFrame(sdf)
+from ..dataframe import _sdf, _wrap
+from ..plan import parse_bytes, range_partition_count, size_bytes
 
 
 def _spread(sdf):
@@ -47,23 +39,15 @@ def _spread(sdf):
     scale (100 TB -> thousands of splits) this is a no-op, so the extra
     shuffle only ever touches small inputs.
 
-    The small-input check reads the optimizer's catalog size estimate
-    (driver-side metadata, no job, no plan->RDD conversion) and mirrors
+    The small-input check reads the plan's size estimate and mirrors
     the scan's split math: fewer than ``defaultParallelism`` splits of
-    ``maxPartitionBytes`` means under-partitioned, so spread.  Unknown
-    stats (sizeInBytes at the conservative max) leave the plan
-    untouched — at scale that is the correct default."""
+    ``maxPartitionBytes`` means under-partitioned, so spread."""
     spark = sdf.sparkSession
     target = spark.sparkContext.defaultParallelism
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    digits = "".join(ch for ch in str(raw) if ch.isdigit())
-    split = int(digits) if digits else (128 << 20)
-    try:
-        size = int(str(sdf._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes()))
-    except Exception:  # pragma: no cover - py4j surface change
-        return sdf
-    if size < target * split:
+    split = parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes",
+                                       "134217728"), 128 << 20)
+    size = size_bytes(sdf)
+    if size is not None and size < target * split:
         return sdf.repartition(target)
     return sdf
 
@@ -103,13 +87,8 @@ def exact_dedup(df, text_col: str = "text", id_col: str = "doc_id",
     qk = (F.col(quality_col) if isinstance(quality_col, str)
           else quality_col)
     if strategy == "auto":
-        spark = sdf.sparkSession
-        target = spark.sparkContext.defaultParallelism
-        try:
-            size = int(str(sdf._jdf.queryExecution().optimizedPlan()
-                           .stats().sizeInBytes()))
-        except Exception:  # pragma: no cover
-            size = None
+        target = sdf.sparkSession.sparkContext.defaultParallelism
+        size = size_bytes(sdf)
         strategy = ("minby" if size is not None and size < target * (64 << 20)
                     else "window")
     if strategy == "minby":
@@ -335,8 +314,7 @@ def _banded_auto(sdf, id_col, text_col, num_perm, num_bands, shingle_k):
       steady-state at 100k docs, and the gap is CPU-bound so it holds
       at 100 TB where the interpreted form's per-(gram × perm) lambda
       dispatch dominates)."""
-    from ..operators.window import _range_partition_count
-    if (_range_partition_count(sdf) or 2) <= 1:
+    if (range_partition_count(sdf) or 2) <= 1:
         # whole band table as ONE parsed SQL expression (r14 opt:
         # shingles + signature + bands as Columns cost ~0.25 s of py4j
         # HOF-lambda construction per plan build; same tree)
@@ -448,12 +426,19 @@ def _verified_jaccard(pairs, sets_df, id_col: str, threshold: float):
               .filter(_size_ratio_ok(F.col("na.__n"), F.col("nb.__n"),
                                      threshold))
               .select("id_a", "id_b"))
+    return _jaccard_join(pruned, sets_df, id_col, threshold)
+
+
+def _jaccard_join(pairs, sets_df, id_col: str, threshold: float):
+    """Verify join: bring both sides' (__set, __n) to each candidate
+    pair, score the exact Jaccard rounded to 6 decimals, keep pairs at
+    or above ``threshold``.  Returns (id_a, id_b, jaccard)."""
     a, b = sets_df.alias("a"), sets_df.alias("b")
     jac = F.round(_union_jaccard(F.col("a.__n"), F.col("b.__n"),
                                  F.col("a.__set"), F.col("b.__set")), 6)
-    return (pruned
-            .join(a, pruned["id_a"] == F.col(f"a.{id_col}"))
-            .join(b, pruned["id_b"] == F.col(f"b.{id_col}"))
+    return (pairs
+            .join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
+            .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
             .select("id_a", "id_b", jac.alias("jaccard"))
             .filter(F.col("jaccard") >= threshold))
 
@@ -567,14 +552,7 @@ def near_dup_pairs(df, text_col: str = "text", id_col: str = "doc_id",
     # opposite of the simhash path, whose loose hamming blocking leaves
     # 81% of candidates size-prunable.  Flipped-order isolated ABAB at
     # sf0.1: structural 1.33 s vs this form ~0.97 s on q35.
-    a, b = sets_df.alias("a"), sets_df.alias("b")
-    jac = F.round(_union_jaccard(F.col("a.__n"), F.col("b.__n"),
-                                 F.col("a.__set"), F.col("b.__set")), 6)
-    return (pairs
-            .join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
-            .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
-            .select("id_a", "id_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
+    return _jaccard_join(pairs, sets_df, id_col, threshold)
 
 
 def minhash_lsh_dedup(df, text_col: str = "text", id_col: str = "doc_id",
@@ -941,22 +919,6 @@ def contamination(docs, probes, k: int = 8, text_col: str = "text",
     return out
 
 
-def _plan_size_bytes(sdf) -> "int | None":
-    """Catalyst's size estimate for a frame, or None when the catalog
-    doesn't know (the defaultSizeInBytes sentinel / join products —
-    same rejection rule as operators/window.py:_range_partition_count)."""
-    try:
-        size = int(str(sdf._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes()))
-        default_size = int(sdf.sparkSession.conf.get(
-            "spark.sql.defaultSizeInBytes", str(2 ** 63 - 1)))
-    except Exception:  # pragma: no cover - py4j surface change
-        return None
-    if size <= 0 or size >= default_size:
-        return None
-    return size
-
-
 def _bloom_plan_wins(nsdf, ssdf, min_corpus_ratio: float) -> bool:
     """The crossover decision: True when Catalyst's size stats say the
     corpus is at least ``min_corpus_ratio`` × the batch (both stats
@@ -966,7 +928,7 @@ def _bloom_plan_wins(nsdf, ssdf, min_corpus_ratio: float) -> bool:
     corpus scan on a guess."""
     if min_corpus_ratio <= 0:
         return True
-    corpus_b, batch_b = _plan_size_bytes(ssdf), _plan_size_bytes(nsdf)
+    corpus_b, batch_b = size_bytes(ssdf), size_bytes(nsdf)
     return (corpus_b is not None and batch_b is not None
             and corpus_b >= min_corpus_ratio * max(batch_b, 1))
 
@@ -981,7 +943,7 @@ def _bloom_plan_loses(nsdf, ssdf, min_corpus_ratio: float) -> bool:
     default from the build gate above."""
     if min_corpus_ratio <= 0:
         return False
-    corpus_b, batch_b = _plan_size_bytes(ssdf), _plan_size_bytes(nsdf)
+    corpus_b, batch_b = size_bytes(ssdf), size_bytes(nsdf)
     return (corpus_b is not None and batch_b is not None
             and corpus_b < min_corpus_ratio * max(batch_b, 1))
 
@@ -1186,7 +1148,7 @@ def _estimate_rows(sdf) -> "int | None":
     bound either way — callers must tolerate both directions (a Bloom
     capacity overestimate wastes broadcast-sized bitmap bytes, an
     underestimate raises fpp but never breaks correctness)."""
-    size = _plan_size_bytes(sdf)
+    size = size_bytes(sdf)
     if size is None:
         return None
     return max(1, size // 16)

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..plan import parse_bytes, size_bytes
+
 __all__ = ["mix_budget", "cap_per_group", "stratified_sample"]
 
 
@@ -181,10 +183,8 @@ def stratified_sample(df, frac: float, group_col: str = "source",
     # per-group rank is a single cheap task anyway — the boundary-bucket
     # machinery (bucket histogram + broadcast + 2-branch union) would be
     # pure job-floor overhead.  Selection is identical either way.
-    from ..datapipe.dedup import _plan_size_bytes
-    from ..operators.window import _parse_bytes
-    size = _plan_size_bytes(sdf)
-    advisory = _parse_bytes(sdf.sparkSession.conf.get(
+    size = size_bytes(sdf)
+    advisory = parse_bytes(sdf.sparkSession.conf.get(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"), 64 << 20)
     if size is not None and size <= advisory:
         counts = (sdf.groupBy(group_col)

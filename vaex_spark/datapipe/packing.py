@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..plan import range_partition_count
+
 __all__ = ["pack_sequences"]
 
 
@@ -79,8 +81,7 @@ def pack_sequences(df, length_col: str, max_tokens: int,
         # for unique order keys, so bin/end_bin/offset are identical at
         # any n; only nextfit's bin ids depend on the layout, which is
         # why that branch keeps its pinned constant.
-        from ..operators.window import _range_partition_count
-        n_range = _range_partition_count(base)
+        n_range = range_partition_count(base)
         part = (base.repartitionByRange(n_range, "_ok") if n_range
                 else base.repartitionByRange("_ok")) \
             .withColumn("_pid", F.spark_partition_id())

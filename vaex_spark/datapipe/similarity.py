@@ -25,10 +25,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame as SparkDataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _sdf(df):
-    from ..dataframe import DataFrame
-    return df._spark_df() if isinstance(df, DataFrame) else df
+from ..dataframe import _sdf
+from ..plan import range_partition_count, size_bytes
 
 
 def _drop_null_vecs(sdf, vec_col):
@@ -480,24 +478,27 @@ def _bucket_long(sdf, id_col, vec_col, dim, bits, n_tables, seed,
     return out.withColumnRenamed("__vec", vec_col) if carry_vec else out
 
 
+def _column_form_fits(sdf, dim, bits, n_tables) -> bool:
+    """The bucket builders' stats gate: True keeps the zero-overhead
+    Column form when the frame is one advisory partition AND under
+    ~500k estimated interpreted plane-coords (rows × n_tables × bits ×
+    dim — the Column form's real cost, ~0.8 µs per coord measured, see
+    :func:`_bucket_packed`); False dispatches to the Arrow BLAS form,
+    whose fixed hop is the bounded downside."""
+    size = size_bytes(sdf)
+    if size is None or range_partition_count(sdf) != 1:
+        return False
+    est_rows = size / max(8 * int(dim), 1)
+    return est_rows * int(n_tables) * int(bits) * int(dim) <= 500_000
+
+
 def _bucket_auto(sdf, id_col, vec_col, dim, bits, n_tables, seed,
                  carry_vec=False):
-    """Stats gate: one advisory partition AND under ~500k estimated
-    interpreted plane-coords (rows × n_tables × bits × dim — the
-    Column form's real cost; the same work-aware bound
-    :func:`_bucket_packed` documents, ~0.8 µs per coord measured)
-    keeps the zero-overhead Column form; otherwise the Arrow BLAS
-    form.  ``carry_vec`` keeps the vector column in the output (for
-    consumers that score candidates in place, lsh_topk)."""
-    from ..operators.window import _range_partition_count
+    """:func:`_column_form_fits` picks the Column form or the Arrow
+    BLAS form.  ``carry_vec`` keeps the vector column in the output
+    (for consumers that score candidates in place, lsh_topk)."""
     _check_lsh_params(bits, n_tables)
-    try:
-        est_rows = int(str(sdf._jdf.queryExecution().optimizedPlan()
-                           .stats().sizeInBytes())) / max(8 * int(dim), 1)
-    except Exception:  # pragma: no cover - py4j surface change
-        est_rows = float("inf")
-    est_coords = est_rows * int(n_tables) * int(bits) * int(dim)
-    if (_range_partition_count(sdf) or 2) <= 1 and est_coords <= 500_000:
+    if _column_form_fits(sdf, dim, bits, n_tables):
         from ..colname import quote_name
         buckets = F.expr("array(" + ", ".join(
             _hyperplane_bucket_sql(quote_name(vec_col),
@@ -808,9 +809,8 @@ def _bucket_packed(sdf, id_col, vec_col, dim, bits, n_tables, seed):
     (24 tables × 2 bits) × dim 64 ≈ 4.9M plane-coords the Column form
     measured 3.8–4.8 s vs Arrow's 0.43–0.54 s on the same input.  The
     gate now takes Column only when the frame is BOTH one advisory
-    partition AND under ~500k estimated plane-coords (rows estimated
-    from Catalyst size stats; unknown stats read as huge and dispatch
-    to Arrow, whose floor is the bounded downside).  Arrow unit values
+    partition AND under ~500k estimated plane-coords
+    (:func:`_column_form_fits`).  Arrow unit values
     agree with Column up to sum-order associativity in the norm — ~1
     ulp, the same FP caveat _bucket_long documents for sign flips.
     NULL
@@ -826,7 +826,6 @@ def _bucket_packed(sdf, id_col, vec_col, dim, bits, n_tables, seed):
     would die in np.stack with a shapeless error — a ragged embedding
     column or a wrong-model batch must never become silently-missed
     duplicates."""
-    from ..operators.window import _range_partition_count
     _check_lsh_params(bits, n_tables)
     sdf = _drop_null_vecs(sdf, vec_col)
     _msg = (f"_bucket_packed: {vec_col} length != dim={int(dim)} "
@@ -836,13 +835,7 @@ def _bucket_packed(sdf, id_col, vec_col, dim, bits, n_tables, seed):
     sdf = sdf.withColumn(vec_col, F.when(bad, F.raise_error(
         F.concat(F.lit(_msg), F.size(F.col(vec_col)).cast("string")))
     ).otherwise(F.col(vec_col)))
-    try:
-        est_rows = int(str(sdf._jdf.queryExecution().optimizedPlan()
-                           .stats().sizeInBytes())) / max(8 * int(dim), 1)
-    except Exception:  # pragma: no cover - py4j surface change
-        est_rows = float("inf")
-    est_coords = est_rows * int(n_tables) * int(bits) * int(dim)
-    if (_range_partition_count(sdf) or 2) <= 1 and est_coords <= 500_000:
+    if _column_form_fits(sdf, dim, bits, n_tables):
         from ..colname import quote_name
         buckets = F.expr("array(" + ", ".join(
             _hyperplane_bucket_sql(quote_name(vec_col),

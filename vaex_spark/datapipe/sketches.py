@@ -24,20 +24,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..dataframe import _sdf, _wrap
+
 __all__ = ["distinct_sketch", "merge_sketch_tables", "estimate_distinct",
            "quantile_sketch", "merge_quantile_tables", "estimate_quantiles",
            "theta_sketch", "theta_set_estimates"]
 
 _SKETCH = "__hll"
-
-
-def _sdf(df):
-    return df._spark_df() if hasattr(df, "_spark_df") else df
-
-
-def _wrap(sdf):
-    from ..dataframe import DataFrame
-    return DataFrame(sdf)
 
 
 def distinct_sketch(df, key_col: str, group_col=None, lgk: int = 12):

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..plan import range_partition_count
+
 
 def _c(x) -> Column:
     from ..expression import Expression
@@ -428,8 +430,7 @@ def winnow_fingerprints(df, text_col: str = "text", id_col: str = "doc_id",
         # core count and the plan stays zero-exchange (unknown stats
         # also skip the spread — never shuffle a possibly-huge corpus
         # for parallelism it already has).
-        from ..operators.window import _range_partition_count
-        nparts = _range_partition_count(sdf)
+        nparts = range_partition_count(sdf)
         par = sdf.sparkSession.sparkContext.defaultParallelism
         if nparts is not None and 0 < nparts < par:
             sdf = sdf.repartition(par)

@@ -16,9 +16,10 @@ Reference semantics replicated (SURVEY §2.4):
 
 Scale strategy: vaex assumes the right side fits an in-memory hash index
 (join.py docstring); the honest Spark analogue is a **broadcast hash
-join**, which we hint when the right side is estimable-small.  Larger
-sides fall back to Catalyst's sort-merge with AQE skew splitting —
-strictly more scalable than the reference.
+join**, which Spark plans itself when the right side is small
+(``autoBroadcastJoinThreshold``, re-checked by AQE on the real shuffle
+size).  Larger sides fall back to Catalyst's sort-merge with AQE skew
+splitting — strictly more scalable than the reference.
 """
 
 from __future__ import annotations
@@ -28,18 +29,9 @@ import logging
 from pyspark.sql import functions as F
 
 from .rowid import ROW_ID, with_row_id
+from ..plan import range_partition_count
 
 _LOG = logging.getLogger(__name__)
-
-BROADCAST_LIMIT_BYTES = 64 * 1024 * 1024  # force-broadcast only clearly-small sides
-
-
-def _size_hint_bytes(sdf) -> int | None:
-    try:
-        plan = sdf._jdf.queryExecution().optimizedPlan()
-        return int(plan.stats().sizeInBytes().toString())
-    except Exception:
-        return None
 
 
 def join(left, right, on=None, how="left", left_on=None, right_on=None,
@@ -98,10 +90,6 @@ def join(left, right, on=None, how="left", left_on=None, right_on=None,
         for c in list(lsdf.columns):
             if c != left_on and (c in set(rsdf.columns)):
                 lsdf = lsdf.withColumnRenamed(c, f"{lprefix}{c}{lsuffix}")
-
-    size = _size_hint_bytes(rsdf)
-    if size is not None and size <= BROADCAST_LIMIT_BYTES:
-        rsdf = F.broadcast(rsdf)
 
     if left_on == right_on:
         out = lsdf.join(rsdf, on=left_on, how=how)
@@ -238,9 +226,8 @@ def join_asof(left, right, on, by=None, direction="backward", tolerance=None,
     oncol = F.col(on).cast("double") if not is_ts else F.unix_micros(F.col(on)) / 1e6
 
     if by_cols and split_hot_keys == "auto":
-        from .window import _range_partition_count
         split_hot_keys = False
-        if (_range_partition_count(merged) or 1) > 1:
+        if (range_partition_count(merged) or 1) > 1:
             mx, tot = _sampled_hot_key_share(merged, by_cols)
             par = merged.sparkSession.sparkContext.defaultParallelism
             if tot and mx * max(1, par) > tot:
@@ -253,8 +240,7 @@ def join_asof(left, right, on, by=None, direction="backward", tolerance=None,
     if by_cols and not split_hot_keys:
         part = [F.col(c) for c in by_cols]
     else:
-        from .window import _range_partition_count
-        n_parts = _range_partition_count(merged)
+        n_parts = range_partition_count(merged)
         bounds = None
         if n_parts is not None and n_parts > 1 and want_buckets:
             bounds = merged.agg(F.min(oncol).alias("lo"),

@@ -32,6 +32,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from ..plan import parse_bytes, size_bytes
+
 _CAP_CONF = "vaex_spark.percentile.maxSingleTaskBytes"
 _CAP_DEFAULT = 256 << 20
 
@@ -46,30 +48,17 @@ def _single_task_budget(sdf) -> int:
     try:
         return int(raw)
     except ValueError:
-        from .window import _parse_bytes
-        return _parse_bytes(raw, _CAP_DEFAULT)
+        return parse_bytes(raw, _CAP_DEFAULT)
 
 
 def stats_exceed_single_task_budget(sdf) -> bool:
     """True when catalog size stats say the projected value column is
     too big for F.percentile's single final merge task.  Unknown stats
-    (Catalyst substitutes defaultSizeInBytes = Long.MaxValue) read as
-    'not known to be huge': the bench/oracle path must not silently
-    change shape on estimation noise — the distributed path is for
-    relations whose scan stats actually say they are large."""
-    try:
-        size = int(str(sdf._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes()))
-    except Exception:  # pragma: no cover - py4j surface change
-        return False
-    try:
-        default_size = int(sdf.sparkSession.conf.get(
-            "spark.sql.defaultSizeInBytes", str(2 ** 63 - 1)))
-    except Exception:  # pragma: no cover
-        default_size = 2 ** 63 - 1
-    if size <= 0 or size >= default_size:
-        return False
-    return size > _single_task_budget(sdf)
+    read as 'not known to be huge': the bench/oracle path must not
+    silently change shape on estimation noise — the distributed path
+    is for relations whose scan stats actually say they are large."""
+    size = size_bytes(sdf)
+    return size is not None and size > _single_task_budget(sdf)
 
 
 def percentiles_exact_distributed(sdf, col, fracs,

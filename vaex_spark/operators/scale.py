@@ -24,15 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import functions as F
 
-
-def _sdf(df):
-    from ..dataframe import DataFrame
-    return df._spark_df() if isinstance(df, DataFrame) else df
-
-
-def _wrap(sdf):
-    from ..dataframe import DataFrame
-    return DataFrame(sdf)
+from ..dataframe import _sdf, _wrap
 
 
 def _drop_table_and_orphaned_location(spark, table_name: str) -> None:

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from .rowid import ROW_ID, bounded_window, with_row_id
 from ..colname import qcol as _fcol  # shared non-identifier quoting
+from ..plan import range_partition_count
 
 
 _PID = "__pid"
@@ -115,75 +116,6 @@ def _pin_monotonic_exchange(aug, m: int):
         _PTAG, F.try_element_at(tag_arr,
                                 (F.col(_PID) + 1).cast("int")).cast("int"))
     return aug.repartition(m, F.col(_PTAG)), F.col(_PTAG)
-
-
-def _parse_bytes(raw, default: int) -> int:
-    s = str(raw).strip().lower().rstrip("b")
-    mult = 1
-    for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if s.endswith(suf):
-            s, mult = s[:-1], m
-            break
-    try:
-        return int(float(s) * mult)
-    except ValueError:
-        return default
-
-
-def _range_partition_count(sdf) -> int | None:
-    """Explicit partition count for the range exchange, from catalog
-    size stats: ceil(size / advisoryPartitionSize), capped.  Explicit-N
-    keeps every branch and the cached materialization on the SAME
-    partitioning (AQE cannot re-coalesce a cached subtree, so leaving N
-    implicit strands tiny frames on shuffle.partitions one-row
-    partitions where boundary donation cannot serve deep frames).  A
-    too-small estimate only costs parallelism — frames stay exact within
-    a partition; the too-large direction is caught by the donor
-    raise_error guard."""
-    try:
-        size = int(str(sdf._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes()))
-    except Exception:  # pragma: no cover - py4j surface change
-        return None
-    conf = sdf.sparkSession.conf
-    # Catalyst substitutes spark.sql.defaultSizeInBytes (Long.MaxValue
-    # unless tuned) for relations with unknown stats, and join stats are
-    # the PRODUCT of child sizes — so an implausibly large estimate means
-    # "unknown", not "huge".  Exploding it into advisory-sized partitions
-    # would create hundreds of thousands of near-empty range partitions
-    # and trip the donor frame-depth guard on perfectly valid queries;
-    # fall back to the session's shuffle.partitions instead.
-    try:
-        default_size = int(conf.get("spark.sql.defaultSizeInBytes",
-                                    str(2 ** 63 - 1)))
-    except Exception:  # pragma: no cover
-        default_size = 2 ** 63 - 1
-    if size <= 0 or size >= default_size:
-        return None
-    advisory = _parse_bytes(
-        conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"),
-        64 << 20)
-    # row-count-free ceiling: more range partitions than ~16× the
-    # cluster's parallelism buys a windowed op nothing and risks
-    # partitions thinner than the frame depth (the fail-loud direction);
-    # under-partitioning only costs parallelism — frames stay exact.
-    try:
-        shuffle_n = int(conf.get("spark.sql.shuffle.partitions", "200"))
-    except Exception:  # pragma: no cover
-        shuffle_n = 200
-    parallelism = sdf.sparkSession.sparkContext.defaultParallelism
-    cap = 16 * max(parallelism, shuffle_n)
-    n = -(-size // max(advisory, 1))
-    # Parallelism floor: a frame a little over the advisory size would
-    # otherwise land on 2-3 tasks and serialize the persist + window on
-    # an idle cluster (measured: 6.4M rows / 103MB -> n=2 -> 22s persist
-    # on 32 cores).  Extra range partitions only cost O(k x n) donor
-    # rows, so fill the cores — but never shrink partitions below ~8MB
-    # (and never inflate the single-advisory-partition fast path, whose
-    # n stays 1 because its useful-partition bound is 1 too).
-    n_useful = -(-size // (8 << 20))
-    n = max(n, min(parallelism, n_useful))
-    return max(1, min(n, cap))
 
 
 def _resolve_order(df, order_key):
@@ -329,7 +261,7 @@ def _exchange_window(sdf, order_cols, before: int, after: int,
     # frame every branch reads the same materialization; even on block
     # eviction the recompute re-fetches the SAME shuffle dependency
     # (bounds are fixed at stage materialization), so pids stay aligned.
-    n = _range_partition_count(sdf)
+    n = range_partition_count(sdf)
     if n == 1:
         # Catalyst's own size estimate says the frame fits ONE advisory-
         # sized partition: the single-task global window IS the intended
@@ -1001,7 +933,7 @@ def _global_rank_sdf(sdf, order_cols):
     additionally carries ``__gn`` (total rows) so callers can derive
     quantile buckets without a second aggregate.
     """
-    n = _range_partition_count(sdf)
+    n = range_partition_count(sdf)
     salt = F.xxhash64(*[F.col(c) for c in sdf.columns])
     if n == 1:
         # fits one advisory partition: the single-task window IS the
@@ -1089,7 +1021,7 @@ def ntile_exact(df, k, order_key, out_col="ntile"):
         keys = order_key if isinstance(order_key, (list, tuple)) else [order_key]
         sdf, order_cols = df, [F.col(c) for c in keys]
     k = int(k)
-    if _range_partition_count(sdf) == 1:
+    if range_partition_count(sdf) == 1:
         # fits one advisory partition: the single-task window IS the
         # intended plan, and native F.ntile is its cheapest form (one
         # window pass; the rank+count arithmetic would take two).  The
