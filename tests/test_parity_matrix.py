@@ -163,6 +163,14 @@ def test_binby_date_value(pdf):
         _check_ts("mean", g, float(w))
 
 
+def test_binby_date_axis_and_limits(pdf):
+    # a DATE binby axis: limits are epoch seconds of the midnights, and
+    # every row lands in a bin (before r14 each row fell in a null bin)
+    from vaex_spark.operators.binby import compute_limits
+    assert compute_limits(pdf, "d") == [DMU[0] / 1e6, DMU[-1] / 1e6]
+    assert pdf.count(binby="d", shape=4).tolist() == [2.0] * 4
+
+
 def test_rolling_date(pdf):
     out = pdf.rolling(3, column="d", order_key="i").mean()
     got = out.to_pandas_df().sort_values("i").d

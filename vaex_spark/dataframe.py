@@ -23,6 +23,8 @@ vaex implements manually (SURVEY §4 table).
 from __future__ import annotations
 
 import builtins
+import functools
+import inspect
 import json
 from collections import OrderedDict
 from typing import Any, Iterable
@@ -1373,11 +1375,10 @@ class DataFrame:
         'flexible' = union by name, missing columns null-filled."""
         sdf = self._spark_df()
         for other in others:
-            osdf = other._spark_df() if isinstance(other, DataFrame) else other
             if resolver == "flexible":
-                sdf = sdf.unionByName(osdf, allowMissingColumns=True)
+                sdf = sdf.unionByName(_sdf(other), allowMissingColumns=True)
             else:
-                sdf = sdf.unionByName(osdf)
+                sdf = sdf.unionByName(_sdf(other))
         return DataFrame(sdf)
 
     # ------------------------------------------------------------------
@@ -2866,6 +2867,39 @@ def _sdf(df) -> SparkDataFrame:
 
 def _wrap(sdf: SparkDataFrame) -> DataFrame:
     return DataFrame(sdf)
+
+
+def _like(df, sdf: SparkDataFrame):
+    """``sdf`` returned as the kind of frame ``df`` is (see
+    :func:`_same_kind`)."""
+    return DataFrame(sdf) if isinstance(df, DataFrame) else sdf
+
+
+def _same_kind(fn):
+    """The frame boundary of the datapipe and operator entry points.
+
+    Entry points accept a :class:`DataFrame` (or a projection view) or
+    a raw Spark DataFrame as their first argument.  The decorated body
+    always receives the Spark plan (:func:`_sdf`) and returns a Spark
+    DataFrame; the caller gets back the kind it passed in — a new
+    :class:`DataFrame` over the result for a vaex frame, the Spark
+    DataFrame itself otherwise.  Decorated siblings calling each other
+    therefore pass Spark frames and never unwrap again.  Entry points
+    with a fixed return kind end in :func:`_wrap` (always a vaex
+    frame) or return the Spark frame (always Spark); the few that must
+    read the vaex frame itself unwrap with :func:`_sdf` and rewrap
+    with :func:`_like`."""
+    first = next(iter(inspect.signature(fn).parameters))
+
+    @functools.wraps(fn)
+    def call(*args, **kwargs):
+        if args:
+            df, args = args[0], (_sdf(args[0]),) + args[1:]
+        else:
+            df = kwargs[first]
+            kwargs[first] = _sdf(df)
+        return _like(df, fn(*args, **kwargs))
+    return call
 
 
 class _Executor:

@@ -13,9 +13,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..dataframe import _same_kind, _sdf
+
 __all__ = ["curate"]
 
 
+@_same_kind
 def curate(df, text_col: str = "text", id_col: str = "doc_id",
            clean: bool = False,
            langs: list[str] | None = None,
@@ -37,32 +40,27 @@ def curate(df, text_col: str = "text", id_col: str = "doc_id",
          pairwise drop at ``near_threshold``)
       5. ``pack_tokens`` — concat-and-chunk sequence packing budget
     """
-    from ..dataframe import DataFrame
     from . import dedup as D
     from .packing import pack_sequences
     from .repetition import gopher_filter
     from .text import lang_id, quality_score, token_count_whitespace
 
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
     if clean:
         from .text import clean_text
-        sdf = sdf.withColumn(text_col, clean_text(F.col(text_col)))
+        df = df.withColumn(text_col, clean_text(F.col(text_col)))
     t = F.col(text_col)
 
     if langs is not None:
-        sdf = sdf.filter(lang_id(t).isin(list(langs)))
+        df = df.filter(lang_id(t).isin(list(langs)))
     if min_quality is not None:
-        sdf = sdf.filter(quality_score(t) >= float(min_quality))
+        df = df.filter(quality_score(t) >= float(min_quality))
     if repetition_filter:
-        sdf = gopher_filter(sdf, text_col=text_col, id_col=id_col)
+        df = gopher_filter(df, text_col=text_col, id_col=id_col)
     if dedup == "exact":
-        out = D.exact_dedup(sdf, text_col=text_col, id_col=id_col)
-        sdf = out._spark_df() if isinstance(out, DataFrame) else out
+        df = _sdf(D.exact_dedup(df, text_col=text_col, id_col=id_col))
     elif dedup == "minhash":
-        kept = D.minhash_lsh_dedup(sdf, text_col=text_col, id_col=id_col,
-                                   threshold=near_threshold)
-        sdf = kept._spark_df() if isinstance(kept, DataFrame) else kept
+        df = _sdf(D.minhash_lsh_dedup(df, text_col=text_col, id_col=id_col,
+                                      threshold=near_threshold))
     elif dedup is not None:
         raise ValueError(f"dedup={dedup!r} (exact|minhash|None)")
     if pack_tokens is not None:
@@ -73,13 +71,12 @@ def curate(df, text_col: str = "text", id_col: str = "doc_id",
         # and paid the join's exchanges on top.  Bin assignment is
         # unchanged (partition-count-invariant cumsum; carry never
         # feeds the range sampler).
-        sized = sdf.withColumn("__n_tok", token_count_whitespace(t))
-        others = [c for c in sdf.columns if c != id_col]
+        sized = df.withColumn("__n_tok", token_count_whitespace(t))
+        others = [c for c in df.columns if c != id_col]
         packed = pack_sequences(sized, "__n_tok", int(pack_tokens),
                                 id_col=id_col, order_key=id_col,
                                 carry=others)
-        packed = packed if not isinstance(packed, DataFrame) else packed._spark_df()
         # same output surface as the join form: id, document columns,
         # bin
-        sdf = packed.select(id_col, *others, "bin")
-    return DataFrame(sdf) if wrapped else sdf
+        df = packed.select(id_col, *others, "bin")
+    return df

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame as SparkDataFrame
 from pyspark.sql import functions as F
 
-from .text import _let, fingerprint, shingles
+from .text import _c, _let, _words, _words_sql, fingerprint, shingles
 from ..cache import _register_persist
 from ..dataframe import _sdf, _wrap
 from ..plan import parse_bytes, range_partition_count, size_bytes
@@ -178,7 +178,7 @@ def minhash_signature(text, num_perm: int = 64, shingle_k: int = 5,
         from .text import _shingles_sql
         return F.expr(_minhash_signature_sql(
             _shingles_sql(quote_name(text), shingle_k), num_perm))
-    sh = precomputed_shingles if precomputed_shingles is not None else shingles(_colify(text), k=shingle_k)
+    sh = precomputed_shingles if precomputed_shingles is not None else shingles(text, k=shingle_k)
     base = F.transform(sh, lambda s: F.xxhash64(s))
     return _let(base, lambda arr: F.when(
         arr.isNotNull(),
@@ -249,7 +249,7 @@ def _gram_hashes(sdf, id_col, text_col, shingle_k):
     # the Column form of this cost ~50 ms of plan build per call
     from ..colname import quote_name
     qn = quote_name(text_col)
-    words = f"split(trim(regexp_replace(lower({qn}), '\\\\s+', ' ')), ' ')"
+    words = _words_sql(qn)
     refs = ", ".join(f"try_element_at(wd, i + {j})"
                      for j in range(shingle_k))
     harr = (f"transform(sequence(1, greatest(size(wd) - "
@@ -586,8 +586,8 @@ def simhash(text, num_bits: int = 64) -> Column:
     every near-zero real hash.  A null simhash drops out of
     :func:`simhash_near_dups` naturally (null block keys never
     equi-join, null hamming never passes the filter)."""
-    t = _colify(text)
-    tokens = F.split(F.trim(F.regexp_replace(F.lower(t), r"\s+", " ")), " ")
+    t = _c(text)
+    tokens = _words(t)
     hashes = F.transform(tokens, lambda x: F.xxhash64(x))
 
     def _make_merge(b):
@@ -634,9 +634,7 @@ def _simhash_long(sdf, id_col, text_col, num_bits):
     qn = quote_name(text_col)
     toks = sdf.select(
         F.col(id_col),
-        F.explode(F.expr(
-            f"split(trim(regexp_replace(lower({qn}), '\\\\s+', ' ')), "
-            f"' ')")).alias("__t"))
+        F.explode(F.expr(_words_sql(qn))).alias("__t"))
     hashed = toks.select(id_col, F.xxhash64("__t").alias("__h"))
     # packed-lane vote sums (r15): one SUM per PAIR of bits instead of
     # one per bit.  SUM((__h >> k) & 0x0000000100000001) accumulates
@@ -879,12 +877,6 @@ def simhash_verified_pairs(df, text_col: str = "text", id_col: str = "doc_id",
         F.array_distinct(shingles(text_col, k=shingle_k)).alias("__set"))
         .select(F.col(id_col), "__set", F.size("__set").alias("__n")))
     return _verified_jaccard(pairs, sets_df, id_col, threshold)
-
-
-def _colify(x):
-    if isinstance(x, Column):
-        return x
-    return F.col(x)
 
 
 def contamination(docs, probes, k: int = 8, text_col: str = "text",
@@ -1352,7 +1344,7 @@ def duplicated_spans(df, text_col: str = "text", id_col: str = "doc_id",
     ~10^9 distinct spans per byte-identical semantics of the oracle.
     """
     sdf = _sdf(df)
-    words = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
+    words = _words(text_col)
     n = F.size(words)
     span_hashes = F.when(
         n >= width,
@@ -1403,7 +1395,7 @@ def strip_duplicated_spans(df, text_col: str = "text", id_col: str = "doc_id",
     the rebuild is one groupBy(id) sort-struct aggregate — token text
     shuffles exactly once, for the rebuild."""
     sdf = _sdf(df)
-    words = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
+    words = _words(text_col)
     n = F.size(words)
     span_hashes = F.when(
         n >= width,

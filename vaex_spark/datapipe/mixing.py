@@ -26,19 +26,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..dataframe import _same_kind
 from ..plan import parse_bytes, size_bytes
 
 __all__ = ["mix_budget", "cap_per_group", "stratified_sample"]
 
 
+@_same_kind
 def mix_budget(df, budgets: dict, group_col: str = "source",
                length_col: str = "n_chars", order_key: str = "doc_id",
                id_col: str = "doc_id", strategy: str = "exact",
                seed: int = 42):
     """Return the rows selected by the mix recipe (all input columns)."""
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
     if not budgets:
         raise ValueError("budgets must map group values to budgets")
     length = F.col(length_col).cast("double")
@@ -56,27 +55,28 @@ def mix_budget(df, budgets: dict, group_col: str = "source",
         w = (Window.partitionBy(group_col).orderBy(order_key)
              .rowsBetween(Window.unboundedPreceding, -1))
         before = F.coalesce(F.sum(length).over(w), F.lit(0.0))
-        out = (sdf.withColumn("__budget", budget_expr)
+        out = (df.withColumn("__budget", budget_expr)
                .filter(F.col("__budget").isNotNull())
                .withColumn("__before", before)
                .filter(F.col("__before") + length <= F.col("__budget"))
                .drop("__budget", "__before"))
     elif strategy == "hash":
-        totals = (sdf.groupBy(group_col)
+        totals = (df.groupBy(group_col)
                   .agg(F.sum(length).alias("__total")))
         frac = F.least(F.lit(1.0), F.col("__budget") / F.col("__total"))
         m = F.lit(1 << 30)
         key = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), m).cast("double") / m
-        out = (sdf.join(F.broadcast(totals), on=group_col)
+        out = (df.join(F.broadcast(totals), on=group_col)
                .withColumn("__budget", budget_expr)
                .filter(F.col("__budget").isNotNull())
                .filter(key < frac)
                .drop("__total", "__budget"))
     else:
         raise ValueError(f"strategy={strategy!r} (exact|hash)")
-    return DataFrame(out) if wrapped else out
+    return out
 
 
+@_same_kind
 def cap_per_group(df, cap: int, group_col: str = "source",
                   order_key=None, id_col: str = "doc_id", seed: int = 42):
     """Keep at most ``cap`` documents per group (RefinedWeb-style
@@ -97,9 +97,6 @@ def cap_per_group(df, cap: int, group_col: str = "source",
     reaches the exchange.  (Plan-audited in
     tests/test_datapipe.py::test_cap_per_group_plans_window_group_limit.)
     """
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
     from pyspark.sql import Window
     if order_key is None:
         order_cols = [F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col)]
@@ -108,11 +105,12 @@ def cap_per_group(df, cap: int, group_col: str = "source",
         order_cols = [F.col(k) if isinstance(k, str) else k for k in keys]
         order_cols.append(F.col(id_col))
     w = Window.partitionBy(F.col(group_col)).orderBy(*order_cols)
-    out = (sdf.withColumn("__rn", F.row_number().over(w))
+    out = (df.withColumn("__rn", F.row_number().over(w))
            .filter(F.col("__rn") <= int(cap)).drop("__rn"))
-    return DataFrame(out) if wrapped else out
+    return out
 
 
+@_same_kind
 def stratified_sample(df, frac: float, group_col: str = "source",
                       id_col: str = "doc_id", order_key=None,
                       seed: int = 42):
@@ -149,9 +147,6 @@ def stratified_sample(df, frac: float, group_col: str = "source",
     for hot-group corpora rank by a precomputed column and cap with
     cap_per_group instead.
     """
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
     from pyspark.sql import Window
     # EXACT ceil(frac*n): compute the cutoff in decimal, not double —
     # 0.07 as a double is 0.070000000000000007, so ceil(100 * 0.07)
@@ -167,14 +162,14 @@ def stratified_sample(df, frac: float, group_col: str = "source",
         keys = order_key if isinstance(order_key, (list, tuple)) else [order_key]
         order_cols = [F.col(k) if isinstance(k, str) else k for k in keys]
         order_cols.append(F.col(id_col))
-        counts = (sdf.groupBy(group_col)
+        counts = (df.groupBy(group_col)
                   .agg(F.count(F.lit(1)).alias("__gn")))
         w = Window.partitionBy(F.col(group_col)).orderBy(*order_cols)
-        out = (sdf.join(F.broadcast(counts), on=group_col)
+        out = (df.join(F.broadcast(counts), on=group_col)
                .withColumn("__rn", F.row_number().over(w))
                .filter(F.col("__rn") <= k_of(F.col("__gn")))
                .drop("__rn", "__gn"))
-        return DataFrame(out) if wrapped else out
+        return out
 
     h = F.md5(F.concat_ws("-", F.col(id_col).cast("string"),
                           F.lit(str(seed))))
@@ -183,19 +178,19 @@ def stratified_sample(df, frac: float, group_col: str = "source",
     # per-group rank is a single cheap task anyway — the boundary-bucket
     # machinery (bucket histogram + broadcast + 2-branch union) would be
     # pure job-floor overhead.  Selection is identical either way.
-    size = size_bytes(sdf)
-    advisory = parse_bytes(sdf.sparkSession.conf.get(
+    size = size_bytes(df)
+    advisory = parse_bytes(df.sparkSession.conf.get(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"), 64 << 20)
     if size is not None and size <= advisory:
-        counts = (sdf.groupBy(group_col)
+        counts = (df.groupBy(group_col)
                   .agg(F.count(F.lit(1)).alias("__gn")))
         w = Window.partitionBy(F.col(group_col)).orderBy(h, F.col(id_col))
-        out = (sdf.join(F.broadcast(counts), on=group_col)
+        out = (df.join(F.broadcast(counts), on=group_col)
                .withColumn("__rn", F.row_number().over(w))
                .filter(F.col("__rn") <= k_of(F.col("__gn")))
                .drop("__rn", "__gn"))
-        return DataFrame(out) if wrapped else out
-    hashed = sdf.withColumn("__h", h).withColumn(
+        return out
+    hashed = df.withColumn("__h", h).withColumn(
         "__hb", F.conv(F.substring(F.col("__h"), 1, 2), 16, 10).cast("int"))
     # (group, bucket) counts -> per-group cumulative; boundary = first
     # bucket whose cumsum reaches k.  All windows here run over the
@@ -230,4 +225,4 @@ def stratified_sample(df, frac: float, group_col: str = "source",
                  .drop("__rn"))
     helpers = ["__h", "__hb", "__bd_b", "__bd_below", "__bd_k"]
     out = keep_low.unionByName(keep_edge).drop(*helpers)
-    return DataFrame(out) if wrapped else out
+    return out

@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StringType, StructField, StructType,
 )
 
+from ..dataframe import _sdf
+
 IMAGE_SCHEMA = StructType([
     StructField("content", BinaryType()),
     StructField("uri", StringType()),
@@ -84,7 +86,7 @@ def image_features(df, image_col: str = "image", deterministic_fake: bool = True
     Output schema: input columns (minus the binary payload) + a fixed
     array<double> feature column — the shape every downstream op
     (dedup, ANN) consumes."""
-    sdf = df._spark_df() if hasattr(df, "_spark_df") else df
+    sdf = _sdf(df)
     out_fields = [f for f in sdf.schema.fields if f.name != image_col]
     out_schema = StructType(out_fields + [StructField("features", ArrayType(DoubleType()))])
     keep = [f.name for f in out_fields]
@@ -119,7 +121,7 @@ def resize_stub(df, image_col: str = "image", width: int = 64, height: int = 64)
     """Resize plumbing: passes metadata through, marks the operation.
     Real codec would rewrite `content`; the stub updates width/height
     metadata only (clearly-marked fake)."""
-    sdf = df._spark_df() if hasattr(df, "_spark_df") else df
+    sdf = _sdf(df)
     return (sdf
             .withColumn(image_col, F.struct(
                 F.col(f"{image_col}.content").alias("content"),
@@ -133,7 +135,7 @@ def frame_sample_stub(df, video_col: str = "video", every_ms: int = 1000) -> Spa
     """Frame sampling plumbing: emits (video_id, frame_index, ts_ms) rows
     via a generator expression on duration metadata; the decode of each
     frame is the stubbed step."""
-    sdf = df._spark_df() if hasattr(df, "_spark_df") else df
+    sdf = _sdf(df)
     n_frames = F.greatest(F.try_divide(F.col(f"{video_col}.duration_ms"), F.lit(every_ms)).cast("int"), F.lit(1))
     return (sdf.withColumn("frame_index", F.explode(F.sequence(F.lit(0), n_frames - 1)))
             .withColumn("frame_ts_ms", F.col("frame_index") * every_ms))
@@ -167,7 +169,7 @@ def audio_features(df, audio_col: str = "audio", deterministic_fake: bool = True
     pipeline.  The decode step is the clearly-marked stub; the feature
     math and the Spark plumbing (schema, batching, binary-stays-put
     shuffle discipline) are real."""
-    sdf = df._spark_df() if hasattr(df, "_spark_df") else df
+    sdf = _sdf(df)
     out_fields = [f for f in sdf.schema.fields if f.name != audio_col]
     out_schema = StructType(out_fields + [StructField("features", ArrayType(DoubleType()))])
     keep = [f.name for f in out_fields]

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..dataframe import _same_kind
 from ..plan import range_partition_count
 
 __all__ = ["pack_sequences"]
@@ -34,6 +35,7 @@ _PACK_INTERNAL = {"n_tokens", "_ok", "_pid", "_before_local", "_ptot",
                   "_poff", "_before", "bin", "end_bin", "offset"}
 
 
+@_same_kind
 def pack_sequences(df, length_col: str, max_tokens: int,
                    id_col: str = "doc_id", order_key: str | None = None,
                    strategy: str = "chunk", carry=None):
@@ -49,9 +51,6 @@ def pack_sequences(df, length_col: str, max_tokens: int,
     Bin/end_bin/offset are unchanged by carrying: the global cumsum is
     partition-count-invariant for unique order keys (pytest-pinned)
     and range boundaries are sampled from the KEY column only."""
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
     order_key = order_key or id_col
     n = F.col(length_col).cast("long")
     carry = list(carry or [])
@@ -66,9 +65,9 @@ def pack_sequences(df, length_col: str, max_tokens: int,
 
     if strategy == "chunk":
         from pyspark.sql import Window
-        base = sdf.select(F.col(id_col), n.alias("n_tokens"),
-                          F.col(order_key).alias("_ok"),
-                          *[F.col(c) for c in carry])
+        base = df.select(F.col(id_col), n.alias("n_tokens"),
+                         F.col(order_key).alias("_ok"),
+                         *[F.col(c) for c in carry])
         # global running sum: range-partitioned sort, not a single task —
         # repartitionByRange + per-partition cumsum + broadcast offsets.
         # The partition count is scale-adaptive (r14): Catalyst size
@@ -115,7 +114,7 @@ def pack_sequences(df, length_col: str, max_tokens: int,
         # size-adaptive count would make the output vary with cluster
         # stats.  Deterministic output wins here; see the chunk branch
         # for the scale-adaptive form.
-        base = (sdf.select(F.col(id_col), n.alias("n_tokens"), F.col(order_key).alias("_ok"))
+        base = (df.select(F.col(id_col), n.alias("n_tokens"), F.col(order_key).alias("_ok"))
                 .repartitionByRange(32, "_ok")
                 .withColumn("_pid", F.spark_partition_id()))
 
@@ -138,4 +137,4 @@ def pack_sequences(df, length_col: str, max_tokens: int,
                              F.col("local_bin")).alias("bin"))
     else:
         raise ValueError(f"strategy={strategy!r} (chunk|nextfit)")
-    return DataFrame(out) if wrapped else out
+    return out

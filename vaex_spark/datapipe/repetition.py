@@ -26,11 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .text import _let, _words, _words_sql
+from ..dataframe import _same_kind
+
 __all__ = ["word_ngrams", "repetition_stats", "gopher_filter"]
-
-
-def _norm_words(text: Column) -> Column:
-    return F.split(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")), " ")
 
 
 def _word_ngrams_sql(qn: str, n: int) -> str:
@@ -40,7 +39,7 @@ def _word_ngrams_sql(qn: str, n: int) -> str:
     cost is query latency at any scale, guide §5; same mechanism as
     text._shingles_sql)."""
     n = int(n)
-    words = f"split(trim(regexp_replace(lower({qn}), '\\\\s+', ' ')), ' ')"
+    words = _words_sql(qn)
     refs = ", ".join(f"try_element_at(wd, i + {1 + j})" for j in range(n))
     body = (f"CASE WHEN size(wd) < {n} THEN cast(array() as array<string>) "
             f"ELSE transform(sequence(0, size(wd) - {n}), "
@@ -63,8 +62,7 @@ def word_ngrams(text, n: int = 2) -> Column:
     if isinstance(text, str):
         from ..colname import quote_name
         return F.expr(_word_ngrams_sql(quote_name(text), n))
-    from .text import _let
-    words = _norm_words(text)
+    words = _words(text)
 
     def _body(wd):
         size = F.size(wd)
@@ -101,6 +99,7 @@ def _gram_stats(sdf, id_col: str, gram_sql: str, out_top: str, out_dup: str):
         f"_dupchars / _allchars as {quote_name(out_dup)}")
 
 
+@_same_kind
 def repetition_stats(df, text_col: str = "text", id_col: str = "doc_id",
                      top_n: int = 2, dup_n: int = 5):
     """Per-document repetition signals.
@@ -114,16 +113,13 @@ def repetition_stats(df, text_col: str = "text", id_col: str = "doc_id",
     compose a length/quality filter for that).
     """
     from ..colname import quote_name
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
     qid, qt = quote_name(id_col), quote_name(text_col)
 
     # one-parse SQL text throughout (r15): the Column form of these
     # stats measured ~1,280 py4j round-trips of plan build — driver
     # latency paid per query at any scale (guide §5); the strings
     # build the identical trees
-    line_counts = (sdf.selectExpr(
+    line_counts = (df.selectExpr(
         qid, f"explode(filter(split({qt}, '\\n'), x -> trim(x) != '')) as _l")
         .groupBy(id_col, "_l").agg(F.expr("count(1) as _cnt")))
     line_stats = line_counts.groupBy(id_col).agg(
@@ -134,20 +130,21 @@ def repetition_stats(df, text_col: str = "text", id_col: str = "doc_id",
 
     top_name = f"top{top_n}gram_char_frac"
     dup_name = f"dup{dup_n}gram_char_frac"
-    tops = _gram_stats(sdf, id_col, _word_ngrams_sql(qt, top_n),
+    tops = _gram_stats(df, id_col, _word_ngrams_sql(qt, top_n),
                        top_name, "_ignore_dup")
-    dups = _gram_stats(sdf, id_col, _word_ngrams_sql(qt, dup_n),
+    dups = _gram_stats(df, id_col, _word_ngrams_sql(qt, dup_n),
                        "_ignore_top", dup_name)
 
-    out = (sdf.select(F.col(id_col))
+    out = (df.select(F.col(id_col))
            .join(line_stats, on=id_col, how="left")
            .withColumn("n_lines",
                        F.coalesce(F.col("n_lines"), F.lit(0).cast("long")))
            .join(tops.select(id_col, top_name), on=id_col, how="left")
            .join(dups.select(id_col, dup_name), on=id_col, how="left"))
-    return DataFrame(out) if wrapped else out
+    return out
 
 
+@_same_kind
 def gopher_filter(df, text_col: str = "text", id_col: str = "doc_id",
                   max_dup_line_frac: float = 0.30,
                   max_dup_line_char_frac: float = 0.20,
@@ -156,15 +153,11 @@ def gopher_filter(df, text_col: str = "text", id_col: str = "doc_id",
     """Keep documents passing the Gopher repetition thresholds
     (defaults from the published rule set).  Returns the surviving rows
     of ``df`` (broadcast-free semi-join on the id)."""
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
-    stats = repetition_stats(sdf, text_col=text_col, id_col=id_col)
+    stats = repetition_stats(df, text_col=text_col, id_col=id_col)
     keep = stats.filter(
         (F.coalesce(F.col("dup_line_frac"), F.lit(0.0)) <= max_dup_line_frac)
         & (F.coalesce(F.col("dup_line_char_frac"), F.lit(0.0)) <= max_dup_line_char_frac)
         & (F.coalesce(F.col("top2gram_char_frac"), F.lit(0.0)) <= max_top2gram_char_frac)
         & (F.coalesce(F.col("dup5gram_char_frac"), F.lit(0.0)) <= max_dup5gram_char_frac)
     ).select(id_col)
-    out = sdf.join(keep, on=id_col, how="left_semi")
-    return DataFrame(out) if wrapped else out
+    return df.join(keep, on=id_col, how="left_semi")

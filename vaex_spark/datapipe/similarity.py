@@ -25,7 +25,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame as SparkDataFrame, Window
 from pyspark.sql import functions as F
 
-from ..dataframe import _sdf
+from ..dataframe import _same_kind, _sdf
 from ..plan import range_partition_count, size_bytes
 
 
@@ -996,8 +996,7 @@ def near_dup_embeddings_against_corpus(batch, corpus=None,
         first = bsdf.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
         dim = int(first[0]["d"]) if first else 0
     if corpus_index is not None:
-        cpk = (corpus_index._spark_df()
-               if hasattr(corpus_index, "_spark_df") else corpus_index)
+        cpk = _sdf(corpus_index)
         # Parameter check from the ARTIFACT's own metadata (round 10):
         # corpus_vector_index stamps (bits, n_tables, seed, dim) on
         # __buckets, so a screen called with a different seed (blocks
@@ -1144,6 +1143,7 @@ def near_dup_embeddings_against_corpus(batch, corpus=None,
             .filter(F.col("cos") >= float(threshold)))
 
 
+@_same_kind
 def embedding_dedup_against_corpus(batch, corpus=None,
                                    threshold: float = 0.95,
                                    bits: int = 6, n_tables: int = 8,
@@ -1158,17 +1158,13 @@ def embedding_dedup_against_corpus(batch, corpus=None,
     ``threshold`` — the keep-novel form of
     :func:`near_dup_embeddings_against_corpus` (one left-anti join on
     the flagged batch ids; batch rows returned unchanged)."""
-    from ..dataframe import DataFrame
-    wrapped = isinstance(batch, DataFrame)
-    bsdf = batch._spark_df() if wrapped else batch
     hits = near_dup_embeddings_against_corpus(
-        bsdf, corpus, threshold=threshold, bits=bits, n_tables=n_tables,
+        batch, corpus, threshold=threshold, bits=bits, n_tables=n_tables,
         dim=dim, vec_col=vec_col, id_col=id_col, seed=seed,
         round_to=round_to, corpus_index=corpus_index, strategy=strategy,
         max_dense_batch=max_dense_batch)
     flagged = hits.select(F.col("batch_id").alias(id_col)).distinct()
-    out = bsdf.join(flagged, on=id_col, how="left_anti")
-    return DataFrame(out) if wrapped else out
+    return batch.join(flagged, on=id_col, how="left_anti")
 
 
 # --------------------------------------------------------------------------
@@ -1297,8 +1293,7 @@ def _ivf_index_parts(corpus_index, id_col, vec_col):
     assigned corpus rows).  The centroid fetch is one bounded
     n_cells-row collect; the corpus side is column-pruned (the
     __centroid column is never read)."""
-    ipk = (corpus_index._spark_df()
-           if hasattr(corpus_index, "_spark_df") else corpus_index)
+    ipk = _sdf(corpus_index)
     crows = (ipk.filter(F.col("__centroid").isNotNull())
              .select("__cell", "__centroid").collect())
     if not crows:

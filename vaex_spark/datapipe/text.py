@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..dataframe import _same_kind, _sdf
 from ..plan import range_partition_count
 
 
@@ -34,6 +35,20 @@ def _let(col: Column, fn) -> Column:
     a single time — without this, an expensive subexpression referenced N
     times is inlined and recomputed N times by codegen."""
     return F.element_at(F.transform(F.array(col), fn), 1)
+
+
+def _words(text) -> Column:
+    """The word tokenizer every text operator shares: lowercase,
+    whitespace runs to one space, trim, split on the space.
+    :func:`_words_sql` builds the same tree from SQL text.  Persisted
+    LSH and winnow indexes hold hashes of these words, so both forms
+    must keep exactly this rule."""
+    return F.split(F.trim(F.regexp_replace(F.lower(_c(text)), r"\s+", " ")), " ")
+
+
+def _words_sql(qn: str) -> str:
+    """SQL text of :func:`_words` for a quoted column name."""
+    return f"split(trim(regexp_replace(lower({qn}), '\\\\s+', ' ')), ' ')"
 
 
 # --------------------------------------------------------------------------
@@ -199,7 +214,7 @@ def shingles(text, k: int = 5) -> Column:
         from ..colname import quote_name
         return F.expr(_shingles_sql(quote_name(text), k))
     t = _c(text)
-    words = F.split(F.trim(F.regexp_replace(F.lower(t), r"\s+", " ")), " ")
+    words = _words(t)
 
     def _body(wd):
         n = F.size(wd)
@@ -218,7 +233,7 @@ def _shingles_sql(qn: str, k: int) -> str:
     guard, let-bound words, n<k whole-text branch, k try_element_at
     references per gram), assembled with zero py4j round-trips."""
     k = int(k)
-    words = f"split(trim(regexp_replace(lower({qn}), '\\\\s+', ' ')), ' ')"
+    words = _words_sql(qn)
     refs = ", ".join(f"try_element_at(wd, i + {1 + j})" for j in range(k))
     body = (f"CASE WHEN size(wd) < {k} THEN array(array_join(wd, ' ')) "
             f"ELSE transform(sequence(0, greatest(size(wd) - {k}, 0)), "
@@ -315,7 +330,7 @@ def _winnow_fps_expr(text_col: str, k: int, window: int, gram: bool) -> Column:
         return (f"element_at(transform(array({val}), {var} -> {body}),"
                 f" 1)")
 
-    words = f"split(trim(regexp_replace(lower({qn}), '\\\\s+', ' ')), ' ')"
+    words = _words_sql(qn)
     refs = ", ".join(f"try_element_at(wd, i + {j})" for j in range(k))
     grams = (f"transform(sequence(1, greatest(size(wd) - {k - 1}, 1)), "
              f"i -> concat_ws(' ', {refs}))")
@@ -352,6 +367,7 @@ def _winnow_fps_expr(text_col: str, k: int, window: int, gram: bool) -> Column:
                   f"ELSE {empty} END")
 
 
+@_same_kind
 def winnow_fingerprints(df, text_col: str = "text", id_col: str = "doc_id",
                         k: int = 5, window: int = 4,
                         fp_type: str = "hash", strategy: str = "auto"):
@@ -402,15 +418,12 @@ def winnow_fingerprints(df, text_col: str = "text", id_col: str = "doc_id",
     upstream if your ids repeat.
     """
     from pyspark.sql import Window
-    from ..dataframe import DataFrame
     if fp_type not in ("hash", "gram"):
         raise ValueError(f"fp_type={fp_type!r}")
     if strategy not in ("auto", "window", "expr"):
         raise ValueError(f"strategy={strategy!r}")
     if int(k) < 1 or int(window) < 1:
         raise ValueError(f"k={k!r} and window={window!r} must be >= 1")
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
     if strategy == "auto":
         # the expr selection has STRICTLY fewer exchanges than the
         # window form at every scale (zero vs two) and measured faster
@@ -430,14 +443,13 @@ def winnow_fingerprints(df, text_col: str = "text", id_col: str = "doc_id",
         # core count and the plan stays zero-exchange (unknown stats
         # also skip the spread — never shuffle a possibly-huge corpus
         # for parallelism it already has).
-        nparts = range_partition_count(sdf)
-        par = sdf.sparkSession.sparkContext.defaultParallelism
+        nparts = range_partition_count(df)
+        par = df.sparkSession.sparkContext.defaultParallelism
         if nparts is not None and 0 < nparts < par:
-            sdf = sdf.repartition(par)
+            df = df.repartition(par)
         fps = _winnow_fps_expr(text_col, k, window,
                                gram=(fp_type == "gram"))
-        out = sdf.select(F.col(id_col), F.explode(fps).alias("fp"))
-        return DataFrame(out) if wrapped else out
+        return df.select(F.col(id_col), F.explode(fps).alias("fp"))
     # declarative twin: k-grams via arrays_zip of k shifted slices +
     # row-level concat_ws (NOT shingles()'s transform() over an
     # inlined split — the split would be recomputed per element),
@@ -445,14 +457,13 @@ def winnow_fingerprints(df, text_col: str = "text", id_col: str = "doc_id",
     # 1) makes short docs (n < k) emit exactly one zip row whose
     # missing slices pad to null, which concat_ws skips — the
     # whole-text gram, matching shingles()' n<k branch.
-    words = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)),
-                                            r"\s+", " ")), " ")
+    words = _words(text_col)
     n = F.size(words)
     ln = F.greatest(n - (k - 1), F.lit(1))
     z = F.arrays_zip(*[F.slice(words, j + 1, ln).alias(f"w{j}")
                        for j in range(k)])
-    grams = (sdf.select(F.col(id_col),
-                        F.posexplode(z).alias("__pos", "__t"))
+    grams = (df.select(F.col(id_col),
+                       F.posexplode(z).alias("__pos", "__t"))
              .select(id_col, "__pos",
                      F.concat_ws(" ", *[F.col(f"__t.w{j}")
                                         for j in range(k)]).alias("__g")))
@@ -463,9 +474,10 @@ def winnow_fingerprints(df, text_col: str = "text", id_col: str = "doc_id",
     out = (hashed.select(F.col(id_col),
                          F.min("__h").over(frame).alias("fp"))
            .distinct())
-    return DataFrame(out) if wrapped else out
+    return out
 
 
+@_same_kind
 def winnow_overlap_pairs(df, text_col: str = "text", id_col: str = "doc_id",
                          k: int = 5, window: int = 4, min_shared: int = 2,
                          fp_type: str = "hash", max_df: "int | None" = 256,
@@ -513,13 +525,10 @@ def winnow_overlap_pairs(df, text_col: str = "text", id_col: str = "doc_id",
     rather than materializing as one m²/2-element array row, which is
     the degradation you want when the caller explicitly asked to keep
     boilerplate matches."""
-    from ..dataframe import DataFrame
     from ..cache import _register_persist
-    wrapped = isinstance(df, DataFrame)
-    fps = winnow_fingerprints(df, text_col=text_col, id_col=id_col,
-                              k=k, window=window, fp_type=fp_type,
-                              strategy=strategy)
-    fsdf = fps._spark_df() if wrapped else fps
+    fsdf = winnow_fingerprints(df, text_col=text_col, id_col=id_col,
+                               k=k, window=window, fp_type=fp_type,
+                               strategy=strategy)
     if max_df is not None:
         ids = F.col("__ids")
         # array_distinct guards duplicate doc_id input rows (the expr
@@ -539,7 +548,7 @@ def winnow_overlap_pairs(df, text_col: str = "text", id_col: str = "doc_id",
         out = (pairs.groupBy("id_a", "id_b")
                .agg(F.count(F.lit(1)).alias("n_shared"))
                .filter(F.col("n_shared") >= int(min_shared)))
-        return DataFrame(out) if wrapped else out
+        return out
     fsdf = _register_persist(fsdf)
     ia, ib = f"a.{id_col}", f"b.{id_col}"
     out = (fsdf.alias("a")
@@ -549,7 +558,7 @@ def winnow_overlap_pairs(df, text_col: str = "text", id_col: str = "doc_id",
            .groupBy(F.col(ia).alias("id_a"), F.col(ib).alias("id_b"))
            .agg(F.count(F.lit(1)).alias("n_shared"))
            .filter(F.col("n_shared") >= int(min_shared)))
-    return DataFrame(out) if wrapped else out
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -615,6 +624,7 @@ def suggest_winnow_params(min_match_words: int, noise_words: int = 5,
     return out
 
 
+@_same_kind
 def corpus_winnow_index(corpus, text_col: str = "text",
                         id_col: str = "doc_id", k: int = 5, window: int = 4,
                         fp_type: str = "hash", strategy: str = "auto",
@@ -649,12 +659,9 @@ def corpus_winnow_index(corpus, text_col: str = "text",
     every existing index on disk already has.  An explicit opt-in
     keeps the fast path available without making correctness depend on
     how the caller's snapshots were written."""
-    fps = winnow_fingerprints(corpus, text_col=text_col, id_col=id_col,
-                              k=k, window=window, fp_type=fp_type,
-                              strategy=strategy)
-    from ..dataframe import DataFrame
-    wrapped = isinstance(fps, DataFrame)
-    fsdf = fps._spark_df() if wrapped else fps
+    fsdf = winnow_fingerprints(corpus, text_col=text_col, id_col=id_col,
+                               k=k, window=window, fp_type=fp_type,
+                               strategy=strategy)
     # The build parameters RIDE IN THE ARTIFACT as column metadata
     # (parquet footer, zero bytes per row) — the corpus_vector_index
     # stamp contract (round 10) applied family-wide: a screen called
@@ -665,13 +672,13 @@ def corpus_winnow_index(corpus, text_col: str = "text",
                                   "fp_type": str(fp_type)}}
     fsdf = fsdf.withMetadata("fp", meta)
     if not grouped:
-        return DataFrame(fsdf) if wrapped else fsdf
+        return fsdf
     out = (fsdf.groupBy("fp")
            .agg(F.array_sort(F.collect_list(id_col)).alias("__cids")))
-    out = out.withMetadata("fp", meta)
-    return DataFrame(out) if wrapped else out
+    return out.withMetadata("fp", meta)
 
 
+@_same_kind
 def winnow_overlap_against_corpus(batch, corpus=None, text_col: str = "text",
                                   id_col: str = "doc_id", k: int = 5,
                                   window: int = 4, min_shared: int = 2,
@@ -701,16 +708,12 @@ def winnow_overlap_against_corpus(batch, corpus=None, text_col: str = "text",
     Returns (batch_id, corpus_id, n_shared); compose downstream, or use
     :func:`winnow_dedup_against_corpus` for the keep-only-novel-rows
     form."""
-    from ..dataframe import DataFrame
-    wrapped = isinstance(batch, DataFrame)
-    bf = winnow_fingerprints(batch, text_col=text_col, id_col=id_col,
-                             k=k, window=window, fp_type=fp_type,
-                             strategy=strategy)
-    bfps = bf._spark_df() if isinstance(bf, DataFrame) else bf
+    bfps = winnow_fingerprints(batch, text_col=text_col, id_col=id_col,
+                               k=k, window=window, fp_type=fp_type,
+                               strategy=strategy)
     grp = None
     if corpus_index is not None:
-        cfps = (corpus_index._spark_df()
-                if isinstance(corpus_index, DataFrame) else corpus_index)
+        cfps = _sdf(corpus_index)
         # validate the index's parameter stamp (corpus_winnow_index
         # column metadata): a (k, window, fp_type) mismatch selects
         # DIFFERENT fingerprints and silently returns a near-empty
@@ -739,10 +742,9 @@ def winnow_overlap_against_corpus(batch, corpus=None, text_col: str = "text",
     else:
         if corpus is None:
             raise ValueError("pass corpus= or corpus_index=")
-        cf = winnow_fingerprints(corpus, text_col=text_col, id_col=id_col,
-                                 k=k, window=window, fp_type=fp_type,
-                                 strategy=strategy)
-        cfps = cf._spark_df() if isinstance(cf, DataFrame) else cf
+        cfps = _sdf(winnow_fingerprints(
+            corpus, text_col=text_col, id_col=id_col, k=k, window=window,
+            fp_type=fp_type, strategy=strategy))
     if grp is None:
         grp = (cfps.groupBy("fp")
                .agg(F.array_sort(F.collect_list(id_col)).alias("__cids")))
@@ -754,9 +756,10 @@ def winnow_overlap_against_corpus(batch, corpus=None, text_col: str = "text",
     out = (pairs.groupBy("batch_id", "corpus_id")
            .agg(F.count(F.lit(1)).alias("n_shared"))
            .filter(F.col("n_shared") >= int(min_shared)))
-    return DataFrame(out) if wrapped else out
+    return out
 
 
+@_same_kind
 def winnow_dedup_against_corpus(batch, corpus=None, text_col: str = "text",
                                 id_col: str = "doc_id", k: int = 5,
                                 window: int = 4, min_shared: int = 2,
@@ -770,32 +773,24 @@ def winnow_dedup_against_corpus(batch, corpus=None, text_col: str = "text",
     for run-overlap (plagiarism/contamination) instead of Jaccard.
     One left-anti join over :func:`winnow_overlap_against_corpus`'s
     flagged batch ids; returns the surviving batch rows unchanged."""
-    from ..dataframe import DataFrame
-    wrapped = isinstance(batch, DataFrame)
-    bsdf = batch._spark_df() if wrapped else batch
     hits = winnow_overlap_against_corpus(
-        bsdf, corpus, text_col=text_col, id_col=id_col, k=k, window=window,
+        batch, corpus, text_col=text_col, id_col=id_col, k=k, window=window,
         min_shared=min_shared, fp_type=fp_type, max_df=max_df,
         strategy=strategy, corpus_index=corpus_index)
     flagged = hits.select(F.col("batch_id").alias(id_col)).distinct()
-    out = bsdf.join(flagged, on=id_col, how="left_anti")
-    return DataFrame(out) if wrapped else out
+    return batch.join(flagged, on=id_col, how="left_anti")
 
 
+@_same_kind
 def with_text_stats(df, text_col: str = "text"):
-    """Attach token counts / quality / language columns (vaex_spark or
-    Spark DataFrame in, same type out)."""
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
+    """Attach token counts / quality / language columns."""
     t = F.col(text_col)
-    out = (sdf
-           .withColumn("n_tokens", token_count_whitespace(t))
-           .withColumn("n_tokens_bpe", token_count_bpe(t))
-           .withColumn("quality", quality_score(t))
-           .withColumn("lang_guess", lang_id(t))
-           .withColumn("fingerprint", fingerprint(t)))
-    return DataFrame(out) if wrapped else out
+    return (df
+            .withColumn("n_tokens", token_count_whitespace(t))
+            .withColumn("n_tokens_bpe", token_count_bpe(t))
+            .withColumn("quality", quality_score(t))
+            .withColumn("lang_guess", lang_id(t))
+            .withColumn("fingerprint", fingerprint(t)))
 
 
 # --------------------------------------------------------------------------
@@ -841,6 +836,7 @@ def with_pii_scrub(df, text_col: str = "text"):
 # --------------------------------------------------------------------------
 # corpus-statistics scoring (TF-IDF, unigram LM)
 # --------------------------------------------------------------------------
+@_same_kind
 def tf_idf_terms(df, text_col: str = "text", id_col: str = "doc_id",
                  k: int = 3):
     """Top-k characteristic terms per document by smoothed TF-IDF
@@ -854,13 +850,10 @@ def tf_idf_terms(df, text_col: str = "text", id_col: str = "doc_id",
     asc) so the output is engine-independent.
     """
     from pyspark.sql import Window
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
-    words = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
-    terms = (sdf.select(F.col(id_col), F.explode(words).alias("term"))
+    words = _words(text_col)
+    terms = (df.select(F.col(id_col), F.explode(words).alias("term"))
              .groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
-    n_docs = sdf.select(F.count(F.lit(1))).collect()[0][0]
+    n_docs = df.select(F.count(F.lit(1))).collect()[0][0]
     docfreq = (terms.groupBy("term")
                .agg(F.count(F.lit(1)).alias("df_count")))
     scored = (terms.join(F.broadcast(docfreq), on="term")
@@ -871,9 +864,10 @@ def tf_idf_terms(df, text_col: str = "text", id_col: str = "doc_id",
     out = (scored.withColumn("rank", F.row_number().over(w).cast("int"))
            .filter(F.col("rank") <= k)
            .select(id_col, "term", "tf", "df_count", "tfidf", "rank"))
-    return DataFrame(out) if wrapped else out
+    return out
 
 
+@_same_kind
 def unigram_logprob(df, text_col: str = "text", id_col: str = "doc_id"):
     """Per-document mean unigram log-probability under the corpus's own
     add-one-smoothed unigram model — the classic LM-based quality signal
@@ -885,11 +879,8 @@ def unigram_logprob(df, text_col: str = "text", id_col: str = "doc_id"):
     Per-term logs are rounded to 9 digits before the decimal-exact mean
     so cross-engine libm ULP differences cannot surface.
     """
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
-    words = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
-    toks = sdf.select(F.col(id_col), F.explode(words).alias("term"))
+    words = _words(text_col)
+    toks = df.select(F.col(id_col), F.explode(words).alias("term"))
     counts = toks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
     totals = counts.agg(F.sum("cnt").alias("total"),
                         F.count(F.lit(1)).alias("vocab")).collect()[0]
@@ -901,9 +892,10 @@ def unigram_logprob(df, text_col: str = "text", id_col: str = "doc_id"):
            .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
                 (F.sum(F.col("__lp").cast("decimal(28,9)")).cast("double") /
                  F.count(F.lit(1))).alias("mean_logprob")))
-    return DataFrame(out) if wrapped else out
+    return out
 
 
+@_same_kind
 def remove_boilerplate_lines(df, text_col: str = "text",
                              id_col: str = "doc_id",
                              min_docs: int = 2, normalize: bool = True):
@@ -922,14 +914,11 @@ def remove_boilerplate_lines(df, text_col: str = "text",
     boilerplate keep an empty string (document-level filtering is a
     separate, explicit step).
     """
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
     line = F.col("__line")
     norm = F.lower(F.trim(line)) if normalize else line
-    lines = (sdf.select(F.col(id_col),
-                        F.posexplode(F.split(F.col(text_col), "\n"))
-                        .alias("__pos", "__line"))
+    lines = (df.select(F.col(id_col),
+                       F.posexplode(F.split(F.col(text_col), "\n"))
+                       .alias("__pos", "__line"))
              .withColumn("__lh", F.xxhash64(norm)))
     boiler = (lines.groupBy("__lh")
               .agg(F.count_distinct(F.col(id_col)).alias("__nd"))
@@ -941,18 +930,13 @@ def remove_boilerplate_lines(df, text_col: str = "text",
                F.transform(F.array_sort(F.collect_list(F.struct("__pos", "__line"))),
                            lambda s: s["__line"]), "\n").alias(text_col)))
     # docs whose every line was boilerplate: restore as empty text
-    all_ids = sdf.select(F.col(id_col))
+    all_ids = df.select(F.col(id_col))
     out = (all_ids.join(out, on=id_col, how="left")
            .withColumn(text_col, F.coalesce(F.col(text_col), F.lit(""))))
-    return DataFrame(out) if wrapped else out
+    return out
 
 
-def _norm_words(text_col: str) -> Column:
-    """The shared tokenization: lowercase, whitespace-normalized,
-    single-space split (same convention as shingles/fingerprint)."""
-    return F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
-
-
+@_same_kind
 def chunk_documents(df, text_col: str = "text", id_col: str = "doc_id",
                     chunk_tokens: int = 32, stride: int = 24):
     """Split documents into overlapping token-window chunks (RAG
@@ -971,11 +955,8 @@ def chunk_documents(df, text_col: str = "text", id_col: str = "doc_id",
     -1 and the chunk-start ``sequence(0, -2, stride)`` raises an
     illegal-boundaries error mid-scan — found by the r8 null-smoke).
     """
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
-    base = (sdf.filter(F.col(text_col).isNotNull())
-            .select(F.col(id_col), _norm_words(text_col).alias("__w")))
+    base = (df.filter(F.col(text_col).isNotNull())
+            .select(F.col(id_col), _words(text_col).alias("__w")))
     out = (base
            .select(F.col(id_col), F.col("__w"),
                    F.posexplode(F.sequence(F.lit(0), F.size("__w") - 1,
@@ -990,7 +971,7 @@ def chunk_documents(df, text_col: str = "text", id_col: str = "doc_id",
                    F.array_join(F.slice(F.col("__w"), F.col("chunk_start") + 1,
                                         F.lit(chunk_tokens)), " ")
                    .alias("chunk_text")))
-    return DataFrame(out) if wrapped else out
+    return out
 
 
 def bigram_pmi(df, text_col: str = "text", min_count: int = 5):
@@ -1014,10 +995,9 @@ def bigram_pmi(df, text_col: str = "text", min_count: int = 5):
     """
     from ..cache import _register_persist
     from ..colname import quote_name
-    from ..dataframe import DataFrame
-    sdf = df._spark_df() if isinstance(df, DataFrame) else df
+    sdf = _sdf(df)
     qt = quote_name(text_col)
-    words = f"split(trim(regexp_replace(lower({qt}), '\\\\s+', ' ')), ' ')"
+    words = _words_sql(qt)
     # try_element_at: the i+1 ref runs off the end on the last token
     # (NULL = end-of-doc marker) and must stay NULL, not raise, under
     # ANSI-on sessions.  The outer NULL guard is load-bearing: without
@@ -1078,8 +1058,7 @@ def distribution_drift(df, value_col, group_col: str = "source",
     and engine-portable (same discipline as the dsum() oracle helpers).
     """
     from ..cache import _register_persist
-    from ..dataframe import DataFrame
-    sdf = df._spark_df() if isinstance(df, DataFrame) else df
+    sdf = _sdf(df)
     val = _c(value_col)
     binned = sdf.select(F.col(group_col).alias("grp"),
                         F.floor(val / F.lit(bucket_width)).alias("bucket"))
@@ -1140,18 +1119,16 @@ def clean_text(text) -> Column:
     return F.trim(t)
 
 
+@_same_kind
 def with_clean_text(df, text_col: str = "text", out_col: str | None = None):
     """Apply clean_text to a corpus column (in place by default)."""
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
-    out = sdf.withColumn(out_col or text_col, clean_text(F.col(text_col)))
-    return DataFrame(out) if wrapped else out
+    return df.withColumn(out_col or text_col, clean_text(F.col(text_col)))
 
 
+@_same_kind
 def build_vocab(df, text_col: str = "text", top_n: int = 1000):
     """Corpus vocabulary: the ``top_n`` most frequent tokens (shared
-    ``_norm_words`` tokenization) with 1-based frequency rank, count,
+    ``_words`` tokenization) with 1-based frequency rank, count,
     and corpus coverage fraction — the tokenizer-prep view of an LM
     pipeline ("what does a 32k vocab cover?").
 
@@ -1162,10 +1139,7 @@ def build_vocab(df, text_col: str = "text", top_n: int = 1000):
     vocabulary is deterministic across engines.  Coverage uses the
     EXACT total token count (same aggregate, no second scan of text).
     """
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
-    toks = sdf.select(F.explode(_norm_words(text_col)).alias("token"))
+    toks = df.select(F.explode(_words(text_col)).alias("token"))
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("count"))
     from ..cache import _register_persist
     counts = _register_persist(counts)  # read twice: total + top-N
@@ -1202,9 +1176,10 @@ def build_vocab(df, text_col: str = "text", top_n: int = 1000):
                        F.round(F.col("count") / F.col("__vocab_total"), 9))
            .select("rank", "token", F.col("count").cast("long").alias("count"),
                    "coverage"))
-    return DataFrame(top) if wrapped else top
+    return top
 
 
+@_same_kind
 def oov_rate(df, vocab, text_col: str = "text", group_col: str = "source"):
     """Per-group out-of-vocabulary token rate against a vocabulary
     table (``build_vocab`` output or any frame with a ``token``
@@ -1213,12 +1188,9 @@ def oov_rate(df, vocab, text_col: str = "text", group_col: str = "source"):
     Plan: explode to (group, token), LEFT JOIN the BROADCAST vocab
     (vocab tables are top-N-sized by construction), one grouped
     aggregate — token keys shuffle once, text never does."""
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
-    vsdf = vocab._spark_df() if hasattr(vocab, "_spark_df") else vocab
-    toks = sdf.select(F.col(group_col),
-                      F.explode(_norm_words(text_col)).alias("token"))
+    vsdf = _sdf(vocab)
+    toks = df.select(F.col(group_col),
+                     F.explode(_words(text_col)).alias("token"))
     marked = toks.join(F.broadcast(vsdf.select("token").distinct()
                                    .withColumn("__in", F.lit(1))),
                        on="token", how="left")
@@ -1228,9 +1200,10 @@ def oov_rate(df, vocab, text_col: str = "text", group_col: str = "source"):
                 .cast("long").alias("n_oov"))
            .withColumn("oov_rate", F.round(F.col("n_oov")
                                            / F.col("n_tokens"), 9)))
-    return DataFrame(out) if wrapped else out
+    return out
 
 
+@_same_kind
 def corpus_profile(df, text_col: str = "text", group_col: str = "source",
                    length_col: str = "n_chars", include_sketches: bool = False):
     """Per-group corpus health profile — the monitoring table a 100 TB
@@ -1244,9 +1217,6 @@ def corpus_profile(df, text_col: str = "text", group_col: str = "source",
     and a KLL length sketch (distribution merges) — turning each
     profile row into incremental state (see datapipe/sketches.py).
     """
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
     toks = token_count_whitespace(F.col(text_col))
     q = quality_score(F.col(text_col))
     aggs = [
@@ -1264,5 +1234,4 @@ def corpus_profile(df, text_col: str = "text", group_col: str = "source",
             fingerprint(F.col(text_col)), F.lit(12)).alias("__hll"))
         aggs.append(F.kll_sketch_agg_bigint(
             F.col(length_col).cast("bigint"), F.lit(200)).alias("__kll"))
-    out = sdf.groupBy(group_col).agg(*aggs)
-    return DataFrame(out) if wrapped else out
+    return df.groupBy(group_col).agg(*aggs)

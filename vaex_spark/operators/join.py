@@ -29,6 +29,7 @@ import logging
 from pyspark.sql import functions as F
 
 from .rowid import ROW_ID, with_row_id
+from ..dataframe import DataFrame, _sdf
 from ..plan import range_partition_count
 
 _LOG = logging.getLogger(__name__)
@@ -40,8 +41,6 @@ def join(left, right, on=None, how="left", left_on=None, right_on=None,
     precheck and raises on duplicates; True permits duplication without
     checking; None skips the check entirely (trust the caller — at 100 TB
     the guard is a full pre-scan of the right side's key column)."""
-    from ..dataframe import DataFrame
-
     if how == "right":
         return join(right, left, on=on, how="left",
                     left_on=right_on, right_on=left_on,
@@ -52,7 +51,7 @@ def join(left, right, on=None, how="left", left_on=None, right_on=None,
         raise ValueError(f"how={how!r} not supported (vaex parity: left/right/inner)")
 
     lsdf = left._spark_df()
-    rsdf = right._spark_df() if isinstance(right, DataFrame) else right
+    rsdf = _sdf(right)
 
     left_on = left_on or on
     right_on = right_on or on
@@ -198,12 +197,11 @@ def join_asof(left, right, on, by=None, direction="backward", tolerance=None,
     sample, or ``True`` when a hot key hides from the sample.
     """
     from pyspark.sql import Window
-    from ..dataframe import DataFrame
 
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction={direction!r}")
     lsdf = left._spark_df()
-    rsdf = right._spark_df() if isinstance(right, DataFrame) else right
+    rsdf = _sdf(right)
     by_cols = [by] if isinstance(by, str) else list(by or [])
 
     # the right side's ``on`` value is kept (suffixed) — unlike pandas,
@@ -378,10 +376,9 @@ def join_range(left, right, left_on, right_lo, right_hi, how="inner",
     either way, and the empty-tail guard otherwise costs a broadcast
     build plus one extra scan of the interval table per query.
     """
-    from ..dataframe import DataFrame
 
     lsdf = left._spark_df()
-    rsdf = right._spark_df() if isinstance(right, DataFrame) else right
+    rsdf = _sdf(right)
     lo, hi = F.col(right_lo), F.col(right_hi)
     val = F.col(left_on)
     contains = (val >= lo) & (val < hi) if closed == "left" else \
@@ -489,10 +486,9 @@ def join_intervals(left, right, left_lo, left_hi, right_lo, right_hi,
     a data-dependent filter empty, so at 100 TB the guard itself reads
     the corpus twice more.
     """
-    from ..dataframe import DataFrame
 
-    lsdf = left._spark_df() if isinstance(left, DataFrame) else left
-    rsdf = right._spark_df() if isinstance(right, DataFrame) else right
+    lsdf = _sdf(left)
+    rsdf = _sdf(right)
     for c in rsdf.columns:
         if c in lsdf.columns:
             rsdf = rsdf.withColumnRenamed(c, c + suffix)

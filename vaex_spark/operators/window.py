@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from .rowid import ROW_ID, bounded_window, with_row_id
 from ..colname import qcol as _fcol  # shared non-identifier quoting
+from ..dataframe import DataFrame, _like, _same_kind
 from ..plan import range_partition_count
 
 
@@ -127,6 +128,15 @@ def _resolve_order(df, order_key):
     sdf = df._spark_df()
     keys = order_key if isinstance(order_key, (list, tuple)) else [order_key]
     return sdf, [df._to_expr(k).col for k in keys]
+
+
+def _ordered(df, order_key):
+    """:func:`_resolve_order` for either frame kind: a raw Spark frame
+    has no virtual columns, so its keys are plain column names."""
+    if isinstance(df, DataFrame):
+        return _resolve_order(df, order_key)
+    keys = order_key if isinstance(order_key, (list, tuple)) else [order_key]
+    return df, [F.col(k) for k in keys]
 
 
 def _partitioned_window(df, order_key, partition_by):
@@ -360,7 +370,6 @@ def _exchange_window(sdf, order_cols, before: int, after: int,
 def _apply_windowed(df, order_key, partition_by, before, after, columns, make_col):
     """Shared driver for shift/diff/rolling: apply ``make_col(name, w)``
     per column over the right window shape, clean up helpers."""
-    from ..dataframe import DataFrame
     cols = [columns] if isinstance(columns, str) else (columns or df.get_column_names())
     if partition_by is not None:
         sdf, w = _partitioned_window(df, order_key, partition_by)
@@ -422,7 +431,6 @@ def shift(df, periods, column=None, fill_value=None, trim=False,
 
 def _unpack_trim(df, out, column, marker):
     """Filter rows whose source window was incomplete, unpack structs."""
-    from ..dataframe import DataFrame
     cols = [column] if isinstance(column, str) else (column or df.get_column_names())
     sdf = out._spark_df()
     keep = None
@@ -696,7 +704,6 @@ class Rolling:
             sdf = sdf.filter(keep)
         for c in cols:
             sdf = sdf.withColumn(c, _fcol(c).getField("v"))
-        from ..dataframe import DataFrame
         o = DataFrame(sdf)
         o.variables = dict(self.df.variables)
         return o
@@ -728,6 +735,7 @@ class Rolling:
         return self._apply(F.collect_list)
 
 
+@_same_kind
 def rolling_range(df, window_seconds, on, column=None, agg="mean",
                   partition_by=None, bucket_seconds=None):
     """Time-range rolling aggregate: for each row, aggregate ``column``
@@ -759,9 +767,6 @@ def rolling_range(df, window_seconds, on, column=None, agg="mean",
     bucket edges — O(density * window * n_buckets), independent of
     table size per bucket.
     """
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
     fns = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max,
            "count": F.count}
     fn = fns[agg]
@@ -774,7 +779,7 @@ def rolling_range(df, window_seconds, on, column=None, agg="mean",
     # VALUE column silently returned epoch-seconds doubles instead of
     # timestamps).  Timestamps compute over epoch micros; mean converts
     # back to timestamp below, sum stays the epoch-µs sum.
-    dtypes0 = dict(sdf.dtypes)
+    dtypes0 = dict(df.dtypes)
 
     def _is_ts(c):
         dt = dtypes0.get(c, "")
@@ -817,15 +822,15 @@ def rolling_range(df, window_seconds, on, column=None, agg="mean",
                  else [partition_by])
         w = Window.partitionBy(*[F.col(p) for p in parts]).orderBy(epoch)
     else:
-        bounds = sdf.agg(
+        bounds = df.agg(
             F.min(F.unix_timestamp(F.col(on))).alias("lo"),
             F.max(F.unix_timestamp(F.col(on))).alias("hi")).collect()[0]
         if bounds["hi"] is None or bounds["lo"] is None:
             # empty frame or all-null timestamps: no buckets to size.
             # Return the input with the output columns attached as
             # nulls (a window over no/null rows aggregates to null).
-            out = sdf
-            dtypes = dict(sdf.dtypes)
+            out = df
+            dtypes = dict(df.dtypes)
             for c in cols:
                 if agg == "count":
                     typ = "long"
@@ -834,13 +839,13 @@ def rolling_range(df, window_seconds, on, column=None, agg="mean",
                 elif agg == "mean":
                     typ = "timestamp" if _is_ts(c) else "double"
                 else:  # sum: ask the analyzer (long for ints, etc.)
-                    typ = sdf.select(F.sum(_src(c)).alias("__t")) \
+                    typ = df.select(F.sum(_src(c)).alias("__t")) \
                         .schema["__t"].dataType.simpleString()
                 out = out.withColumn(f"{c}_rolling_{agg}",
                                      F.lit(None).cast(typ))
-            return DataFrame(out) if wrapped else out
+            return out
         span = max(1, int(bounds["hi"]) - int(bounds["lo"]))
-        par = sdf.sparkSession.sparkContext.defaultParallelism
+        par = df.sparkSession.sparkContext.defaultParallelism
         # bucket_seconds overrides the auto size (still floored at
         # 2*window, the donation-exactness requirement) — results are
         # IDENTICAL for any valid S, which the scale probes exploit as
@@ -849,14 +854,14 @@ def rolling_range(df, window_seconds, on, column=None, agg="mean",
             else max(2 * win, span // max(1, 4 * par) + 1)
         ep = F.unix_timestamp(F.col(on))
         bkt = F.floor(ep / S).cast("long")
-        real = sdf.withColumn("__tbk", bkt).withColumn("__tdon", F.lit(False))
-        donors = (sdf.filter(ep >= (bkt + 1) * S - win)
+        real = df.withColumn("__tbk", bkt).withColumn("__tdon", F.lit(False))
+        donors = (df.filter(ep >= (bkt + 1) * S - win)
                   .withColumn("__tbk", bkt + 1)
                   .withColumn("__tdon", F.lit(True)))
-        sdf = real.unionByName(donors)
+        df = real.unionByName(donors)
         w = Window.partitionBy("__tbk").orderBy(epoch)
         global_bucketed = True
-    out = sdf
+    out = df
     if agg in ("sum", "mean", "count"):
         # same no-retraction trap as row frames: Spark's sliding RANGE
         # frame re-aggregates on every lower-bound move, O(rows-in-
@@ -882,9 +887,10 @@ def rolling_range(df, window_seconds, on, column=None, agg="mean",
             out = out.withColumn(f"{c}_rolling_{agg}", fn(F.col(c)).over(frame))
     if global_bucketed:
         out = out.filter(~F.col("__tdon")).drop("__tbk", "__tdon")
-    return DataFrame(out) if wrapped else out
+    return out
 
 
+@_same_kind
 def sessionize(df, ts_col, gap_seconds, by, session_col="session_idx"):
     """Batch sessionization (gaps-and-islands): within each ``by``
     partition ordered by ``ts_col``, a new session starts when the gap
@@ -893,9 +899,6 @@ def sessionize(df, ts_col, gap_seconds, by, session_col="session_idx"):
     streaming session_window aggregation — one shuffle on ``by``, two
     window passes (lag + running sum) over the same sort, no joins.
     """
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf = df._spark_df() if wrapped else df
     parts = by if isinstance(by, (list, tuple)) else [by]
     epoch = F.unix_timestamp(F.col(ts_col))
     w = Window.partitionBy(*[F.col(p) for p in parts]).orderBy(epoch)
@@ -904,10 +907,9 @@ def sessionize(df, ts_col, gap_seconds, by, session_col="session_idx"):
                          F.lit(1)).otherwise(F.lit(0))
     run = Window.partitionBy(*[F.col(p) for p in parts]).orderBy(epoch) \
                 .rowsBetween(Window.unboundedPreceding, 0)
-    out = (sdf.withColumn("__new", new_session)
-           .withColumn(session_col, (F.sum("__new").over(run) - 1).cast("long"))
-           .drop("__new"))
-    return DataFrame(out) if wrapped else out
+    return (df.withColumn("__new", new_session)
+            .withColumn(session_col, (F.sum("__new").over(run) - 1).cast("long"))
+            .drop("__new"))
 
 
 def _global_rank_sdf(sdf, order_cols):
@@ -990,15 +992,9 @@ def global_rank(df, order_key, out_col="rank"):
     form of ``row_number() OVER (ORDER BY ...)`` (reference:
     vaex virtual row numbers are scan-ordered; this is the sorted
     form).  See _global_rank_sdf for the scale design."""
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    sdf, order_cols = (_resolve_order(df, order_key) if wrapped
-                       else (df, [F.col(k) for k in (order_key if
-                             isinstance(order_key, (list, tuple))
-                             else [order_key])]))
-    out = _global_rank_sdf(sdf, order_cols) \
+    out = _global_rank_sdf(*_ordered(df, order_key)) \
         .withColumnRenamed("__grank", out_col).drop("__gn")
-    return DataFrame(out) if wrapped else out
+    return _like(df, out)
 
 
 def ntile_exact(df, k, order_key, out_col="ntile"):
@@ -1013,13 +1009,7 @@ def ntile_exact(df, k, order_key, out_col="ntile"):
     Bit-identical to ``F.ntile(k).over(Window.orderBy(...))`` at any N
     (including N < k), but every stage is parallel.
     """
-    from ..dataframe import DataFrame
-    wrapped = isinstance(df, DataFrame)
-    if wrapped:
-        sdf, order_cols = _resolve_order(df, order_key)
-    else:
-        keys = order_key if isinstance(order_key, (list, tuple)) else [order_key]
-        sdf, order_cols = df, [F.col(c) for c in keys]
+    sdf, order_cols = _ordered(df, order_key)
     k = int(k)
     if range_partition_count(sdf) == 1:
         # fits one advisory partition: the single-task window IS the
@@ -1029,8 +1019,7 @@ def ntile_exact(df, k, order_key, out_col="ntile"):
         # assignment consistent across the two plans.
         salt = F.xxhash64(*[F.col(c) for c in sdf.columns])
         w = bounded_window(*order_cols, salt)
-        out = sdf.withColumn(out_col, F.ntile(k).over(w))
-        return DataFrame(out) if wrapped else out
+        return _like(df, sdf.withColumn(out_col, F.ntile(k).over(w)))
     ranked = _global_rank_sdf(sdf, order_cols)
     r, n = F.col("__grank"), F.col("__gn")
     base, rem = F.floor(n / k), n % k
@@ -1038,6 +1027,5 @@ def ntile_exact(df, k, order_key, out_col="ntile"):
     tile = (F.when(base == 0, r)  # N < k: one row per tile
             .when(r <= head, F.floor((r - 1) / (base + 1)) + 1)
             .otherwise(rem + F.floor((r - head - 1) / base) + 1))
-    out = (ranked.withColumn(out_col, tile.cast("int"))
-           .drop("__grank", "__gn"))
-    return DataFrame(out) if wrapped else out
+    return _like(df, ranked.withColumn(out_col, tile.cast("int"))
+                 .drop("__grank", "__gn"))

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..dataframe import DataFrame
+from ..dataframe import DataFrame, _sdf
 from ..session import get_session
 
 
@@ -144,7 +144,7 @@ def stateful_map(df: DataFrame, keys: list[str], fn, output_schema,
     the escape hatch for operators with custom state machines
     (sessionization variants, CDC folding, online features).
     """
-    sdf = df._spark_df() if isinstance(df, DataFrame) else df
+    sdf = _sdf(df)
     if watermark is not None and time_col is not None:
         sdf = sdf.withWatermark(time_col, watermark)
     return (sdf.groupBy(*[F.col(k) for k in keys])
@@ -216,10 +216,7 @@ def stream_static_join(stream_df, static_df, on, how: str = "inner") -> SparkDat
     Streaming — the static side is re-read each batch, so catalog/delta
     dims pick up updates.  Returns a streaming Spark DataFrame ready
     for a run_* sink, like the other streaming transforms here."""
-    from ..dataframe import DataFrame as VDF
-    stream_sdf = stream_df._spark_df() if isinstance(stream_df, VDF) else stream_df
-    static_sdf = static_df._spark_df() if isinstance(static_df, VDF) else static_df
-    return stream_sdf.join(static_sdf, on=on, how=how)
+    return _sdf(stream_df).join(_sdf(static_df), on=on, how=how)
 
 
 def stream_stream_join(left, right, on,
@@ -231,11 +228,8 @@ def stream_stream_join(left, right, on,
     watermark horizon).  ``condition`` adds the event-time range
     predicate that lets Spark evict state (without it an inner join
     buffers forever)."""
-    from ..dataframe import DataFrame as VDF
-    lsdf = left._spark_df() if isinstance(left, VDF) else left
-    rsdf = right._spark_df() if isinstance(right, VDF) else right
-    lsdf = lsdf.withWatermark(left_time, left_delay)
-    rsdf = rsdf.withWatermark(right_time, right_delay)
+    lsdf = _sdf(left).withWatermark(left_time, left_delay)
+    rsdf = _sdf(right).withWatermark(right_time, right_delay)
     join_cond = (lsdf[on] == rsdf[on]) if isinstance(on, str) else on
     if condition is not None:
         join_cond = join_cond & condition
@@ -249,9 +243,7 @@ def run_foreach_batch(stream_sdf: SparkDataFrame, fn, checkpoint: str,
     lacks (JDBC upserts, multi-sink fanout).  Exactly-once comes from
     the checkpoint's batch-id tracking as long as fn is idempotent per
     batch_id."""
-    if hasattr(stream_sdf, "_spark_df"):  # vaex_spark.DataFrame wrapper
-        stream_sdf = stream_sdf._spark_df()
-    writer = stream_sdf.writeStream.foreachBatch(fn).option("checkpointLocation", checkpoint)
+    writer = _sdf(stream_sdf).writeStream.foreachBatch(fn).option("checkpointLocation", checkpoint)
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     q = writer.start()
@@ -420,7 +412,6 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
     stay idempotent.
     """
     from ..datapipe import dedup as D
-    from ..dataframe import DataFrame as VDF
 
     kw = dict(curate_kw)
     if kw.get("dedup", "exact") == "exact" and kw.get("pack_tokens") is None:
@@ -471,19 +462,20 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
         priors = dict(zip(dirs, _concurrently(
             spark, [functools.partial(prior, d) for d in dirs.values()])))
 
-        fresh = curate(VDF(bdf), text_col=text_col, id_col=id_col, **kw)
+        fresh = curate(DataFrame(bdf), text_col=text_col, id_col=id_col, **kw)
         if "state" in priors:
-            fresh = D.exact_dedup_incremental(fresh, VDF(priors["state"]),
-                                              text_col=text_col, id_col=id_col)
+            fresh = D.exact_dedup_incremental(
+                fresh, DataFrame(priors["state"]), text_col=text_col,
+                id_col=id_col)
         else:
             fresh = D.exact_dedup(fresh, text_col=text_col, id_col=id_col)
         fp = {**dict(shingle_k=5, num_perm=64, num_bands=32),
               **(fuzzy_params or {})}
         if "lsh" in priors:
             fresh = D.near_dup_against_corpus(
-                fresh, VDF(priors["out"]), text_col=text_col, id_col=id_col,
-                threshold=float(fuzzy_threshold),
-                corpus_index=VDF(priors["lsh"]), **fp)
+                fresh, DataFrame(priors["out"]), text_col=text_col,
+                id_col=id_col, threshold=float(fuzzy_threshold),
+                corpus_index=DataFrame(priors["lsh"]), **fp)
         if winnow_index_dir is not None:
             from ..datapipe import text as T
             wp = {**dict(k=5, window=4, fp_type="hash", max_df=256),
@@ -515,8 +507,8 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
         part = f"__batch_id={bid}"
         if not _Fs(spark, out_dir).exists(part):
             return
-        emitted = VDF(spark.read.schema(fsdf.schema)
-                      .parquet(out_dir.rstrip("/") + "/" + part))
+        emitted = DataFrame(spark.read.schema(fsdf.schema)
+                            .parquet(out_dir.rstrip("/") + "/" + part))
         sinks = [lambda: write(D.corpus_fingerprints(
             emitted, text_col=text_col)._spark_df(), state_dir)]
         if fuzzy_lsh_dir is not None:
