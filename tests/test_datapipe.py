@@ -36,6 +36,42 @@ def test_minhash_recovers_near_dups(spark):
     assert sorted(deduped.to_pandas_df()["doc_id"]) == [1, 3]
 
 
+def test_one_jaccard_contract(spark):
+    # every verify tail scores the same way: exact shingle Jaccard
+    # rounded to 6 decimals, thresholded on the rounded value
+    import vaex_spark as vs
+    from vaex_spark.datapipe import dedup
+    rng = np.random.default_rng(11)
+    vocab = [f"w{i}" for i in range(400)]
+    texts = []
+    for _ in range(4):
+        base = list(rng.choice(vocab, 30))
+        texts.append(" ".join(base))
+        for n_sub in (1, 3):  # near duplicates at two distances
+            near = list(base)
+            for j in rng.choice(30, n_sub, replace=False):
+                near[j] = f"x{rng.integers(10**6)}"
+            texts.append(" ".join(near))
+    texts += [" ".join(rng.choice(vocab, 30)) for _ in range(6)]
+    ids = list(range(len(texts)))
+    df = vs.from_arrays(spark=spark, doc_id=ids, text=texts)
+    kw = dict(shingle_k=3, threshold=0.5)
+    near = {(r["id_a"], r["id_b"]): r["jaccard"]
+            for r in dedup.near_dup_pairs(df, num_perm=64, num_bands=32,
+                                          **kw).collect()}
+    all_pairs = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "id_a long, id_b long")
+    exact = {(r["id_a"], r["id_b"]): r["jaccard"]
+             for r in dedup.ngram_jaccard(df, pairs=all_pairs, **kw).collect()}
+    assert len(near) >= 8 and near == exact
+    # 25/31-style ratios show the rounding
+    assert all(v == round(v, 6) for v in exact.values())
+    every = dedup.ngram_jaccard(df, pairs=all_pairs, shingle_k=3)
+    assert every.count() == all_pairs.count()
+    kept = dedup.minhash_lsh_dedup(df, num_perm=64, num_bands=32, **kw)
+    assert sorted(kept.to_pandas_df()["doc_id"]) == \
+        sorted(set(ids) - {b for _, b in near})
+
 def test_simhash_hamming(spark):
     import vaex_spark as vs
     from vaex_spark.datapipe import dedup

@@ -18,8 +18,13 @@ Contract (SURVEY §1.2):
   engine's uniform choice, established by the r13 rolling path).
   min/max stay timestamps.
 
-When you add a NEW statistic surface, add a runner here.
+When you add a NEW statistic surface, add a runner here, and take the
+surface's input from the statistic-input rule
+(``vaex_spark.temporal.stat_input``) instead of a branch of its own.
 """
+
+import pathlib
+import re
 
 import numpy as np
 import pandas as pd
@@ -147,13 +152,17 @@ def test_scalar_date(pdf, stat):
                "std": _pop_std(DMU), "var": _pop_var(DMU)}[stat])
 
 
-@pytest.mark.parametrize("stat", ["mean", "std", "sum"])
+@pytest.mark.parametrize("stat", ["mean", "std", "sum", "var", "skew",
+                                  "kurtosis"])
 def test_groupby_date(pdf, stat):
     desc = getattr(vagg, stat)("d")
     out = pdf.groupby("g", agg={"o": desc}).to_pandas_df().sort_values("g")
-    fn = {"sum": np.sum, "mean": np.mean, "std": np.std}[stat]
+    fn = {"sum": np.sum, "mean": np.mean, "std": np.std, "var": np.var,
+          "skew": _skew, "kurtosis": _kurt}[stat]
+    # skew/kurtosis are O(1) floats: hold them to 1e-9, not 1 µs
+    tol = 1e-9 if stat in ("skew", "kurtosis") else 1.0
     for g, w in zip(out.o.tolist(), [fn(DMU[:4]), fn(DMU[4:])]):
-        _check_ts(stat, g, float(w))
+        _check_ts(stat, g, float(w), tol=tol)
 
 
 def test_binby_date_value(pdf):
@@ -234,13 +243,19 @@ def test_scalar_interval_minmax_skew(pdf):
     assert abs(_td_us(got) - float(np.percentile(TMU, 50))) <= 1.0
 
 
-@pytest.mark.parametrize("stat", ["mean", "std", "sum"])
+@pytest.mark.parametrize("stat", ["mean", "std", "sum", "var", "skew",
+                                  "kurtosis"])
 def test_groupby_interval(pdf, stat):
     out = pdf.groupby("g", agg={"o": getattr(vagg, stat)("td")}) \
         .to_pandas_df().sort_values("g")
-    fn = {"sum": np.sum, "mean": np.mean, "std": np.std}[stat]
+    fn = {"sum": np.sum, "mean": np.mean, "std": np.std, "var": np.var,
+          "skew": _skew, "kurtosis": _kurt}[stat]
     for g, w in zip(out.o.tolist(), [fn(TMU[:4]), fn(TMU[4:])]):
-        assert abs(_td_us(g) - float(w)) <= 1.0, (stat, g, w)
+        if stat in ("mean", "std", "sum"):
+            assert abs(_td_us(g) - float(w)) <= 1.0, (stat, g, w)
+        else:  # µs² and dimensionless moments are plain floats
+            assert isinstance(g, float), (stat, g)
+            assert abs(g - w) <= 1e-9 * max(1.0, abs(w)), (stat, g, w)
 
 
 def test_binby_interval_value(pdf):
@@ -574,3 +589,101 @@ def test_shift_bool_fill(pdf):
     got = out.to_pandas_df().sort_values("i").b.tolist()
     want = [False] + BOOLS[:-1].tolist()
     assert [bool(v) for v in got] == want
+
+
+# ------------------------------------ rolling spread over date/interval
+@pytest.mark.parametrize("width", [3, 64])
+@pytest.mark.parametrize("col", ["d", "td"])
+@pytest.mark.parametrize("stat", ["std", "var"])
+def test_rolling_spread_date_interval(spark, stat, col, width):
+    # both physical forms: the sliding frame (width < 64) and the
+    # growing-frame difference (width >= 64); std comes back as a
+    # timedelta, var as µs²
+    n = 80
+    rng = np.random.default_rng(7)
+    days = np.cumsum(rng.integers(1, 5, n))
+    dates = (np.datetime64("2023-01-01") + days.astype("timedelta64[D]"))
+    tds = rng.integers(-10**10, 10**11, n).astype("timedelta64[us]")
+    df2 = vs.from_arrays(spark=spark, i=np.arange(n),
+                         d=dates.astype("datetime64[D]").astype(object),
+                         td=tds)
+    mu = (dates.astype("datetime64[us]") if col == "d" else tds) \
+        .astype("int64").astype("float64")
+    out = (getattr(df2.rolling(width, column=col, order_key="i"), stat)()
+           .to_pandas_df().sort_values("i")[col])
+    r = pd.Series(mu).rolling(width)
+    want = r.std(ddof=0) if stat == "std" else r.var(ddof=0)
+    for g, w in zip(out.tolist(), want.tolist()):
+        if g is None or g is pd.NaT or (isinstance(g, float) and np.isnan(g)):
+            assert np.isnan(w)
+            continue
+        if stat == "std":
+            assert isinstance(g, (pd.Timedelta, np.timedelta64)), g
+            assert abs(_td_us(g) - w) <= 2.0, (g, w)
+        else:
+            assert isinstance(g, float), g
+            assert abs(g - w) <= 1e-9 * abs(w) + 4.0, (g, w)
+
+
+# ------------------------------------ covariance / correlation (µs units)
+@pytest.mark.parametrize("col,arr", [("b", B01), ("t", MU), ("d", DMU),
+                                     ("td", TMU)])
+def test_covar_correlation_temporal(pdf, col, arr):
+    # covariance in the input's units (epoch µs for temporal columns, as
+    # var is µs²), correlation dimensionless
+    y = np.arange(N, dtype="float64")
+    cov = np.cov(arr, y, bias=True)
+    corr = np.corrcoef(arr, y)
+    assert abs(pdf.covar(col, "i") - cov[0, 1]) <= 1e-9 * abs(cov[0, 1])
+    assert abs(pdf.correlation(col, "i") - corr[0, 1]) < 1e-12
+    assert np.allclose(pdf.cov([col, "i"]), cov, rtol=1e-9)
+    assert np.allclose(pdf.correlation([col, "i"]), corr, rtol=1e-9)
+
+
+# ------------------------------------- rolling_range empty-frame schema
+@pytest.fixture(scope="module")
+def rr_df(spark):
+    return vs.from_arrays(spark=spark, t=TS, b=BOOLS, d=np.array(DATES.date),
+                          td=TD, x=np.linspace(-1.0, 2.5, N))
+
+
+@pytest.mark.parametrize("agg", ["sum", "mean", "count", "min", "max"])
+@pytest.mark.parametrize("col", ["b", "t", "d", "td", "x"])
+def test_rolling_range_empty_frame_schema(rr_df, col, agg):
+    # an empty frame takes the null-column path: its output type must be
+    # the one a non-empty frame computes
+    name = f"{col}_rolling_{agg}"
+    full = rr_df.rolling_range(7200, on="t", column=col, agg=agg).schema
+    empty = rr_df[rr_df.x > 100].rolling_range(7200, on="t", column=col,
+                                               agg=agg).schema
+    assert empty[name] == full[name], (empty[name], full[name])
+
+
+# ------------------------------------------------- one rule, one probe
+@pytest.mark.parametrize("stat", ["mean", "std", "sum", "var", "skew"])
+def test_stat_reads_input_dtype_once(pdf, monkeypatch, stat):
+    calls = []
+    probe = vs.DataFrame.data_type
+
+    def counting(self, name):
+        calls.append(name)
+        return probe(self, name)
+
+    monkeypatch.setattr(vs.DataFrame, "data_type", counting)
+    getattr(pdf, stat)("i")
+    assert len(calls) == 1, calls
+
+
+_PKG = pathlib.Path(vs.__file__).resolve().parent
+_RULE = re.compile(r"unix_micros\(|interval_to_us\(|us_to_interval\("
+                   r"|timestamp_micros\(|decimal\(38,0\)")
+
+
+def test_temporal_rule_lives_in_temporal_module():
+    """The statistic surfaces ask vaex_spark/temporal.py for their input
+    and convert-back; a µs conversion or decimal sum written into one of
+    them is a copy of the rule growing back."""
+    offenders = [name for name in ("dataframe.py", "agg.py",
+                                   "operators/window.py")
+                 if _RULE.search((_PKG / name).read_text(encoding="utf-8"))]
+    assert offenders == []

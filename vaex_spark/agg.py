@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .temporal import stat_input, stat_output
+
 
 class AggDescriptor:
     """Base: compiles to a Spark Column via to_column(df)."""
@@ -98,10 +100,8 @@ class _SimpleAgg(AggDescriptor):
         super().__init__(short_name, expression, **kw)
         self.fn = fn
         self.star_ok = star_ok
-        # numeric aggregators follow numpy 0/1 semantics on booleans
-        # (np.sum(bool_arr) counts Trues; Spark's sum(boolean) is a
-        # DATATYPE_MISMATCH error) — r12, same class as the
-        # DataFrame-level moment fix
+        # numeric aggregators take their input from the statistic-input
+        # rule (temporal.py): booleans as 0/1, temporal columns as µs
         self.numeric = numeric
 
     def to_column(self, df):
@@ -115,64 +115,8 @@ class _SimpleAgg(AggDescriptor):
                 dt = df.data_type(self.expression)
             except Exception:
                 dt = None
-            if dt == "boolean":
-                c = c.cast("int")
-            elif dt is not None and dt.startswith("interval") and \
-                    self.short_name in ("mean", "std", "var", "skew",
-                                        "kurtosis", "sum", "sum_moment"):
-                # timedelta64 parity (r14): the reference's kernels are
-                # plain numpy over m8, so every moment works there;
-                # Spark has no interval→µs cast (CAST(iv AS BIGINT)
-                # reads the END-FIELD unit, seconds truncated), so
-                # anchor at the epoch and read back with unix_micros —
-                # exact µs over the full range.  mean/std come back as
-                # intervals (us_to_interval: exact days+secs
-                # decomposition over the WHOLE interval range), sum is
-                # the exact decimal µs sum converted back (NULL once
-                # the total leaves the interval range — identical under
-                # both ANSI modes via the range guard).
-                from .temporal import interval_to_us, us_to_interval
-                src = interval_to_us(c)
-                if self.short_name == "sum":
-                    return us_to_interval(self.fn(src.cast("decimal(38,0)")))
-                out = self.fn(src)
-                if self.short_name in ("mean", "std"):
-                    return us_to_interval(out)
-                return out
-            elif dt is not None and \
-                    (dt.startswith("timestamp") or dt == "date") and \
-                    self.short_name in ("mean", "std", "var", "skew",
-                                        "kurtosis", "sum", "sum_moment"):
-                # temporal parity on the GROUPBY path too (r13; the r12
-                # fix covered only DataFrame-level stats): compute over
-                # epoch micros JVM-side, convert mean back to timestamp
-                # and std to a day-time interval (-> timedelta64 in
-                # pandas); var stays float µs², skew/kurt dimensionless;
-                # sum/sum_moment stay epoch-µs sums — the r13 rolling
-                # contract, now uniform (r13 ADVICE: vagg.sum over a
-                # timestamp was a DATATYPE_MISMATCH while rolling
-                # computed it).  DATE columns join via the timestamp
-                # cast (no-op on timestamps), r14.
-                src = F.unix_micros(c.cast("timestamp"))
-                if self.short_name == "sum":
-                    # exact epoch-µs sum in decimal(38,0): int64 wraps
-                    # silently at ~5,400 rows (one epoch ~1.7e15 µs)
-                    # and ANSI-on raises — decimal is exact to 1e38 and
-                    # ANSI-independent (r14, found by the q112 oracle
-                    # at sf0.1).  sum_moment keeps double: F.pow is
-                    # double-typed regardless of input.
-                    src = src.cast("decimal(38,0)")
-                out = self.fn(src)
-                if self.short_name == "mean":
-                    return F.timestamp_micros(F.round(out).cast("long"))
-                if self.short_name == "std":
-                    # us_to_interval: exact over the full interval
-                    # range — the naive make_dt_interval(0,0,0, µs/1e6)
-                    # form cast-overflows decimal(18,6) for spreads
-                    # past ~1e12 s (null/error ANSI divergence, r14)
-                    from .temporal import us_to_interval
-                    return us_to_interval(out)
-                return out
+            stat = self.short_name
+            return stat_output(self.fn(stat_input(c, dt, stat)), dt, stat)
         return self.fn(c)
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from .colname import qcol as _qcol
 from .expression import Expression, _safe_isnan
+from .temporal import stat_input, stat_post, temporal_kind
 
 ROW_ID = "__row_id"
 FILTER_SELECTION_NAME = "__filter__"
@@ -1597,143 +1598,58 @@ class DataFrame:
             return F.count(F.lit(1)) if c is None else F.count(F.when(~(c.isNull() | _safe_isnan(c)), 1))
         return self._compute_agg(make, expression, binby, shape, limits, selection, delay, edges, progress=progress)
 
-    def _bool_as_int(self, expression):
-        """numpy parity for moment aggregations: sum/mean/var of a
-        boolean counts Trues as 1 (np.sum(bool_arr), and vaex sums
-        bool columns the same way); Spark's sum(boolean) is a type
-        error (r12 — caught via the large-isin flag column)."""
-        if expression is None:
-            return None
-        try:
-            if self.data_type(expression) == "boolean":
-                return Expression(self, self._to_expr(expression).col.cast("int"))
-        except Exception:
-            pass
-        return expression
-
-    def sum(self, expression, binby=None, shape=128, limits=None, selection=None, delay=False, edges=False, progress=None):
-        """Timestamps: there is no datetime sum type (numpy raises on
-        datetime64 sum), so sum over a timestamp column returns the
-        EPOCH-MICROSECOND sum — the same contract the rolling path
-        established in r13, now uniform across scalar / binby / groupby
-        (r13 ADVICE: the surfaces disagreed).  Computed in
-        decimal(38,0): one epoch is ~1.7e15 µs, so an int64 sum WRAPS
-        silently at ~5,400 rows non-ANSI and raises ANSI-on (r14,
-        found live building the q112 oracle at sf0.1) — decimal is
-        exact to 1e38 and identical under both ANSI modes.  Scalars
-        come back as exact Python ints; binby grids are float64."""
-        if self._is_timestamp(expression) or self._is_interval(expression):
-            mexpr, kind = self._temporal_micros(expression)
-            expr = Expression(self, mexpr.col.cast("decimal(38,0)"))
-            # intervals: numpy sums timedeltas to a TIMEDELTA (wrapping
-            # int64 silently); we keep the type but stay exact — decimal
-            # internally, OverflowError if the total leaves the
-            # timedelta64[us] range (loud where numpy is silent, the
-            # same divergence class as SATURATE in SURVEY §1.2)
-            post = (_decimal_sum_td_post if kind == "m"
-                    else _decimal_sum_post)
-            return self._compute_agg(
-                lambda c: F.coalesce(F.sum(c), F.lit(0)), expr, binby,
-                shape, limits, selection, delay, edges, progress=progress,
-                post=post)
-        return self._compute_agg(lambda c: F.coalesce(F.sum(_dropnan(c)), F.lit(0)),
-                                 self._bool_as_int(expression), binby, shape, limits, selection, delay, edges, progress=progress)
-
-    def _is_timestamp(self, expression) -> bool:
-        """True for TEMPORAL expressions — timestamp AND date (r14:
-        dates joined the contract; the reference stores dates as
-        datetime64 arrays so moments just work there, while Spark's
-        avg/stddev over DATE are type errors — the same class the
-        binby date fix closed for grids)."""
+    def _stat_input(self, expression, stat, grid=False):
+        """(aggregation input, Spark type) of ``expression`` for ``stat``
+        under the statistic-input rule (temporal.py) — the one dtype
+        probe of a statistic call."""
         try:
             dt = self.data_type(expression)
-            return dt.startswith("timestamp") or dt == "date"
         except Exception:
-            return False
+            return expression, None
+        col = self._to_expr(expression).col
+        return Expression(self, stat_input(col, dt, stat, grid=grid)), dt
 
-    def _micros_expr(self, expression) -> "Expression":
-        """Temporal expression re-based to unix epoch microseconds, so
-        moment statistics run JVM-side on longs; paired with
-        ``_micros_post`` to convert back (reference is_temporal branch,
-        dataframe.py:4042 — applies to scalar, binby-grid, and
-        multi-selection forms alike, r12 verdict What's-wrong #2).
-        The timestamp cast makes DATE columns work (midnight UTC in the
-        session timezone) and is a no-op on timestamps."""
-        return Expression(self, F.unix_micros(
-            self._to_expr(expression).col.cast("timestamp")))
+    def _stat(self, stat, make, expression, binby, shape, limits, selection,
+              delay, edges=False, progress=None):
+        """One statistic through the input rule: ``make`` aggregates the
+        rule's input, and the numpy convert-back runs on the result."""
+        grid = binby is not None
+        expr, dt = self._stat_input(expression, stat, grid=grid)
+        temporal = temporal_kind(dt) is not None
+        # NaN only occurs in floating inputs (and isnan's double cast is
+        # invalid on intervals); empty temporal bins read NaN/NaT, not a
+        # fake 0 — a sum of nothing stays 0
+        drop = _keep if temporal else _dropnan
+        return self._compute_agg(
+            lambda c: make(drop(c)), expr, binby, shape, limits, selection,
+            delay, edges, progress=progress,
+            post=stat_post(dt, stat, grid=grid),
+            fill=np.nan if temporal and stat != "sum" else 0.0)
 
-    def _is_interval(self, expression) -> bool:
-        """True for day-time INTERVAL expressions — numpy timedelta64
-        (r14: the reference's is_temporal covers timedelta too — its
-        kernels are plain numpy over m8 values — while every Spark
-        moment over an interval column was a DATATYPE_MISMATCH here;
-        intervals arise naturally from our own surface: diff() over a
-        timestamp column yields one)."""
-        try:
-            return self.data_type(expression).startswith("interval")
-        except Exception:
-            return False
-
-    def _interval_micros_expr(self, expression) -> "Expression":
-        """Interval expression as exact µs longs.  No interval→integral
-        µs cast exists (``CAST(iv AS BIGINT)`` reads the END-FIELD unit
-        — seconds, truncated); anchoring at the epoch and reading back
-        with ``unix_micros`` is exact µs arithmetic across the full
-        ±day-time-interval range."""
-        from .temporal import interval_to_us
-        return Expression(self, interval_to_us(self._to_expr(expression).col))
-
-    def _temporal_micros(self, expression):
-        """(micros_expr, post_kind) for any temporal column class:
-        datetimes convert back to datetime64 ('M'), intervals to
-        timedelta64 ('m')."""
-        if self._is_interval(expression):
-            return self._interval_micros_expr(expression), "m"
-        return self._micros_expr(expression), "M"
+    def sum(self, expression, binby=None, shape=128, limits=None, selection=None, delay=False, edges=False, progress=None):
+        """A timestamp sum is the exact epoch-µs sum (temporal.py):
+        scalars come back as Python ints, binby grids as float64."""
+        return self._stat("sum", lambda c: F.coalesce(F.sum(c), F.lit(0)),
+                          expression, binby, shape, limits, selection, delay, edges, progress)
 
     def mean(self, expression, binby=None, shape=128, limits=None, selection=None, delay=False, edges=False, progress=None):
-        if self._is_timestamp(expression) or self._is_interval(expression):
-            # temporal parity: datetime/timedelta mean, not epoch
-            # seconds — on the scalar, binby-grid, AND multi-selection
-            # paths (intervals joined the class in r14)
-            expr, kind = self._temporal_micros(expression)
-            return self._compute_agg(lambda c: F.avg(c), expr,
-                                     binby, shape, limits, selection, delay, edges,
-                                     progress=progress, post=_micros_post(kind), fill=np.nan)
-        return self._compute_agg(lambda c: F.avg(_dropnan(c)), self._bool_as_int(expression), binby, shape, limits, selection, delay, edges, progress=progress)
+        return self._stat("mean", F.avg, expression, binby, shape, limits,
+                          selection, delay, edges, progress)
 
     def min(self, expression, binby=None, shape=128, limits=None, selection=None, delay=False, edges=False, progress=None):
-        if binby is not None and (self._is_timestamp(expression)
-                                  or self._is_interval(expression)):
-            # the dense grid is float64; route temporals through micros
-            # and view the grid back as datetime64/timedelta64[us]
-            # (empty bins → NaT)
-            expr, kind = self._temporal_micros(expression)
-            return self._compute_agg(lambda c: F.min(c), expr,
-                                     binby, shape, limits, selection, delay, edges,
-                                     progress=progress, post=_micros_post(kind), fill=np.nan)
-        if self._is_interval(expression):
-            # native interval min works; _dropnan's isnan(cast double)
-            # is the one thing that DOESN'T (NaN can't occur anyway)
-            return self._compute_agg(lambda c: F.min(c), expression, binby, shape, limits, selection, delay, edges, progress=progress)
-        return self._compute_agg(lambda c: F.min(_dropnan(c)), expression, binby, shape, limits, selection, delay, edges, progress=progress)
+        return self._stat("min", F.min, expression, binby, shape, limits,
+                          selection, delay, edges, progress)
 
     def max(self, expression, binby=None, shape=128, limits=None, selection=None, delay=False, edges=False, progress=None):
-        if binby is not None and (self._is_timestamp(expression)
-                                  or self._is_interval(expression)):
-            expr, kind = self._temporal_micros(expression)
-            return self._compute_agg(lambda c: F.max(c), expr,
-                                     binby, shape, limits, selection, delay, edges,
-                                     progress=progress, post=_micros_post(kind), fill=np.nan)
-        if self._is_interval(expression):
-            return self._compute_agg(lambda c: F.max(c), expression, binby, shape, limits, selection, delay, edges, progress=progress)
-        return self._compute_agg(lambda c: F.max(_dropnan(c)), expression, binby, shape, limits, selection, delay, edges, progress=progress)
+        return self._stat("max", F.max, expression, binby, shape, limits,
+                          selection, delay, edges, progress)
 
     def minmax(self, expression, binby=None, shape=128, limits=None, selection=None, delay=False):
         if binby is None:
-            _nan = (lambda c: c) if self._is_interval(expression) else _dropnan
-            cols = [F.min(_nan(self._agg_expr_col(expression, selection))),
-                    F.max(_nan(self._agg_expr_col(expression, selection)))]
+            expr, dt = self._stat_input(expression, "min")
+            _nan = _keep if temporal_kind(dt) else _dropnan
+            cols = [F.min(_nan(self._agg_expr_col(expr, selection))),
+                    F.max(_nan(self._agg_expr_col(expr, selection)))]
             if delay:
                 return self.executor.schedule(cols, unwrap=False)
             row = self._spark_df().agg(cols[0].alias("_lo"), cols[1].alias("_hi")).collect()[0]
@@ -1745,55 +1661,24 @@ class DataFrame:
     def var(self, expression, binby=None, shape=128, limits=None, selection=None, delay=False, ddof=0, progress=None):
         """Population variance by default (agg.py:421-455 — vaex accepts
         ddof but applies population formula; we honor ddof properly).
-
-        Timestamps: variance over epoch MICROSECONDS as a float (µs²),
-        so ``var(t) ** 0.5`` equals ``std(t)`` expressed in µs — there
-        is no squared-duration numpy type (the reference computes over
-        the raw int64 representation too)."""
-        fn = F.var_pop if ddof == 0 else F.var_samp
-        if self._is_timestamp(expression) or self._is_interval(expression):
-            # fill=NaN: an EMPTY bin must read NaN, not 0.0 µs² — 0
-            # is indistinguishable from a real constant-valued bin,
-            # while the sibling temporal stats return NaT (r13 ADVICE)
-            expr, _ = self._temporal_micros(expression)
-            return self._compute_agg(lambda c: fn(c), expr,
-                                     binby, shape, limits, selection, delay,
-                                     progress=progress, fill=np.nan)
-        return self._compute_agg(lambda c: fn(_dropnan(c)), self._bool_as_int(expression), binby, shape, limits, selection, delay, progress=progress)
+        Temporal columns give µs² (temporal.py)."""
+        return self._stat("var", F.var_pop if ddof == 0 else F.var_samp,
+                          expression, binby, shape, limits, selection, delay,
+                          progress=progress)
 
     def std(self, expression, binby=None, shape=128, limits=None, selection=None, delay=False, ddof=0, progress=None):
-        fn = F.stddev_pop if ddof == 0 else F.stddev_samp
-        if self._is_timestamp(expression) or self._is_interval(expression):
-            # spread of a datetime OR timedelta column is a TIMEDELTA
-            # (reference is_temporal branch); Spark's stddev over either
-            # is a type error, so compute over epoch micros — scalar,
-            # binby, and multi-selection forms alike
-            expr, _ = self._temporal_micros(expression)
-            return self._compute_agg(lambda c: fn(c), expr,
-                                     binby, shape, limits, selection, delay,
-                                     progress=progress, post=_micros_post("m"), fill=np.nan)
-        return self._compute_agg(lambda c: fn(_dropnan(c)), self._bool_as_int(expression), binby, shape, limits, selection, delay, progress=progress)
-
-    def _moment_expr(self, expression):
-        """Input column for dimensionless moment stats: booleans as 0/1;
-        timestamps/dates/intervals as epoch micros (skew/kurtosis are
-        affine-invariant, so the epoch basis does not change the
-        value)."""
-        if self._is_timestamp(expression) or self._is_interval(expression):
-            return self._temporal_micros(expression)[0]
-        return self._bool_as_int(expression)
-
-    def _is_temporal_like(self, expression) -> bool:
-        return self._is_timestamp(expression) or self._is_interval(expression)
+        return self._stat("std", F.stddev_pop if ddof == 0 else F.stddev_samp,
+                          expression, binby, shape, limits, selection, delay,
+                          progress=progress)
 
     def skew(self, expression, binby=None, shape=128, limits=None, selection=None, delay=False, progress=None):
-        kw = dict(fill=np.nan) if self._is_temporal_like(expression) else {}
-        return self._compute_agg(lambda c: F.skewness(_dropnan(c)), self._moment_expr(expression), binby, shape, limits, selection, delay, progress=progress, **kw)
+        return self._stat("skew", F.skewness, expression, binby, shape, limits,
+                          selection, delay, progress=progress)
 
     def kurtosis(self, expression, binby=None, shape=128, limits=None, selection=None, delay=False, progress=None):
         """vaex population excess kurtosis (agg.py:458-518) == Spark F.kurtosis."""
-        kw = dict(fill=np.nan) if self._is_temporal_like(expression) else {}
-        return self._compute_agg(lambda c: F.kurtosis(_dropnan(c)), self._moment_expr(expression), binby, shape, limits, selection, delay, progress=progress, **kw)
+        return self._stat("kurtosis", F.kurtosis, expression, binby, shape,
+                          limits, selection, delay, progress=progress)
 
     def nunique(self, expression, dropna: bool = False, selection=None, delay=False, **kw):
         raw = self._to_expr(expression).col
@@ -1820,9 +1705,13 @@ class DataFrame:
             lambda c: F.approx_count_distinct(c, rsd),
             expression, selection=selection, delay=delay, **kw)
 
+    def _moment_col(self, expression, stat) -> Column:
+        return self._to_expr(self._stat_input(expression, stat)[0]).col
+
     def covar(self, x, y, selection=None, delay=False):
-        x, y = self._bool_as_int(x), self._bool_as_int(y)
-        cx, cy = self._to_expr(x).col, self._to_expr(y).col
+        """Population covariance; a temporal column enters in epoch µs
+        (temporal.py), as var does."""
+        cx, cy = self._moment_col(x, "covar"), self._moment_col(y, "covar")
         sel = self._selection_col(selection)
         if sel is not None:
             cx, cy = F.when(sel, cx), F.when(sel, cy)
@@ -1838,7 +1727,7 @@ class DataFrame:
             aggs = []
             for i, a in enumerate(names):
                 for j, b in enumerate(names):
-                    aggs.append(F.corr(self._to_expr(self._bool_as_int(a)).col, self._to_expr(self._bool_as_int(b)).col).alias(f"_c_{i}_{j}"))
+                    aggs.append(F.corr(self._moment_col(a, "corr"), self._moment_col(b, "corr")).alias(f"_c_{i}_{j}"))
             if delay:
                 n = len(names)
                 return self.executor.schedule(
@@ -1848,8 +1737,7 @@ class DataFrame:
                 for j in range(len(names)):
                     out[i, j] = row[f"_c_{i}_{j}"]
             return out
-        x, y = self._bool_as_int(x), self._bool_as_int(y)
-        cx, cy = self._to_expr(x).col, self._to_expr(y).col
+        cx, cy = self._moment_col(x, "corr"), self._moment_col(y, "corr")
         sel = self._selection_col(selection)
         if sel is not None:
             cx, cy = F.when(sel, cx), F.when(sel, cy)
@@ -1864,7 +1752,7 @@ class DataFrame:
         aggs = []
         for i, a in enumerate(names):
             for j, b in enumerate(names):
-                aggs.append(F.covar_pop(self._to_expr(self._bool_as_int(a)).col, self._to_expr(self._bool_as_int(b)).col).alias(f"_c_{i}_{j}"))
+                aggs.append(F.covar_pop(self._moment_col(a, "covar"), self._moment_col(b, "covar")).alias(f"_c_{i}_{j}"))
         row = self._spark_df().agg(*aggs).collect()[0]
         out = np.zeros((len(names), len(names)))
         for i in range(len(names)):
@@ -1876,7 +1764,7 @@ class DataFrame:
         """dataframe.py:1632 — vaex interpolates a cumulative histogram
         (approximate); we use Spark's approx (different approximation,
         documented tolerance) — `percentile_exact` gives the exact one."""
-        expression = self._bool_as_int(expression)
+        expression = self._stat_input(expression, "percentile_approx")[0]
         if isinstance(percentage, (list, tuple, np.ndarray)):
             pct = [float(p) / 100.0 for p in percentage]
             col = F.percentile_approx(self._agg_expr_col(expression, selection), pct, 10000)
@@ -1908,15 +1796,8 @@ class DataFrame:
         bounded memory everywhere; the delay path cannot multi-pass
         (its contract is one shared job), so it FAILS LOUD instead of
         OOMing the merge task."""
-        conv = None
-        if self._is_timestamp(expression) or self._is_interval(expression):
-            # F.percentile needs numerics: interpolate over epoch micros
-            # and hand back datetimes/timedeltas (median_approx already
-            # supports timestamps via approx_percentile natively)
-            expr, kind = self._temporal_micros(expression)
-            conv = _micros_post(kind)
-        else:
-            expr = self._bool_as_int(expression)
+        expr, dt = self._stat_input(expression, "percentile")
+        conv = stat_post(dt, "percentile")
         from .operators.percentile import (percentiles_exact_distributed,
                                            stats_exceed_single_task_budget)
         big = False
@@ -2054,49 +1935,27 @@ class DataFrame:
         return float((pxy[mask] * np.log(pxy[mask] / (px @ py)[mask])).sum())
 
     def describe(self, strings: bool = False):
-        """agg.py:679 describe — struct of count/NA/mean/std/min/max per column."""
-        cols = [c for c in self.get_column_names()
-                if strings or not self.data_type(c).startswith("string")]
+        """agg.py:679 describe — struct of count/NA/mean/std/min/max per
+        column; booleans and temporal columns follow the statistic-input
+        rule (temporal.py), min/max stay native."""
+        dtypes = {c: self.data_type(c) for c in self.get_column_names()}
+        cols = [c for c, dt in dtypes.items()
+                if strings or not dt.startswith("string")]
         aggs = []
         # index-based result aliases (_d{i}__stat) so column names that
         # themselves contain "__" can't garble the parse-back below
         for i, c in enumerate(cols):
-            col = self[c].col
-            non_float = self.data_type(c).startswith(
+            col, dt = self[c].col, dtypes[c]
+            non_float = dt.startswith(
                 ("string", "timestamp", "array", "struct", "boolean",
                  "date", "binary", "interval"))
             na = col.isNull() if non_float else (col.isNull() | _safe_isnan(col))
             aggs += [F.count(col).alias(f"_d{i}__count"),
                      F.count(F.when(na, 1)).alias(f"_d{i}__na")]
-            if self.data_type(c) == "boolean":
-                # booleans are primitives in the reference's describe
-                # (datatype kind 'b'): mean/std over 0/1, min/max as bool
-                b = col.cast("int")
-                aggs += [F.avg(b).alias(f"_d{i}__mean"),
-                         F.stddev_pop(b).alias(f"_d{i}__std"),
-                         F.min(col).alias(f"_d{i}__min"), F.max(col).alias(f"_d{i}__max")]
-            elif self.data_type(c).startswith("timestamp") or \
-                    self.data_type(c) == "date":
-                # is_temporal branch (reference dataframe.py:4042):
-                # datetime mean + timedelta std, native min/max; DATE
-                # columns join via the timestamp cast (r14 — they
-                # previously got count/na only)
-                e = F.unix_micros(col.cast("timestamp"))
-                aggs += [F.avg(e).alias(f"_d{i}__mean_us"),
-                         F.stddev_pop(e).alias(f"_d{i}__std_us"),
-                         F.min(col).alias(f"_d{i}__min"), F.max(col).alias(f"_d{i}__max")]
-            elif self.data_type(c).startswith("interval"):
-                # timedelta64 columns are temporal in the reference too
-                # (datatype kind 'm'): timedelta mean + std, native
-                # min/max (r14 — every stat was a DATATYPE_MISMATCH)
-                from .temporal import interval_to_us
-                e = interval_to_us(col)
-                aggs += [F.avg(e).alias(f"_d{i}__mean_td_us"),
-                         F.stddev_pop(e).alias(f"_d{i}__std_us"),
-                         F.min(col).alias(f"_d{i}__min"), F.max(col).alias(f"_d{i}__max")]
-            elif not self.data_type(c).startswith(
-                    ("string", "array", "struct", "date", "binary")):
-                aggs += [F.avg(col).alias(f"_d{i}__mean"), F.stddev_pop(col).alias(f"_d{i}__std"),
+            if temporal_kind(dt) or not dt.startswith(
+                    ("string", "array", "struct", "binary")):
+                aggs += [F.avg(stat_input(col, dt, "mean")).alias(f"_d{i}__mean"),
+                         F.stddev_pop(stat_input(col, dt, "std")).alias(f"_d{i}__std"),
                          F.min(col).alias(f"_d{i}__min"), F.max(col).alias(f"_d{i}__max")]
         row = self._spark_df().agg(*aggs).collect()[0].asDict()
         import pandas as pd
@@ -2104,14 +1963,12 @@ class DataFrame:
         for i, c in enumerate(cols):
             d = {k.split("__", 1)[1]: v for k, v in row.items()
                  if k.startswith(f"_d{i}__")}
-            if "mean_us" in d:
-                mu, su = d.pop("mean_us"), d.pop("std_us")
-                d["mean"] = None if mu is None else pd.Timestamp(int(mu), unit="us")
-                d["std"] = None if su is None else pd.Timedelta(int(su), unit="us")
-            elif "mean_td_us" in d:
-                mu, su = d.pop("mean_td_us"), d.pop("std_us")
-                d["mean"] = None if mu is None else pd.Timedelta(int(mu), unit="us")
-                d["std"] = None if su is None else pd.Timedelta(int(su), unit="us")
+            for stat in ("mean", "std"):
+                post = stat_post(dtypes[c], stat)
+                if post is not None and d[stat] is not None:
+                    v = post(d[stat])
+                    d[stat] = (pd.Timestamp(v) if v.dtype.kind == "M"
+                               else pd.Timedelta(v))
             out[c] = d
         return pd.DataFrame(out)
 
@@ -2976,67 +2833,8 @@ def _dropnan(c: Column | None) -> Column | None:
     return F.when(_safe_isnan(c), F.lit(None)).otherwise(c)
 
 
-def _decimal_sum_post(v):
-    """decimal(38,0) epoch-µs sums back to numpy-friendly values:
-    scalar → exact Python int, multi-selection vector → float64 (binby
-    grids are already float64 — the dense grid is plotting-oriented and
-    np.full(float64) coerces Decimals on assignment)."""
-    import decimal
-    if v is None:
-        return 0
-    if isinstance(v, decimal.Decimal):
-        return int(v)
-    arr = np.asarray(v)
-    if arr.dtype == object:
-        flat = [float(x) if x is not None else np.nan for x in arr.ravel()]
-        return np.array(flat, dtype="float64").reshape(arr.shape)
-    return v
-
-
-def _decimal_sum_td_post(v):
-    """decimal(38,0) µs sums of an INTERVAL column back to timedeltas:
-    numpy sums timedelta64 to a timedelta64 (silently wrapping int64);
-    we keep the TYPE but stay exact — OverflowError once the total
-    leaves the timedelta64[us] range, loud where numpy is silent (the
-    same documented-divergence class as SATURATE, SURVEY §1.2)."""
-    v = _decimal_sum_post(v)
-    lim = np.iinfo("int64").max
-    if isinstance(v, int):
-        if abs(v) > lim:
-            raise OverflowError(
-                f"timedelta sum {v} µs exceeds the timedelta64[us] range "
-                f"(numpy would silently wrap here)")
-        return np.timedelta64(v, "us")
-    arr = np.asarray(v, dtype="float64")
-    if np.any(np.abs(arr[~np.isnan(arr)]) > lim):
-        raise OverflowError(
-            "timedelta sum grid exceeds the timedelta64[us] range")
-    ints = np.where(np.isnan(arr), float(np.iinfo("int64").min), arr).astype("int64")
-    return ints.view("timedelta64[us]")
-
-
-def _micros_post(kind: str):
-    """Post-hook converting a stat computed over unix epoch microseconds
-    back to numpy temporal types: kind 'M' → datetime64[us], 'm' →
-    timedelta64[us].  Handles every ``_compute_agg`` result shape —
-    scalar (None → None), multi-selection vector, and binby grid
-    (NaN-filled empty bins → NaT via the int64-min bit pattern)."""
-    unit = "datetime64[us]" if kind == "M" else "timedelta64[us]"
-
-    def conv(v):
-        if v is None:
-            return None
-        arr = np.asarray(v, dtype="float64")
-        if arr.ndim == 0:
-            f = float(arr)
-            if np.isnan(f):
-                return np.datetime64("NaT", "us") if kind == "M" else np.timedelta64("NaT", "us")
-            return np.datetime64(int(f), "us") if kind == "M" else np.timedelta64(int(f), "us")
-        # NaT shares int64-min's bit pattern; -2^63 is exactly float64-representable
-        ints = np.where(np.isnan(arr), float(np.iinfo("int64").min), arr).astype("int64")
-        return ints.view(unit)
-
-    return conv
+def _keep(c: Column | None) -> Column | None:
+    return c
 
 
 def _isin_values_df(session, spec) -> SparkDataFrame:

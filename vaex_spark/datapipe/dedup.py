@@ -429,49 +429,37 @@ def _verified_jaccard(pairs, sets_df, id_col: str, threshold: float):
     return _jaccard_join(pruned, sets_df, id_col, threshold)
 
 
-def _jaccard_join(pairs, sets_df, id_col: str, threshold: float):
-    """Verify join: bring both sides' (__set, __n) to each candidate
-    pair, score the exact Jaccard rounded to 6 decimals, keep pairs at
-    or above ``threshold``.  Returns (id_a, id_b, jaccard)."""
+def _jaccard_join(pairs, sets_df, id_col: str, threshold: float | None):
+    """The one Jaccard contract of every verify tail: bring both sides'
+    (__set, __n) to each candidate pair, score the exact Jaccard
+    rounded to 6 decimals, keep pairs whose ROUNDED value is at or
+    above ``threshold`` (every pair when it is None).  Returns
+    (id_a, id_b, jaccard)."""
     a, b = sets_df.alias("a"), sets_df.alias("b")
     jac = F.round(_union_jaccard(F.col("a.__n"), F.col("b.__n"),
                                  F.col("a.__set"), F.col("b.__set")), 6)
-    return (pairs
-            .join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
-            .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
-            .select("id_a", "id_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
+    out = (pairs
+           .join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
+           .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
+           .select("id_a", "id_b", jac.alias("jaccard")))
+    return out if threshold is None else out.filter(F.col("jaccard") >= threshold)
 
 
 def ngram_jaccard(df, pairs: SparkDataFrame | None = None, text_col: str = "text",
                   id_col: str = "doc_id", shingle_k: int = 5,
                   threshold: float | None = None) -> SparkDataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (LSH verification).
+    """Exact shingle-set Jaccard for candidate pairs (LSH verification),
+    rounded to 6 decimals like every verify tail (``_jaccard_join``);
+    ``threshold=None`` keeps every pair.
 
-    With pairs=None, verifies minhash_lsh_candidates output.  The join
-    brings each side's shingle set to the pair; the union (and the
-    size identity |A∩B| = |A|+|B|−|A∪B|) are codegen'd."""
+    With pairs=None, verifies minhash_lsh_candidates output."""
     sdf = _spread(_sdf(df).select(F.col(id_col), F.col(text_col)))
     if pairs is None:
         pairs = minhash_lsh_candidates(df, text_col=text_col, id_col=id_col, shingle_k=shingle_k)
     sets_df = sdf.select(F.col(id_col),
                          F.array_distinct(shingles(text_col, k=shingle_k)).alias("__set"))
     sets_df = sets_df.select(F.col(id_col), "__set", F.size("__set").alias("__n"))
-    a = sets_df.alias("a")
-    b = sets_df.alias("b")
-    out = (pairs
-           .join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
-           .join(b, pairs["id_b"] == F.col(f"b.{id_col}")))
-    if threshold is not None:
-        # size-ratio prune before the per-pair union — sound, see
-        # _size_ratio_ok
-        out = out.filter(_size_ratio_ok(F.col("a.__n"), F.col("b.__n"), threshold))
-    out = out.select("id_a", "id_b",
-                     _union_jaccard(F.col("a.__n"), F.col("b.__n"),
-                                    F.col("a.__set"), F.col("b.__set")).alias("jaccard"))
-    if threshold is not None:
-        out = out.filter(F.col("jaccard") >= threshold)
-    return out
+    return _jaccard_join(pairs, sets_df, id_col, threshold)
 
 
 def near_dup_pairs(df, text_col: str = "text", id_col: str = "doc_id",

@@ -40,6 +40,7 @@ from .rowid import ROW_ID, bounded_window, with_row_id
 from ..colname import qcol as _fcol  # shared non-identifier quoting
 from ..dataframe import DataFrame, _like, _same_kind
 from ..plan import range_partition_count
+from ..temporal import stat_input, stat_output
 
 
 _PID = "__pid"
@@ -553,98 +554,11 @@ class Rolling:
                       and self.window >= _PREFIX_FRAME_MIN_WINDOW)
 
         def make(c, w):
-            is_ts = is_bool = is_iv = False
             try:
                 dt = self.df.data_type(c)
-                is_ts = dt.startswith("timestamp") or dt == "date"
-                is_iv = dt.startswith("interval")
-                is_bool = dt == "boolean"
             except Exception:
-                pass
-            # numpy 0/1 parity for boolean moments — the same class as
-            # the r12 scalar/binby/groupby `_bool_as_int` fix; Spark's
-            # sum(boolean) is a DATATYPE_MISMATCH (r13 judge fuzz:
-            # rolling was the one moment surface left out).  min/max/
-            # collect_list keep the raw bool (Spark handles those).
-            col0 = (_fcol(c).cast("int")
-                    if is_bool and kind in ("sum", "mean", "std", "var")
-                    else _fcol(c))
-            if (is_ts or is_iv) and kind in ("mean", "std", "var", "sum"):
-                # temporal parity (r13): rolling moments over a
-                # timestamp column compute on epoch micros (Spark's
-                # avg(timestamp) silently yields epoch SECONDS as a
-                # double; sum/stddev are type errors) — mean converts
-                # back to timestamp, std to a day-time interval
-                # (timedelta64 in pandas); var/sum stay float µs.
-                # DATE columns join via the timestamp cast (r14);
-                # INTERVAL (timedelta64) columns via the epoch anchor
-                # (no interval→µs cast exists), mean/sum converting
-                # back to intervals (r14).
-                # sum/mean numerators are exact decimal(38,0): an
-                # int64 frame sum wraps silently at ~5,400 timestamps
-                # (one epoch ~1.7e15 µs) and ANSI-on raises (r14).
-                from ..temporal import interval_to_us, us_to_interval
-                if is_iv:
-                    src = interval_to_us(_fcol(c))
-                    _mean_back = _dsum_back = us_to_interval
-                else:
-                    src = F.unix_micros(_fcol(c).cast("timestamp"))
-
-                    def _mean_back(us_col):
-                        return F.timestamp_micros(
-                            F.round(us_col).cast("long"))
-
-                    def _dsum_back(dec_col):
-                        return dec_col
-                dsrc = src.cast("decimal(38,0)")
-                if use_prefix:
-                    # r14: temporal frames previously always slid —
-                    # O(n·w), hours at 1e8 × w=100k — while the
-                    # numeric twin had the O(n) growing-frame rewrite.
-                    # Same difference-of-prefixes here; sum/mean stay
-                    # EXACT (decimal has no cancellation), var/std
-                    # reuse the numeric path's first-value centering
-                    # (variance is shift-invariant; epoch µs as raw
-                    # doubles would cancel catastrophically).
-                    grow = w.rowsBetween(Window.unboundedPreceding, after)
-                    prev = w.rowsBetween(Window.unboundedPreceding,
-                                         -(before + 1))
-
-                    def fsum(e):
-                        return (F.sum(e).over(grow)
-                                - F.coalesce(F.sum(e).over(prev), F.lit(0)))
-
-                    n = F.count(src).over(grow) - F.count(src).over(prev)
-                    if kind == "sum":
-                        val = _dsum_back(fsum(dsrc))
-                    elif kind == "mean":
-                        val = _mean_back(F.try_divide(fsum(dsrc), n))
-                    else:
-                        x = src.cast("double")
-                        off = F.first(x, ignorenulls=True).over(
-                            w.rowsBetween(Window.unboundedPreceding,
-                                          Window.currentRow))
-                        xc = x - off
-                        m1, m2 = fsum(xc), fsum(xc * xc)
-                        v = F.greatest(
-                            F.try_divide(m2 - F.try_divide(m1 * m1, n), n),
-                            F.lit(0.0))
-                        val = (v if kind == "var"
-                               else us_to_interval(F.sqrt(v)))
-                    return F.struct(F.when(n >= self.window, val).alias("v"),
-                                    n.alias(need_n))
-                frame = w.rowsBetween(-before, after)
-                n = F.count(src).over(frame)
-                if kind == "mean":
-                    val = _mean_back(F.avg(src).over(frame))
-                elif kind == "std":
-                    val = us_to_interval(F.stddev_pop(src).over(frame))
-                elif kind == "var":
-                    val = F.var_pop(src).over(frame)
-                else:
-                    val = _dsum_back(F.sum(dsrc).over(frame))
-                return F.struct(F.when(n >= self.window, val).alias("v"),
-                                n.alias(need_n))
+                dt = None
+            src = stat_input(_fcol(c), dt, kind)
             if use_prefix:
                 grow = w.rowsBetween(Window.unboundedPreceding, after)
                 prev = w.rowsBetween(Window.unboundedPreceding, -(before + 1))
@@ -653,17 +567,19 @@ class Rolling:
                     return (F.sum(e).over(grow)
                             - F.coalesce(F.sum(e).over(prev), F.lit(0)))
 
-                n = (F.count(col0).over(grow)
-                     - F.count(col0).over(prev))
+                n = (F.count(src).over(grow)
+                     - F.count(src).over(prev))
                 if kind == "count":
                     val = n
                 elif kind == "sum":
-                    val = fsum(col0)
+                    val = fsum(src)
                 elif kind == "mean":
-                    # try_divide: all-null frames (n = 0) stay null under ANSI
-                    val = F.try_divide(fsum(col0), n)
+                    # the numerator is the rule's sum input (exact
+                    # decimal µs for temporal columns); try_divide:
+                    # all-null frames (n = 0) stay null under ANSI
+                    val = F.try_divide(fsum(stat_input(_fcol(c), dt, "sum")), n)
                 else:  # var / std from moment sums (population, ddof=0)
-                    x = col0.cast("double")
+                    x = src.cast("double")
                     # Center on the partition's first non-null value:
                     # variance is shift-invariant, and the raw moment
                     # form m2 - m1^2/n cancels catastrophically when
@@ -684,10 +600,10 @@ class Rolling:
                     val = F.sqrt(v) if kind == "std" else v
             else:
                 frame = w.rowsBetween(-before, after)
-                val = fn(col0).over(frame)
-                n = F.count(col0).over(frame)
+                val = fn(src).over(frame)
+                n = F.count(src).over(frame)
             # null (or later drop) incomplete windows; stash the count
-            return F.struct(F.when(n >= self.window, val).alias("v"),
+            return F.struct(F.when(n >= self.window, stat_output(val, dt, kind)).alias("v"),
                             n.alias(need_n))
 
         # compute value+count in one struct, then unpack so trim can
@@ -773,49 +689,28 @@ def rolling_range(df, window_seconds, on, column=None, agg="mean",
     epoch = F.unix_timestamp(F.col(on)).alias("__ts")
     cols = [column] if isinstance(column, str) else column
     win = int(window_seconds)
-    # numpy 0/1 parity for boolean moments, and the temporal contract
-    # (same classes as Rolling._apply — r14 closed BOTH gaps here:
-    # sum(boolean) was a DATATYPE_MISMATCH, and mean over a timestamp
-    # VALUE column silently returned epoch-seconds doubles instead of
-    # timestamps).  Timestamps compute over epoch micros; mean converts
-    # back to timestamp below, sum stays the epoch-µs sum.
-    dtypes0 = dict(df.dtypes)
+    dtypes = dict(df.dtypes)
 
-    def _is_ts(c):
-        dt = dtypes0.get(c, "")
-        return dt.startswith("timestamp") or dt == "date"
+    def rolled(c, w):
+        """Output column of ``c`` over window spec ``w``.  sum/mean/count
+        are [unboundedPreceding, 0] minus [unboundedPreceding, -window]
+        (values <= t-window, i.e. the complement of (t-window, t]), each
+        GROWING frame maintained incrementally; min/max have no inverse
+        and keep the sliding frame."""
+        if agg not in ("sum", "mean", "count"):
+            return fn(F.col(c)).over(w.rangeBetween(-(win - 1), 0))
+        dt = dtypes.get(c)
+        src = stat_input(_fcol(c), dt, agg)
+        grow = w.rangeBetween(Window.unboundedPreceding, 0)
+        prev = w.rangeBetween(Window.unboundedPreceding, -win)
+        n = F.count(src).over(grow) - F.count(src).over(prev)
+        if agg == "count":
+            return n
+        total = (F.sum(src).over(grow)
+                 - F.coalesce(F.sum(src).over(prev), F.lit(0)))
+        return stat_output(total if agg == "sum" else F.try_divide(total, n),
+                           dt, agg)
 
-    def _is_iv(c):
-        return dtypes0.get(c, "").startswith("interval")
-
-    def _src(c):
-        if agg in ("sum", "mean"):
-            if dtypes0.get(c) == "boolean":
-                return _fcol(c).cast("int")
-            if _is_ts(c):
-                src = F.unix_micros(_fcol(c).cast("timestamp"))
-                # sum: exact in decimal(38,0) — int64 wraps at ~5,400
-                # timestamps per frame, ANSI-on raises (r14)
-                return src.cast("decimal(38,0)") if agg == "sum" else src
-            if _is_iv(c):
-                # intervals: native F.sum(interval) exists but clashes
-                # with the growing-frame coalesce(…, 0) and raises on
-                # int64 overflow — same epoch-anchored µs/decimal route
-                # as everywhere else in the temporal contract (r14)
-                from ..temporal import interval_to_us
-                src = interval_to_us(_fcol(c))
-                return src.cast("decimal(38,0)") if agg == "sum" else src
-        return _fcol(c)
-
-    def _post(c, val):
-        if agg == "mean" and _is_ts(c):
-            return F.timestamp_micros(F.round(val).cast("long"))
-        if agg in ("sum", "mean") and _is_iv(c):
-            # µs back to an interval, exact over the full range
-            # (out-of-range sums null under BOTH ANSI modes)
-            from ..temporal import us_to_interval
-            return us_to_interval(val)
-        return val
     global_bucketed = False
     if partition_by is not None:
         parts = (partition_by if isinstance(partition_by, (list, tuple))
@@ -828,19 +723,14 @@ def rolling_range(df, window_seconds, on, column=None, agg="mean",
         if bounds["hi"] is None or bounds["lo"] is None:
             # empty frame or all-null timestamps: no buckets to size.
             # Return the input with the output columns attached as
-            # nulls (a window over no/null rows aggregates to null).
+            # nulls (a window over no/null rows aggregates to null),
+            # typed by the analyzer from the very column a non-empty
+            # frame computes (no job runs).
+            probe = Window.orderBy(epoch)
             out = df
-            dtypes = dict(df.dtypes)
             for c in cols:
-                if agg == "count":
-                    typ = "long"
-                elif agg in ("min", "max"):
-                    typ = dtypes[c]
-                elif agg == "mean":
-                    typ = "timestamp" if _is_ts(c) else "double"
-                else:  # sum: ask the analyzer (long for ints, etc.)
-                    typ = df.select(F.sum(_src(c)).alias("__t")) \
-                        .schema["__t"].dataType.simpleString()
+                typ = df.select(rolled(c, probe).alias("__t")) \
+                    .schema["__t"].dataType.simpleString()
                 out = out.withColumn(f"{c}_rolling_{agg}",
                                      F.lit(None).cast(typ))
             return out
@@ -862,29 +752,8 @@ def rolling_range(df, window_seconds, on, column=None, agg="mean",
         w = Window.partitionBy("__tbk").orderBy(epoch)
         global_bucketed = True
     out = df
-    if agg in ("sum", "mean", "count"):
-        # same no-retraction trap as row frames: Spark's sliding RANGE
-        # frame re-aggregates on every lower-bound move, O(rows-in-
-        # frame)/row over dense data.  Rewrite as the difference of two
-        # GROWING frames — [unboundedPreceding, 0] minus
-        # [unboundedPreceding, -window] (values <= t-window, i.e. the
-        # complement of (t-window, t]) — each maintained incrementally.
-        grow = w.rangeBetween(Window.unboundedPreceding, 0)
-        prev = w.rangeBetween(Window.unboundedPreceding, -win)
-        for c in cols:
-            n = (F.count(_src(c)).over(grow)
-                 - F.count(_src(c)).over(prev))
-            if agg == "count":
-                val = n
-            else:
-                ssum = (F.sum(_src(c)).over(grow)
-                        - F.coalesce(F.sum(_src(c)).over(prev), F.lit(0)))
-                val = ssum if agg == "sum" else F.try_divide(ssum, n)
-            out = out.withColumn(f"{c}_rolling_{agg}", _post(c, val))
-    else:  # min/max have no inverse; keep the sliding frame
-        frame = w.rangeBetween(-(win - 1), 0)
-        for c in cols:
-            out = out.withColumn(f"{c}_rolling_{agg}", fn(F.col(c)).over(frame))
+    for c in cols:
+        out = out.withColumn(f"{c}_rolling_{agg}", rolled(c, w))
     if global_bucketed:
         out = out.filter(~F.col("__tdon")).drop("__tbk", "__tdon")
     return out
