@@ -746,6 +746,90 @@ def test_pack_sequences_nextfit(spark):
     assert by_doc[4] == by_doc[5] or by_doc[4] != by_doc[3]
 
 
+
+def _planted_near_dup_docs(seed=7):
+    """(corpus, batch) text lists: batch docs are corpus docs with their
+    last m = 0..20 of 30 words swapped, so their Jaccards against the
+    corpus, (26 - m) / (26 + m), span 0.13..1 and hit 0.3 exactly at
+    m = 14; plus unrelated docs, a short doc and a NULL."""
+    rng = np.random.default_rng(seed)
+    vocab = [f"w{i}" for i in range(400)]
+    corpus = [" ".join(rng.choice(vocab, 30)) for _ in range(12)]
+    batch = []
+    for m in range(21):
+        words = corpus[m % len(corpus)].split()
+        for pos in range(30 - m, 30):
+            words[pos] = f"x{m}_{pos}"
+        batch.append(" ".join(words))
+    batch += [" ".join(rng.choice(vocab, 25)) for _ in range(5)]
+    batch += ["w1 w2 w3", None]
+    return corpus, batch
+
+
+def _exact_jaccard6(a, b, k=5):
+    """The verify tail's Jaccard in pure Python: k-word shingle sets of
+    the lowercased, whitespace-collapsed words, rounded half-up to 6
+    decimals like Spark's round()."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def sets(t):
+        w = " ".join(t.lower().split()).split(" ")
+        return ({" ".join(w)} if len(w) < k else
+                {" ".join(w[i:i + k]) for i in range(len(w) - k + 1)})
+    sa, sb = sets(a), sets(b)
+    j = (len(sa) + len(sb) - len(sa | sb)) / len(sa | sb)
+    return float(Decimal(j).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def test_near_dup_against_corpus_matches_brute_force(spark):
+    """The screen keeps exactly the batch rows whose exact 6-decimal
+    Jaccard against every corpus doc is below the threshold, with and
+    without a persisted corpus index.  One row per band (r=1, b=64)
+    puts LSH recall at ~1 - 0.7^64 for J >= 0.3, so the test pins the
+    verify tail, not banding luck."""
+    import vaex_spark as vs
+    from vaex_spark.datapipe.dedup import (corpus_lsh_index,
+                                           near_dup_against_corpus)
+    ctexts, btexts = _planted_near_dup_docs()
+    corpus = vs.from_arrays(doc_id=np.arange(len(ctexts)), text=ctexts,
+                            spark=spark)
+    bids = np.arange(100, 100 + len(btexts))
+    batch = vs.DataFrame(spark.createDataFrame(
+        list(zip(bids.tolist(), btexts)), "doc_id long, text string"))
+    params = dict(num_perm=64, num_bands=64)
+    index = corpus_lsh_index(corpus, **params).spark
+    best = {i: max((_exact_jaccard6(t, c) for c in ctexts), default=0.0)
+            if t is not None else 0.0 for i, t in zip(bids.tolist(), btexts)}
+    for threshold in (0.3, 0.5, 0.8):
+        want = sorted(i for i, j in best.items() if j < threshold)
+        assert 0 < len(want) < len(best), threshold
+        for ci in (None, index):
+            got = sorted(r["doc_id"] for r in near_dup_against_corpus(
+                batch, corpus, threshold=threshold, corpus_index=ci,
+                **params).spark.select("doc_id").collect())
+            assert got == want, (threshold, ci is None)
+
+
+def test_near_dup_against_corpus_builds_candidates_once(spark):
+    """The candidate pairs feed one join: the physical plan holds one
+    (__bid, __cid) aggregate exchange, not one per use."""
+    import re
+
+    import vaex_spark as vs
+    from vaex_spark.datapipe.dedup import (corpus_lsh_index,
+                                           near_dup_against_corpus)
+    ctexts, btexts = _planted_near_dup_docs()
+    corpus = vs.from_arrays(doc_id=np.arange(len(ctexts)), text=ctexts,
+                            spark=spark)
+    batch = vs.from_arrays(doc_id=np.arange(100, 105), text=btexts[:5],
+                           spark=spark)
+    out = near_dup_against_corpus(batch, corpus,
+                                  corpus_index=corpus_lsh_index(corpus).spark)
+    plan = out.spark._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"hashpartitioning\(__bid#\d+L?, __cid#\d+L?",
+                          plan)) == 1, plan
+
+
 def test_exact_dedup_strategies_agree(spark):
     import vaex_spark as vs
     from vaex_spark.datapipe import dedup
@@ -1141,6 +1225,37 @@ def test_curate_stream_derived_sinks_match_out(spark, tmp_path):
     ids, fps, state, lsh = _stream_sinks(spark, tmp_path, 1)
     assert ids == want[1]
     assert state == fps and lsh == ids
+
+
+
+def test_curate_stream_jobs_carry_phase_labels(spark, tmp_path):
+    """Every job of a batch is labelled in Spark's status store with
+    the batch phase that ran it (open, out and one label per derived
+    sink), appended to the stream's own description."""
+    import pandas as pd
+    from vaex_spark import streaming as st
+
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    src = tmp_path / "src"
+    src.mkdir()
+    common = dict(out_dir=str(tmp_path / "out"), state_dir=str(tmp_path / "state"),
+                  fuzzy_lsh_dir=str(tmp_path / "lsh"), sketch_dir=str(tmp_path / "sk"),
+                  checkpoint=str(tmp_path / "ckpt"), min_quality=None,
+                  repetition_filter=False)
+    for b in (0, 1):
+        # no two documents share a 5-word shingle, so batch 1 emits rows
+        texts = [" ".join(f"{w}{b}{i}" for w in words) for i in range(3)]
+        pd.DataFrame({"doc_id": [10 * b + i for i in range(3)], "source": "s",
+                      "text": texts}).to_parquet(src / f"b{b}.parquet")
+        q = st.curate_stream(st.open_stream(str(src), spark=spark), **common)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    descs = [jobs.apply(i).description() for i in range(jobs.size())]
+    descs = [d.get() for d in descs if d.isDefined()]
+    mine = [d for d in descs if f"runId = {q.runId}" in d]
+    phases = {d.rsplit("curate_stream batch 1: ", 1)[-1] for d in mine}
+    assert phases == {"open", "out", "state", "lsh", "sketch"}, mine
 
 
 def test_curate_stream_all_duplicate_batch_writes_nothing(spark, tmp_path):

@@ -659,6 +659,53 @@ def test_rolling_range_empty_frame_schema(rr_df, col, agg):
     assert empty[name] == full[name], (empty[name], full[name])
 
 
+
+# ------------------------------------------------- count of non-nulls
+# count(<col>) counts non-null values (and, for floats, non-NaN ones)
+# of every dtype on every surface; the NaN mask casts to double, which
+# is invalid on intervals, so temporal inputs skip it as _stat does
+_CNT_VALID = {  # 1 where row i holds a value
+    "b": [1, 0, 1, 1, 1, 0, 1, 1], "t": [0, 1, 1, 1, 1, 1, 0, 1],
+    "d": [1, 1, 0, 1, 1, 1, 1, 0], "td": [1, 1, 1, 0, 0, 1, 1, 1],
+    "x": [1, 0, 1, 1, 1, 1, 1, 0],  # row 1 null, row 7 NaN
+}
+
+
+@pytest.fixture(scope="module")
+def nulls_df(spark):
+    import datetime as dt
+    from pyspark.sql import types as T
+    schema = T.StructType([
+        T.StructField("i", T.LongType()),
+        T.StructField("b", T.BooleanType()),
+        T.StructField("t", T.TimestampType()),
+        T.StructField("d", T.DateType()),
+        T.StructField("td", T.DayTimeIntervalType()),
+        T.StructField("x", T.DoubleType())])
+    v = {"b": lambda i: i % 2 == 0,
+         "t": lambda i: dt.datetime(2024, 1, 1, i),
+         "d": lambda i: dt.date(2024, 3, 1 + i),
+         "td": lambda i: dt.timedelta(seconds=i - 3),
+         "x": lambda i: i * 0.5}
+
+    def cell(c, i):
+        if c == "x" and i == 7:
+            return float("nan")  # a value, not a null; count skips it
+        return v[c](i) if _CNT_VALID[c][i] else None
+    rows = [(i, *(cell(c, i) for c in _CNT_VALID)) for i in range(N)]
+    return vs.DataFrame(spark.createDataFrame(rows, schema))
+
+
+@pytest.mark.parametrize("col", list(_CNT_VALID))
+def test_count_non_null_every_dtype(nulls_df, col):
+    ok = np.array(_CNT_VALID[col])
+    assert int(nulls_df.count(col)) == ok.sum()
+    got = np.asarray(nulls_df.count(col, selection=[None, "i >= 4"]))
+    assert got.tolist() == [ok.sum(), ok[4:].sum()]
+    grid = np.asarray(nulls_df.count(col, binby="i", shape=2, limits=[0, 8]))
+    assert grid.tolist() == [ok[:4].sum(), ok[4:].sum()]
+
+
 # ------------------------------------------------- one rule, one probe
 @pytest.mark.parametrize("stat", ["mean", "std", "sum", "var", "skew"])
 def test_stat_reads_input_dtype_once(pdf, monkeypatch, stat):

@@ -1594,8 +1594,16 @@ class DataFrame:
     # each public stat: count/sum/mean/... (dataframe.py lines in SURVEY §2.5)
     def count(self, expression=None, binby=None, shape=128, limits=None,
               selection=None, delay=False, edges=False, progress=None):
+        try:
+            dt = None if expression is None else self.data_type(expression)
+        except Exception:
+            dt = None
+        # as in _stat: NaN only occurs in floating inputs, and isnan's
+        # double cast is invalid on intervals
+        drop = _keep if temporal_kind(dt) else _dropnan
+
         def make(c):
-            return F.count(F.lit(1)) if c is None else F.count(F.when(~(c.isNull() | _safe_isnan(c)), 1))
+            return F.count(F.lit(1)) if c is None else F.count(drop(c))
         return self._compute_agg(make, expression, binby, shape, limits, selection, delay, edges, progress=progress)
 
     def _stat_input(self, expression, stat, grid=False):

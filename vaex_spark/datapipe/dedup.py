@@ -1230,17 +1230,19 @@ def near_dup_against_corpus(batch, corpus, text_col: str = "text",
 
     The MinHash band tables of both sides share one seed family, so
     candidates come from a plain (band, bucket) equi-join — batch bands
-    against corpus bands, never a self-join of the union.  Only
-    candidate ids shuffle; texts are fetched per side by semi-join for
-    the exact-Jaccard verification.  The default banding (r=2, b=32)
-    puts per-pair recall at ~0.9999 for s >= 0.5, matching the
-    engine-independent oracle.  ``corpus_index`` accepts the persisted
+    against corpus bands, never a self-join of the union.  Then each
+    candidate is verified once: the distinct (batch id, corpus id)
+    pairs join the batch's shingle sets (built over the whole batch,
+    which the band table reads anyway) and the corpus texts by id, so
+    the corpus is touched only through candidate ids; survivors of the
+    size-ratio prune get the exact Jaccard.  The default banding
+    (r=2, b=32) puts per-pair recall at ~0.9999 for s >= 0.5, matching
+    the engine-independent oracle.  ``corpus_index`` accepts the persisted
     corpus_lsh_index table (built with the SAME parameters); without it
     the band table is derived in-plan, i.e. the whole corpus is
     re-hashed on every batch.
     """
     bsdf = _spread(_sdf(batch).select(F.col(id_col), F.col(text_col)))
-    csdf = _sdf(corpus).select(F.col(id_col), F.col(text_col))
 
     def band_table(sdf):  # stats-gated fast path, Column-form-identical
         return _banded_auto(sdf, id_col, text_col,
@@ -1248,9 +1250,9 @@ def near_dup_against_corpus(batch, corpus, text_col: str = "text",
 
     # no persists: a cached relation plans as its own nested AQE query
     # and would run the batch's whole upstream screen a second time
-    # beside the main plan.  Uncached, AQE's exchange reuse shares cand
-    # across its three uses (its rows are a deterministic set), and the
-    # call leaves nothing cached behind.
+    # beside the main plan.  Each relation has one use instead (the
+    # band table and the batch sets share the spread's exchange), and
+    # the call leaves nothing cached behind.
     bb = band_table(bsdf)
     if corpus_index is not None:
         cix = _sdf(corpus_index)
@@ -1275,36 +1277,37 @@ def near_dup_against_corpus(batch, corpus, text_col: str = "text",
                     f"parameters (or rebuild the index)")
         cb = cix.select(F.col(id_col), "band", "bucket")
     else:
-        # spread only when the corpus is minhashed here; with an index
-        # it is just semi-joined below to fetch candidate texts
-        csdf = _spread(csdf)
-        cb = band_table(csdf)
+        # spread only when the corpus is minhashed here; otherwise its
+        # texts are only fetched by candidate id below
+        cb = band_table(_spread(
+            _sdf(corpus).select(F.col(id_col), F.col(text_col))))
     cand = (bb.alias("b").join(cb.alias("c"),
                                on=[F.col("b.band") == F.col("c.band"),
                                    F.col("b.bucket") == F.col("c.bucket")])
             .select(F.col(f"b.{id_col}").alias("__bid"),
                     F.col(f"c.{id_col}").alias("__cid"))
             .distinct())
-    sets = lambda sdf, idc: sdf.select(  # noqa: E731
-        F.col(id_col).alias(idc),
-        F.array_distinct(shingles(text_col, k=shingle_k)).alias(f"__s_{idc}"))\
-        .select(idc, f"__s_{idc}", F.size(f"__s_{idc}").alias(f"__n_{idc}"))
-    # no .distinct() on the semi-join probe sides (r14, the q35 lesson
-    # applied here too): left_semi dedups by construction, so the
-    # projection of the cand relation probes directly — one
-    # aggregate exchange fewer per side at every scale
-    bsets = sets(bsdf.join(cand.select(F.col("__bid").alias(id_col)),
-                           on=id_col, how="left_semi"), "__bid")
-    csets = sets(csdf.join(cand.select(F.col("__cid").alias(id_col)),
-                           on=id_col, how="left_semi"), "__cid")
-    # r15: size-ratio prune before the per-pair array work + union-only
-    # jaccard (see _size_ratio_ok/_union_jaccard — values unchanged)
-    jac = _union_jaccard(F.col("__n___bid"), F.col("__n___cid"),
-                         F.col("__s___bid"), F.col("__s___cid"))
-    dupes = (cand.join(bsets, on="__bid").join(csets, on="__cid")
-             .filter(_size_ratio_ok(F.col("__n___bid"), F.col("__n___cid"),
-                                    threshold))
-             .filter(F.round(jac, 6) >= threshold)
+    # filter, then verify each candidate once: cand feeds ONE join
+    bsets = bsdf.select(
+        F.col(id_col).alias("__bid"),
+        F.array_distinct(shingles(text_col, k=shingle_k)).alias("__sb")
+    ).select("__bid", "__sb", F.size("__sb").alias("__nb"))
+    ctext = _sdf(corpus).select(F.col(id_col).alias("__cid"),
+                                F.col(text_col).alias("__ct"))
+    nb, sb = F.col("__nb"), F.col("__sb")
+
+    def verified(sc):
+        # r15: size-ratio prune before the per-pair array work +
+        # union-only jaccard (see _size_ratio_ok/_union_jaccard)
+        nc = F.size(sc)
+        return (_size_ratio_ok(nb, nc, threshold)
+                & (F.round(_union_jaccard(nb, nc, sb, sc), 6) >= threshold))
+
+    # the corpus set is let-bound: the filter lands in the join
+    # condition, where each plain reference would re-shingle the text
+    dupes = (cand.join(bsets, on="__bid").join(ctext, on="__cid")
+             .filter(_let(F.array_distinct(shingles("__ct", k=shingle_k)),
+                          verified))
              .select(F.col("__bid").alias(id_col)).distinct())
     out = _sdf(batch).join(dupes, on=id_col, how="left_anti")
     return _wrap(out)

@@ -13,6 +13,7 @@ swapping in kafka/kinesis sources is a config change.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 
 from pyspark.sql import Column
@@ -269,6 +270,21 @@ def _concurrently(spark, fns) -> list:
     return [f.result() for f in futures]
 
 
+@contextlib.contextmanager
+def _job_description(spark, text: str):
+    """Set the calling thread's Spark job description for the block and
+    restore the one it had after.  Local properties are per thread, so
+    threads of :func:`_concurrently` each set their own."""
+    sc = spark.sparkContext
+    key = "spark.job.description"
+    prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(key, prev)
+
+
 def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
                   text_col: str = "text", id_col: str = "doc_id",
                   sketch_dir: str | None = None,
@@ -334,10 +350,19 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
     clean run's contents.  Overwrite mode is dynamic per write, so the
     session's ``partitionOverwriteMode`` is never touched.  The screens
     hold no ``persist``: each cached relation would plan as its own
-    nested query and re-run the screens upstream of it, while uncached
-    plans share their repeated subtrees through AQE's exchange reuse,
-    and a long-running stream leaves nothing in
+    nested query and re-run the screens upstream of it.  Instead each
+    screen computes each of its relations once (the near-dup screen
+    builds its candidate pairs and batch band table once and verifies
+    each pair once), and a long-running stream leaves nothing in
     ``vaex_spark.cache``'s operator-persist registry.
+
+    Every job of a batch is labelled in Spark's status store (UI,
+    REST API, event log): its description is the stream's own
+    (query name, id, runId, batch) followed by a line
+    ``curate_stream batch N: <phase>``, where the phase is
+    ``compact``, ``open`` (the prior dirs' schema inference), ``out``
+    (the screens and the out write) or the derived sink being written
+    (``state``, ``lsh``, ``winnow``, ``vector``, ``sketch``).
 
     ``fuzzy_lsh_dir`` additionally enables CROSS-batch NEAR-dup dedup:
     each batch's survivors are checked against every earlier batch's
@@ -424,6 +449,18 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
         from ..datapipe.curate import curate
         spark = bdf.sparkSession
         bid = int(batch_id)
+        # every job of the batch carries its phase after the stream's
+        # own description (query name, id, runId, batch)
+        stream_desc = spark.sparkContext.getLocalProperty("spark.job.description")
+
+        def phase(name):
+            label = f"curate_stream batch {bid}: {name}"
+            return _job_description(
+                spark, f"{stream_desc}\n{label}" if stream_desc else label)
+
+        def labelled(name, fn):
+            with phase(name):
+                return fn()
 
         def has_parts(d):
             # through _Fs, not os.path: file://, hdfs:// and s3a:// dirs
@@ -445,12 +482,13 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
              .partitionBy("__batch_id").parquet(d))
 
         if compact_every and bid > 0 and bid % int(compact_every) == 0:
-            for d in (out_dir, state_dir, fuzzy_lsh_dir, winnow_index_dir,
-                      vector_index_dir, sketch_dir):
-                # an empty listing means never-written, and compaction
-                # would be a no-op anyway
-                if d is not None and _Fs(spark, d).listdir():
-                    compact_index_dir(spark, d)
+            with phase("compact"):
+                for d in (out_dir, state_dir, fuzzy_lsh_dir, winnow_index_dir,
+                          vector_index_dir, sketch_dir):
+                    # an empty listing means never-written, and
+                    # compaction would be a no-op anyway
+                    if d is not None and _Fs(spark, d).listdir():
+                        compact_index_dir(spark, d)
         # each open infers the dir's schema (one job) and keeps the
         # parameter stamps the screens check, so open them together
         dirs = {k_: d for k_, d in (("state", state_dir), ("lsh", fuzzy_lsh_dir),
@@ -459,47 +497,49 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
                 if d is not None and has_parts(d)}
         if "lsh" in dirs:
             dirs["out"] = out_dir
-        priors = dict(zip(dirs, _concurrently(
-            spark, [functools.partial(prior, d) for d in dirs.values()])))
+        with phase("open"):
+            priors = dict(zip(dirs, _concurrently(
+                spark, [functools.partial(prior, d) for d in dirs.values()])))
 
-        fresh = curate(DataFrame(bdf), text_col=text_col, id_col=id_col, **kw)
-        if "state" in priors:
-            fresh = D.exact_dedup_incremental(
-                fresh, DataFrame(priors["state"]), text_col=text_col,
-                id_col=id_col)
-        else:
-            fresh = D.exact_dedup(fresh, text_col=text_col, id_col=id_col)
-        fp = {**dict(shingle_k=5, num_perm=64, num_bands=32),
-              **(fuzzy_params or {})}
-        if "lsh" in priors:
-            fresh = D.near_dup_against_corpus(
-                fresh, DataFrame(priors["out"]), text_col=text_col,
-                id_col=id_col, threshold=float(fuzzy_threshold),
-                corpus_index=DataFrame(priors["lsh"]), **fp)
-        if winnow_index_dir is not None:
-            from ..datapipe import text as T
-            wp = {**dict(k=5, window=4, fp_type="hash", max_df=256),
-                  **(winnow_params or {})}
-            if "winnow" in priors:
-                fresh = T.winnow_dedup_against_corpus(
-                    fresh, text_col=text_col, id_col=id_col,
-                    min_shared=int(winnow_min_shared),
-                    corpus_index=priors["winnow"], **wp)
-        if vector_index_dir is not None:
-            from ..datapipe import similarity as SIM
-            if vec_col not in fresh._spark_df().columns:
-                raise ValueError(
-                    f"vector_index_dir= needs the stream to carry "
-                    f"{vec_col!r}; columns: {fresh._spark_df().columns}")
-            vp = {**dict(bits=6, n_tables=8, seed=42),
-                  **(vector_params or {})}
-            if "vector" in priors:
-                fresh = SIM.embedding_dedup_against_corpus(
-                    fresh, vec_col=vec_col, id_col=id_col,
-                    threshold=float(vector_threshold),
-                    corpus_index=priors["vector"], **vp)
-        fsdf = fresh._spark_df()
-        write(fsdf, out_dir)
+        with phase("out"):
+            fresh = curate(DataFrame(bdf), text_col=text_col, id_col=id_col, **kw)
+            if "state" in priors:
+                fresh = D.exact_dedup_incremental(
+                    fresh, DataFrame(priors["state"]), text_col=text_col,
+                    id_col=id_col)
+            else:
+                fresh = D.exact_dedup(fresh, text_col=text_col, id_col=id_col)
+            fp = {**dict(shingle_k=5, num_perm=64, num_bands=32),
+                  **(fuzzy_params or {})}
+            if "lsh" in priors:
+                fresh = D.near_dup_against_corpus(
+                    fresh, DataFrame(priors["out"]), text_col=text_col,
+                    id_col=id_col, threshold=float(fuzzy_threshold),
+                    corpus_index=DataFrame(priors["lsh"]), **fp)
+            if winnow_index_dir is not None:
+                from ..datapipe import text as T
+                wp = {**dict(k=5, window=4, fp_type="hash", max_df=256),
+                      **(winnow_params or {})}
+                if "winnow" in priors:
+                    fresh = T.winnow_dedup_against_corpus(
+                        fresh, text_col=text_col, id_col=id_col,
+                        min_shared=int(winnow_min_shared),
+                        corpus_index=priors["winnow"], **wp)
+            if vector_index_dir is not None:
+                from ..datapipe import similarity as SIM
+                if vec_col not in fresh._spark_df().columns:
+                    raise ValueError(
+                        f"vector_index_dir= needs the stream to carry "
+                        f"{vec_col!r}; columns: {fresh._spark_df().columns}")
+                vp = {**dict(bits=6, n_tables=8, seed=42),
+                      **(vector_params or {})}
+                if "vector" in priors:
+                    fresh = SIM.embedding_dedup_against_corpus(
+                        fresh, vec_col=vec_col, id_col=id_col,
+                        threshold=float(vector_threshold),
+                        corpus_index=priors["vector"], **vp)
+            fsdf = fresh._spark_df()
+            write(fsdf, out_dir)
         # the derived sinks read back the partition just written instead
         # of re-running the screened plan once per sink; the explicit
         # schema skips the footer-inference job.  A batch that emitted
@@ -509,19 +549,21 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
             return
         emitted = DataFrame(spark.read.schema(fsdf.schema)
                             .parquet(out_dir.rstrip("/") + "/" + part))
-        sinks = [lambda: write(D.corpus_fingerprints(
-            emitted, text_col=text_col)._spark_df(), state_dir)]
+        # (phase, write) per derived sink; each write runs on its own
+        # thread under its own phase label
+        sinks = [("state", lambda: write(D.corpus_fingerprints(
+            emitted, text_col=text_col)._spark_df(), state_dir))]
         if fuzzy_lsh_dir is not None:
-            sinks.append(lambda: write(D.corpus_lsh_index(
+            sinks.append(("lsh", lambda: write(D.corpus_lsh_index(
                 emitted, text_col=text_col, id_col=id_col, **fp)._spark_df(),
-                fuzzy_lsh_dir))
+                fuzzy_lsh_dir)))
         if winnow_index_dir is not None:
             wbuild = {**dict(k=5, window=4, fp_type="hash"),
                       **{k_: v for k_, v in (winnow_params or {}).items()
                          if k_ in ("k", "window", "fp_type")}}
-            sinks.append(lambda: write(T.corpus_winnow_index(
+            sinks.append(("winnow", lambda: write(T.corpus_winnow_index(
                 emitted, text_col=text_col, id_col=id_col, **wbuild)._spark_df(),
-                winnow_index_dir))
+                winnow_index_dir)))
         if vector_index_dir is not None:
             # key-filter to the BUILD signature, mirroring the winnow
             # branch above: a screen-only key in vector_params
@@ -532,9 +574,9 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
             vbuild = {**dict(bits=6, n_tables=8, seed=42),
                       **{k_: v for k_, v in (vector_params or {}).items()
                          if k_ in ("bits", "n_tables", "seed", "dim")}}
-            sinks.append(lambda: write(SIM.corpus_vector_index(
+            sinks.append(("vector", lambda: write(SIM.corpus_vector_index(
                 emitted, vec_col=vec_col, id_col=id_col, **vbuild),
-                vector_index_dir))
+                vector_index_dir)))
         if sketch_dir is not None:
             # per-batch HLL sketch of the EMITTED documents: a few-KB
             # mergeable state row per group, same idempotent-by-batch-id
@@ -542,10 +584,11 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
             # + unions the whole dir for running per-group distinct
             # counts without rescanning any document batch.
             from ..datapipe.sketches import distinct_sketch
-            sinks.append(lambda: write(distinct_sketch(
+            sinks.append(("sketch", lambda: write(distinct_sketch(
                 emitted, text_col, group_col=sketch_group)._spark_df(),
-                sketch_dir))
-        _concurrently(spark, sinks)
+                sketch_dir)))
+        _concurrently(spark, [functools.partial(labelled, name, fn)
+                              for name, fn in sinks])
 
     return run_foreach_batch(stream_df, do_batch, checkpoint=checkpoint)
 
