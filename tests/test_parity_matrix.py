@@ -591,6 +591,32 @@ def test_shift_bool_fill(pdf):
     assert [bool(v) for v in got] == want
 
 
+def test_shift_bool_fill_none(pdf):
+    out = pdf.shift(1, column="b", order_key="i")
+    got = out.to_pandas_df().sort_values("i").b.tolist()
+    assert pd.isna(got[0])
+    assert [bool(v) for v in got[1:]] == BOOLS[:-1].tolist()
+
+
+# ------------------------- percentile_approx/mode/minmax/sum_moment
+def test_percentile_approx_and_mode_bool(pdf):
+    assert float(pdf.percentile_approx("b", 50)) in (0.0, 1.0)
+    assert bool(pdf.mode("b")) is True  # 5 of the 8 values are True
+
+
+def test_minmax_timestamp(pdf):
+    lo, hi = pdf.minmax("t")
+    assert (_as_us_datetime(lo), _as_us_datetime(hi)) == (MU[0], MU[-1])
+
+
+def test_groupby_sum_moment_timestamp(pdf):
+    out = pdf.groupby("g", agg={"m2": vagg.sum_moment("t", 2)},
+                      sort=True).to_pandas_df()
+    for k in (0, 1):
+        want = float((MU[GROUPS == k] ** 2).sum())  # Σ µs²
+        assert abs(float(out["m2"][k]) - want) <= 1e-9 * want
+
+
 # ------------------------------------ rolling spread over date/interval
 @pytest.mark.parametrize("width", [3, 64])
 @pytest.mark.parametrize("col", ["d", "td"])
@@ -662,8 +688,8 @@ def test_rolling_range_empty_frame_schema(rr_df, col, agg):
 
 # ------------------------------------------------- count of non-nulls
 # count(<col>) counts non-null values (and, for floats, non-NaN ones)
-# of every dtype on every surface; the NaN mask casts to double, which
-# is invalid on intervals, so temporal inputs skip it as _stat does
+# of every dtype on every surface; the NaN mask comes from the type
+# (vaex_spark/missing.py), never from a cast, which is invalid on intervals
 _CNT_VALID = {  # 1 where row i holds a value
     "b": [1, 0, 1, 1, 1, 0, 1, 1], "t": [0, 1, 1, 1, 1, 1, 0, 1],
     "d": [1, 1, 0, 1, 1, 1, 1, 0], "td": [1, 1, 1, 0, 0, 1, 1, 1],

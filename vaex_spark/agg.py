@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .missing import nan_to_null
 from .temporal import stat_input, stat_output
 
 
@@ -41,20 +42,22 @@ class AggDescriptor:
             return self.short_name
         return f"{self.expression}_{self.short_name}"
 
-    def _input(self, df) -> Column | None:
-        if self.expression is None or self.expression == "*":
-            col = None
-        else:
+    def _input(self, df, typed=False) -> tuple[Column | None, str | None]:
+        """(aggregation input, Spark type), NaN masked to null by the
+        missing-value rule (missing.py) for the statistics (``typed``)
+        and under ``dropnan`` — the one type read.  Aggregates skip null."""
+        col = dt = None
+        if not (self.expression is None or self.expression == "*"):
             col = df._to_expr(self.expression).col
-        if col is not None:
-            if self.dropnan:
-                col = F.when(F.isnan(col.cast("double")) & col.isNotNull(), None).otherwise(col)
-            if self.dropmissing:
-                pass  # aggregates skip nulls natively
+            try:
+                dt = df.data_type(self.expression) if typed or self.dropnan else None
+            except Exception:
+                pass
+            col = nan_to_null(col, dt)
         sel = df._selection_col(self.selection) if self.selection is not None else None
         if sel is not None:
             col = F.when(sel, col if col is not None else F.lit(1))
-        return col
+        return col, dt
 
     def to_column(self, df) -> Column:
         raise NotImplementedError
@@ -96,75 +99,70 @@ class _BinaryAgg(AggDescriptor):
 
 class _SimpleAgg(AggDescriptor):
     def __init__(self, short_name, fn, expression, star_ok=False,
-                 numeric=False, **kw):
+                 stat=False, **kw):
         super().__init__(short_name, expression, **kw)
         self.fn = fn
         self.star_ok = star_ok
-        # numeric aggregators take their input from the statistic-input
-        # rule (temporal.py): booleans as 0/1, temporal columns as µs
-        self.numeric = numeric
+        # statistic aggregators read NaN as missing (missing.py) and take
+        # their input from the statistic-input rule (temporal.py):
+        # booleans as 0/1, temporal columns as µs
+        self.stat = stat
 
     def to_column(self, df):
-        c = self._input(df)
+        c, dt = self._input(df, typed=self.stat)
         if c is None:
             if not self.star_ok:
                 raise ValueError(f"agg.{self.short_name} needs an expression")
             return F.count(F.lit(1))
-        if self.numeric:
-            try:
-                dt = df.data_type(self.expression)
-            except Exception:
-                dt = None
+        if self.stat:
             stat = self.short_name
             return stat_output(self.fn(stat_input(c, dt, stat)), dt, stat)
         return self.fn(c)
 
 
 def count(expression=None, selection=None, **kw):
-    def fn(c):
-        return F.count(c)
-    d = _SimpleAgg("count", fn, expression, star_ok=True, selection=selection, **kw)
-    return d
+    return _SimpleAgg("count", F.count, expression, star_ok=True,
+                      selection=selection, stat=True, **kw)
 
 
 def sum(expression, selection=None, **kw):  # noqa: A001 — vaex name
-    return _SimpleAgg("sum", F.sum, expression, selection=selection, numeric=True, **kw)
+    return _SimpleAgg("sum", F.sum, expression, selection=selection, stat=True, **kw)
 
 
 def mean(expression, selection=None, **kw):
-    return _SimpleAgg("mean", F.avg, expression, selection=selection, numeric=True, **kw)
+    return _SimpleAgg("mean", F.avg, expression, selection=selection, stat=True, **kw)
 
 
 def min(expression, selection=None, **kw):  # noqa: A001
-    return _SimpleAgg("min", F.min, expression, selection=selection, **kw)
+    return _SimpleAgg("min", F.min, expression, selection=selection, stat=True, **kw)
 
 
 def max(expression, selection=None, **kw):  # noqa: A001
-    return _SimpleAgg("max", F.max, expression, selection=selection, **kw)
+    return _SimpleAgg("max", F.max, expression, selection=selection, stat=True, **kw)
 
 
 def std(expression, ddof=0, selection=None, **kw):
     return _SimpleAgg("std", F.stddev_pop if ddof == 0 else F.stddev_samp,
-                      expression, selection=selection, numeric=True, **kw)
+                      expression, selection=selection, stat=True, **kw)
 
 
 def var(expression, ddof=0, selection=None, **kw):
     return _SimpleAgg("var", F.var_pop if ddof == 0 else F.var_samp,
-                      expression, selection=selection, numeric=True, **kw)
+                      expression, selection=selection, stat=True, **kw)
 
 
 def skew(expression, selection=None, **kw):
-    return _SimpleAgg("skew", F.skewness, expression, selection=selection, numeric=True, **kw)
+    return _SimpleAgg("skew", F.skewness, expression, selection=selection, stat=True, **kw)
 
 
 def kurtosis(expression, selection=None, **kw):
-    return _SimpleAgg("kurtosis", F.kurtosis, expression, selection=selection, numeric=True, **kw)
+    return _SimpleAgg("kurtosis", F.kurtosis, expression, selection=selection, stat=True, **kw)
 
 
 def sum_moment(expression, moment, selection=None, **kw):
     """agg.py:546 _sum_moment — Σ x^k building block."""
     return _SimpleAgg("sum_moment", lambda c: F.sum(F.pow(c, moment)),
-                      expression, selection=selection, numeric=True, **kw)
+                      expression, selection=selection, stat=True, **kw)
 
 
 class _NUniqueAgg(AggDescriptor):
@@ -177,7 +175,7 @@ class _NUniqueAgg(AggDescriptor):
         self.count_null = count_null
 
     def to_column(self, df) -> Column:
-        base = F.countDistinct(self._input(df))
+        base = F.countDistinct(self._input(df)[0])
         if self.count_null:
             raw = df._to_expr(self.expression).col
             sel = df._selection_col(self.selection) if self.selection is not None else None
@@ -214,7 +212,7 @@ class _PandasAgg(AggDescriptor):
         # pandas_udf infers GROUPED_AGG from Series -> scalar type hints
         _wrapped.__annotations__ = {"s": pd.Series, "return": float}
         udf = pandas_udf(_wrapped, returnType=self.return_type)
-        return udf(self._input(df))
+        return udf(self._input(df)[0])
 
 
 def pandas_agg(fn, expression, return_type="double", selection=None):
@@ -276,8 +274,9 @@ def list(expression, selection=None, dropna=False):  # noqa: A001
     """collect per group.  Spark's collect_list drops nulls; vaex's
     default (dropna=False) keeps them, so that path wraps values in
     structs (null-safe) and unwraps after collection."""
-    if dropna:
-        return _SimpleAgg("list", F.collect_list, expression, selection=selection)
+    if dropna:  # NA is null or NaN: mask NaN, collect_list skips null
+        return _SimpleAgg("list", F.collect_list, expression,
+                          selection=selection, dropnan=True)
 
     def fn(c):
         wrapped = F.collect_list(F.struct(c.alias("v")))

@@ -35,7 +35,8 @@ from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import functions as F
 
 from .colname import qcol as _qcol
-from .expression import Expression, _safe_isnan
+from . import missing
+from .expression import Expression
 from .temporal import stat_input, stat_post, temporal_kind
 
 ROW_ID = "__row_id"
@@ -661,8 +662,14 @@ class DataFrame:
         return self.get_column_names()
 
     def data_type(self, name) -> str:
-        expr = self[name] if isinstance(name, str) else name
-        return self._spark_df(filtered=False).select(expr.col.alias("_t")).schema[0].dataType.simpleString()
+        return self._data_types([name])[0]
+
+    def _data_types(self, names) -> list[str]:
+        """Spark type names of several expressions, read in one analysis."""
+        cols = [(self[n] if isinstance(n, str) else self._to_expr(n)).col.alias(f"_t{i}")
+                for i, n in enumerate(names)]
+        schema = self._spark_df(filtered=False).select(*cols).schema
+        return [f.dataType.simpleString() for f in schema]
 
     @property
     def schema(self) -> dict[str, str]:
@@ -982,16 +989,10 @@ class DataFrame:
                            name: str = "default") -> None:
         """dataframe.py:5061 — select rows with no NA in the given
         columns (drop_nan -> NaN counts as NA; drop_masked -> null)."""
-        cond = None
-        for cname in (column_names or self.get_column_names()):
-            c = self._to_expr(cname).col
-            ok = F.lit(True)
-            if drop_masked:
-                ok = ok & c.isNotNull()
-            if drop_nan:
-                ok = ok & ~_safe_isnan(c)
-            cond = ok if cond is None else (cond & ok)
-        self.select(Expression(self, cond), mode=mode, name=name)
+        test = missing.isna if drop_masked else missing.isnan
+        bad = (self._na_rows(test, column_names, typed=drop_nan)
+               if drop_nan or drop_masked else F.lit(False))
+        self.select(Expression(self, ~bad), mode=mode, name=name)
 
     def get_selection(self, name: str = "default"):
         return self.selections.get(name)
@@ -1087,45 +1088,35 @@ class DataFrame:
                 out._base = out._base.drop(n)
         return out
 
+    def _na_rows(self, test, column_names, how="any", typed=True) -> Column:
+        """Rows where ``test(col, dtype)`` of the missing-value rule holds
+        on any (all) of the columns, their types read in one pass
+        (untyped, ``missing.isna`` is the plain null test)."""
+        cols = column_names or self.get_column_names()
+        dtypes = self._data_types(cols) if typed else [None] * len(cols)
+        tests = [test(self[c].col, dt) for c, dt in zip(cols, dtypes)]
+        return functools.reduce(Column.__and__ if how == "all" else Column.__or__, tests)
+
     def dropna(self, column_names=None, how: str = "any") -> "DataFrame":
         """dataframe.py:5101 — drop rows where any (all) of the columns
         are NA (null or NaN)."""
-        cols = column_names or self.get_column_names()
-        conds = [self[c].isna().col for c in cols]
-        bad = conds[0]
-        for c in conds[1:]:
-            bad = (bad & c) if how == "all" else (bad | c)
-        return self.filter(Expression(self, ~bad))
+        return self.filter(Expression(self, ~self._na_rows(missing.isna, column_names, how)))
 
     def dropmissing(self, column_names=None, how: str = "any") -> "DataFrame":
-        cols = column_names or self.get_column_names()
-        conds = [F.col(c).isNull() if c not in self.virtual_columns else self.virtual_columns[c].col.isNull() for c in cols]
-        bad = conds[0]
-        for c in conds[1:]:
-            bad = (bad & c) if how == "all" else (bad | c)
-        return self.filter(Expression(self, ~bad))
+        return self.filter(Expression(self, ~self._na_rows(missing.isna, column_names, how, typed=False)))
 
     def dropnan(self, column_names=None, how: str = "any") -> "DataFrame":
-        cols = column_names or self.get_column_names()
-        conds = [self[c].isnan().col for c in cols]
-        bad = conds[0]
-        for c in conds[1:]:
-            bad = (bad & c) if how == "all" else (bad | c)
-        return self.filter(Expression(self, ~bad))
+        return self.filter(Expression(self, ~self._na_rows(missing.isnan, column_names, how)))
 
     def dropinf(self, column_names=None) -> "DataFrame":
-        cols = column_names or self.get_column_names()
-        conds = [(F.abs(self[c].col.cast("double")) == float("inf")) for c in cols]
-        bad = conds[0]
-        for c in conds[1:]:
-            bad = bad | c
-        return self.filter(Expression(self, ~bad))
+        return self.filter(Expression(self, ~self._na_rows(missing.isinf, column_names)))
 
     def fillna(self, value, column_names=None) -> "DataFrame":
         """dataframe.py:4888 — df-level NA fill (null *and* NaN)."""
         out = self._copy()
-        for c in (column_names or self.get_column_names()):
-            out[c] = self[c].fillna(value)
+        cols = column_names or self.get_column_names()
+        for c, dt in zip(cols, self._data_types(cols)):
+            out[c] = Expression(self, missing.FAMILY["fillna"](self[c].col, dt, F.lit(value)))
         return out
 
     def head(self, n: int = 10) -> "DataFrame":
@@ -1598,12 +1589,9 @@ class DataFrame:
             dt = None if expression is None else self.data_type(expression)
         except Exception:
             dt = None
-        # as in _stat: NaN only occurs in floating inputs, and isnan's
-        # double cast is invalid on intervals
-        drop = _keep if temporal_kind(dt) else _dropnan
 
         def make(c):
-            return F.count(F.lit(1)) if c is None else F.count(drop(c))
+            return F.count(F.lit(1)) if c is None else F.count(missing.nan_to_null(c, dt))
         return self._compute_agg(make, expression, binby, shape, limits, selection, delay, edges, progress=progress)
 
     def _stat_input(self, expression, stat, grid=False):
@@ -1624,12 +1612,10 @@ class DataFrame:
         grid = binby is not None
         expr, dt = self._stat_input(expression, stat, grid=grid)
         temporal = temporal_kind(dt) is not None
-        # NaN only occurs in floating inputs (and isnan's double cast is
-        # invalid on intervals); empty temporal bins read NaN/NaT, not a
-        # fake 0 — a sum of nothing stays 0
-        drop = _keep if temporal else _dropnan
+        # NaN is missing (missing.py); empty temporal bins read NaN/NaT,
+        # not a fake 0 — a sum of nothing stays 0
         return self._compute_agg(
-            lambda c: make(drop(c)), expr, binby, shape, limits, selection,
+            lambda c: make(missing.nan_to_null(c, dt)), expr, binby, shape, limits, selection,
             delay, edges, progress=progress,
             post=stat_post(dt, stat, grid=grid),
             fill=np.nan if temporal and stat != "sum" else 0.0)
@@ -1655,9 +1641,8 @@ class DataFrame:
     def minmax(self, expression, binby=None, shape=128, limits=None, selection=None, delay=False):
         if binby is None:
             expr, dt = self._stat_input(expression, "min")
-            _nan = _keep if temporal_kind(dt) else _dropnan
-            cols = [F.min(_nan(self._agg_expr_col(expr, selection))),
-                    F.max(_nan(self._agg_expr_col(expr, selection)))]
+            c = missing.nan_to_null(self._agg_expr_col(expr, selection), dt)
+            cols = [F.min(c), F.max(c)]
             if delay:
                 return self.executor.schedule(cols, unwrap=False)
             row = self._spark_df().agg(cols[0].alias("_lo"), cols[1].alias("_hi")).collect()[0]
@@ -1690,9 +1675,11 @@ class DataFrame:
 
     def nunique(self, expression, dropna: bool = False, selection=None, delay=False, **kw):
         raw = self._to_expr(expression).col
+        # dropna drops NA: nulls below, NaN through the missing-value rule
+        dt = self.data_type(expression) if dropna else None
 
         def make(c, sel=None):
-            base = F.countDistinct(c)
+            base = F.countDistinct(missing.nan_to_null(c, dt))
             if not dropna:
                 # count a null only if a SELECTED row is actually null —
                 # the masked input can't distinguish "unselected" from
@@ -1898,7 +1885,7 @@ class DataFrame:
         if dropna or dropmissing:
             d = d.filter(F.col("_v").isNotNull())
         if dropna or dropnan:
-            d = d.filter(~_safe_isnan(F.col("_v")))
+            d = d.filter(~missing.isnan(F.col("_v"), self.data_type(expr)))
         if limit is not None:
             rows = d.limit(limit + 1).collect()
             if len(rows) > limit:
@@ -1923,7 +1910,7 @@ class DataFrame:
             sdf = sdf.filter(sel)
         out = sdf.groupBy(expr.col.alias("_v")).count()
         if dropna:
-            out = out.filter(F.col("_v").isNotNull())
+            out = out.filter(~missing.isna(F.col("_v"), self.data_type(expr)))
         pdf = out.orderBy(F.col("count").asc() if ascending else F.col("count").desc()).toPandas()
         import pandas as pd
         return pd.Series(pdf["count"].values, index=pdf["_v"].values)
@@ -1946,7 +1933,7 @@ class DataFrame:
         """agg.py:679 describe — struct of count/NA/mean/std/min/max per
         column; booleans and temporal columns follow the statistic-input
         rule (temporal.py), min/max stay native."""
-        dtypes = {c: self.data_type(c) for c in self.get_column_names()}
+        dtypes = self.schema
         cols = [c for c, dt in dtypes.items()
                 if strings or not dt.startswith("string")]
         aggs = []
@@ -1954,17 +1941,14 @@ class DataFrame:
         # themselves contain "__" can't garble the parse-back below
         for i, c in enumerate(cols):
             col, dt = self[c].col, dtypes[c]
-            non_float = dt.startswith(
-                ("string", "timestamp", "array", "struct", "boolean",
-                 "date", "binary", "interval"))
-            na = col.isNull() if non_float else (col.isNull() | _safe_isnan(col))
-            aggs += [F.count(col).alias(f"_d{i}__count"),
-                     F.count(F.when(na, 1)).alias(f"_d{i}__na")]
+            x = missing.nan_to_null(col, dt)
+            aggs += [F.count(x).alias(f"_d{i}__count"),
+                     F.count(F.when(missing.isna(col, dt), 1)).alias(f"_d{i}__na")]
             if temporal_kind(dt) or not dt.startswith(
                     ("string", "array", "struct", "binary")):
-                aggs += [F.avg(stat_input(col, dt, "mean")).alias(f"_d{i}__mean"),
-                         F.stddev_pop(stat_input(col, dt, "std")).alias(f"_d{i}__std"),
-                         F.min(col).alias(f"_d{i}__min"), F.max(col).alias(f"_d{i}__max")]
+                aggs += [F.avg(stat_input(x, dt, "mean")).alias(f"_d{i}__mean"),
+                         F.stddev_pop(stat_input(x, dt, "std")).alias(f"_d{i}__std"),
+                         F.min(x).alias(f"_d{i}__min"), F.max(x).alias(f"_d{i}__max")]
         row = self._spark_df().agg(*aggs).collect()[0].asDict()
         import pandas as pd
         out = {}
@@ -2831,18 +2815,6 @@ def _np_values(raw: list) -> np.ndarray:
     except Exception:
         pass
     return vals
-
-
-def _dropnan(c: Column | None) -> Column | None:
-    """vaex aggregations skip NaN (agg_sum.cpp:132 NaN-safe); Spark
-    sum/avg would propagate NaN — mask it to null."""
-    if c is None:
-        return c
-    return F.when(_safe_isnan(c), F.lit(None)).otherwise(c)
-
-
-def _keep(c: Column | None) -> Column | None:
-    return c
 
 
 def _isin_values_df(session, spec) -> SparkDataFrame:

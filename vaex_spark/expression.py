@@ -9,11 +9,8 @@ so the "string algebra" becomes real logical-plan algebra and Catalyst's
 whole-stage codegen replaces the chunked evaluator.  We keep the string
 front-end too (:mod:`vaex_spark.expresso` compiles Python-syntax strings
 to Columns) for API parity and for JSON-serializable state.
-
-NaN-vs-missing policy (SURVEY §1.2): vaex distinguishes float NaN,
-"missing" (null), and NA = NaN | null.  Spark keeps null and NaN distinct
-inside double columns, so the triple maps exactly:
-``isnan -> F.isnan``, ``ismissing -> isNull``, ``isna -> isnan | isNull``.
+The NaN/missing/NA family asks the missing-value rule
+(:mod:`vaex_spark.missing`) on the expression's Spark type.
 """
 
 from __future__ import annotations
@@ -23,6 +20,7 @@ from typing import Any
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import missing
 from .expresso import try_div as _try_div, try_mod as _try_mod
 
 
@@ -254,24 +252,21 @@ class Expression:
                 self.col, F.lit(item + 1 if item >= 0 else item)))
         return self._wrap(self.col.getField(item))
 
-    # -- null / NaN family (functions.py:147-268) ------------------------
-    def isna(self):
-        return self._wrap(self.col.isNull() | _safe_isnan(self.col))
+    # -- null / NaN family (functions.py:147-268), NaN and NA by the
+    # missing-value rule on this expression's type ----------------------
+    def _na(self, name, *args):
+        return self._wrap(missing.FAMILY[name](self.col, self.dtype, *args))
 
-    def notna(self):
-        return self._wrap(~(self.col.isNull() | _safe_isnan(self.col)))
+    def isna(self): return self._na("isna")
+    def notna(self): return self._na("notna")
+    def isnan(self): return self._na("isnan")
+    def notnan(self): return self._na("notnan")
 
     def ismissing(self):
         return self._wrap(self.col.isNull())
 
     def notmissing(self):
         return self._wrap(self.col.isNotNull())
-
-    def isnan(self):
-        return self._wrap(_safe_isnan(self.col))
-
-    def notnan(self):
-        return self._wrap(~_safe_isnan(self.col))
 
     _ISIN_LITERAL_MAX = 1024
 
@@ -300,15 +295,13 @@ class Expression:
 
     def fillna(self, value):
         """Replace NA (null or NaN) with ``value`` (expression.py:1087)."""
-        c = self.col
-        return self._wrap(F.when(c.isNull() | _safe_isnan(c), F.lit(value)).otherwise(c))
+        return self._na("fillna", F.lit(value))
 
     def fillmissing(self, value):
         return self._wrap(F.coalesce(self.col, F.lit(value)))
 
     def fillnan(self, value):
-        c = self.col
-        return self._wrap(F.when(_safe_isnan(c), F.lit(value)).otherwise(c))
+        return self._na("fillnan", F.lit(value))
 
     # -- conversion ------------------------------------------------------
     _ASTYPE = {
@@ -371,7 +364,7 @@ class Expression:
         if missing_value is not None:
             c = F.when(self.col.isNull(), F.lit(missing_value))
         if nan_value is not None:
-            cond = F.isnan(self.col)
+            cond = missing.isnan(self.col, self.dtype)
             c = F.when(cond, F.lit(nan_value)) if c is None else c.when(cond, F.lit(nan_value))
         for k, v in mapper.items():
             cond = self.col == F.lit(k)
@@ -407,9 +400,6 @@ class Expression:
         return StructAccessor(self)
 
     # -- statistics shortcuts (expression.py:854-1077) -------------------
-    def _stat(self, name, **kwargs):
-        return getattr(self.df, name)(self, **kwargs)
-
     def count(self, **kw): return self.df.count(self, **kw)
     def sum(self, **kw):
         if self._isin_spec is not None and self._col is None and not kw:
@@ -675,15 +665,6 @@ def astype_column(df, col: Column, dtype) -> Column:
             f"column (supported: D, s, m, h, ms, us, ns)")
     b = col.cast("bigint")
     return F.timestamp_micros(b if scale == 1 else b * F.lit(scale))
-
-
-def _safe_isnan(c: Column) -> Column:
-    """F.isnan errors on non-numeric types; guard with a try at plan time
-    is impossible, so we rely on double/float inputs.  For non-floating
-    columns NaN cannot occur: callers use `ismissing` there.  We use a
-    null-safe wrapper: isnan(cast) on numeric, false otherwise is decided
-    by Catalyst's type coercion (isnan(string) casts -> double)."""
-    return F.isnan(c.cast("double")) & c.isNotNull()
 
 
 def _sympy_diff(text: str, var: str, simplify: bool = True) -> str:

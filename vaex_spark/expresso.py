@@ -208,8 +208,17 @@ class _Compiler:
         from .expression import astype_column
         return astype_column(self.df, self._as_col(args[0]), args[1])
 
+    def _lookup(self, name):
+        """Registry function ``name``; a NaN/NA-family name is built by the
+        missing-value rule on its argument's type, read from self.df."""
+        from . import missing
+        from .functions import registry
+        if name not in missing.FAMILY:
+            return registry.lookup(name)
+        return lambda x, *a, **k: missing.FAMILY[name](
+            self._as_col(x), self.df.data_type(self._as_col(x)), *a, **k)
+
     def visit_Call(self, node):
-        from .functions import registry as fn_registry
         args = [self.visit(a) for a in node.args]
         kwargs = {kw.arg: self.visit(kw.value) for kw in node.keywords}
         func = node.func
@@ -217,26 +226,26 @@ class _Compiler:
             name = func.id
             if name == "astype":
                 return self._astype(args)
-            fn = fn_registry.lookup(name)
+            fn = self._lookup(name)
             if fn is None:
                 self.err(node, f"unknown function {name!r}")
             return fn(*args, **kwargs)
         if isinstance(func, ast.Attribute):
             target = self.visit(func.value)
             if isinstance(target, _Namespace) and target.name.startswith("np"):
-                fn = fn_registry.lookup(func.attr)
+                fn = self._lookup(func.attr)
                 if fn is None:
                     self.err(node, f"unknown np function {func.attr!r}")
                 return fn(*args, **kwargs)
             if isinstance(target, _Namespace) and target.base is not None:
                 # x.str.lower() — accessor chain compiled flat
-                fn = fn_registry.lookup(f"{target.name}_{func.attr}") or fn_registry.lookup(func.attr)
+                fn = self._lookup(f"{target.name}_{func.attr}") or self._lookup(func.attr)
                 if fn is None:
                     self.err(node, f"unknown accessor function {func.attr!r}")
                 return fn(target.base, *args, **kwargs)
             if func.attr == "astype":
                 return self._astype([target] + list(args))
-            fn = fn_registry.lookup(func.attr)
+            fn = self._lookup(func.attr)
             if fn is not None:
                 return fn(target, *args, **kwargs)
             self.err(node, f"unknown method {func.attr!r}")

@@ -108,8 +108,6 @@ registry.register("arctan2", lambda y, x: F.atan2(_c(y), _c(x)))
 registry.register("maximum", lambda a, b: F.greatest(_c(a), _c(b)))
 registry.register("minimum", lambda a, b: F.least(_c(a), _c(b)))
 registry.register("round", lambda x, n=0: F.round(_c(x), int(n)))
-registry.register("isfinite", lambda x: ~(F.isnan(_c(x).cast("double")) | (F.abs(_c(x)) == float("inf"))) & _c(x).isNotNull())
-registry.register("isinf", lambda x: F.abs(_c(x).cast("double")) == float("inf"))
 registry.register("power", lambda a, b: F.pow(_c(a), _c(b)))
 registry.register("pi", lambda: F.lit(math.pi))
 registry.register("deg2rad", lambda x: F.radians(_c(x)))
@@ -172,16 +170,11 @@ def dot_product(a, b):
         F.lit(0.0), lambda acc, v: acc + v)
 
 
-# --- null / NaN family (flat names usable in strings) -------------------
-registry.register("isna", lambda x: _c(x).isNull() | (F.isnan(_c(x).cast("double")) & _c(x).isNotNull()))
-registry.register("notna", lambda x: ~(_c(x).isNull() | (F.isnan(_c(x).cast("double")) & _c(x).isNotNull())))
-registry.register("isnan", lambda x: F.isnan(_c(x).cast("double")) & _c(x).isNotNull())
-registry.register("notnan", lambda x: ~(F.isnan(_c(x).cast("double")) & _c(x).isNotNull()))
+# --- null family (flat names usable in strings); the NaN/NA names need
+# their argument's type and resolve in expresso (NA_FAMILY) ------------
 registry.register("ismissing", lambda x: _c(x).isNull())
 registry.register("notmissing", lambda x: _c(x).isNotNull())
 registry.register("fillmissing", lambda x, v: F.coalesce(_c(x), _c(v)))
-registry.register("fillnan", lambda x, v: F.when(F.isnan(_c(x).cast("double")) & _c(x).isNotNull(), _c(v)).otherwise(_c(x)))
-registry.register("fillna", lambda x, v: F.when(_c(x).isNull() | (F.isnan(_c(x).cast("double")) & _c(x).isNotNull()), _c(v)).otherwise(_c(x)))
 
 
 # --- list/array (functions.py:110-142, 2716-2735) ----------------------

@@ -25,13 +25,20 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from . import agg as vagg
+from . import missing
 
 
 class RowLimitException(Exception):
     pass
 
 
-class BinnerTime:
+class _Grouper:
+    def default_name(self):
+        sql = getattr(self.expression, "_sql", None)
+        return sql if sql else str(self.expression)
+
+
+class BinnerTime(_Grouper):
     """groupby.py:64-137 — datetime resampling grouper.
 
     ``every=1`` maps to ``date_trunc`` (no pre-pass).  ``every>1``
@@ -131,12 +138,8 @@ class BinnerTime:
         epoch = _dt.datetime(1970, 1, 1, tzinfo=getattr(t, "tzinfo", None))
         return int((t - epoch).total_seconds() // secs)
 
-    def default_name(self):
-        sql = getattr(self.expression, "_sql", None)
-        return sql if sql else str(self.expression)
 
-
-class GrouperLimited:
+class GrouperLimited(_Grouper):
     """groupby.py:468 — group on a fixed value set; the rest -> 'other'."""
 
     def __init__(self, expression, values, other_value="other", df=None):
@@ -148,12 +151,8 @@ class GrouperLimited:
         c = df._to_expr(self.expression).col
         return F.when(c.isin(self.values), c).otherwise(F.lit(self.other_value)).alias(name)
 
-    def default_name(self):
-        sql = getattr(self.expression, "_sql", None)
-        return sql if sql else str(self.expression)
 
-
-class Binner:
+class Binner(_Grouper):
     """Scalar range binner (groupby.py:45): key = bin center."""
 
     def __init__(self, expression, minimum, maximum, bins, df=None):
@@ -168,10 +167,6 @@ class Binner:
         idx = F.when(c == self.hi, self.bins - 1).otherwise(idx)
         center = F.lit(self.lo) + (idx + 0.5) * F.lit(width)
         return center.alias(name)
-
-    def default_name(self):
-        sql = getattr(self.expression, "_sql", None)
-        return sql if sql else str(self.expression)
 
 
 class GroupBy:
@@ -376,18 +371,18 @@ class GroupBy:
     def describe(self, expression=None):
         """groupby.py:987 — per-group summary statistics columns
         (<e>_count, <e>_count_na, <e>_mean, <e>_std, <e>_min, <e>_max)."""
-        from .expression import _safe_isnan
         if expression is None:
             keys = {str(b) for b in self.by if isinstance(b, str)}
-            expression = [c for c in self.df.get_column_names()
-                          if c not in keys and not self.df.data_type(c).startswith(
-                              ("string", "timestamp", "array", "struct"))]
-        exprs = [expression] if isinstance(expression, str) else list(expression)
+            dtypes = {c: dt for c, dt in self.df.schema.items()
+                      if c not in keys and not dt.startswith(
+                          ("string", "timestamp", "array", "struct"))}
+        else:
+            exprs = [expression] if isinstance(expression, str) else list(expression)
+            dtypes = dict(zip(exprs, self.df._data_types(exprs)))
         spec = {}
-        for e in exprs:
-            c = self.df._to_expr(e).col
+        for e, dt in dtypes.items():
             spec[f"{e}_count"] = vagg.count(e)
-            spec[f"{e}_count_na"] = F.count(F.when(c.isNull() | _safe_isnan(c), 1))
+            spec[f"{e}_count_na"] = F.count(F.when(missing.isna(self.df._to_expr(e).col, dt), 1))
             spec[f"{e}_mean"] = vagg.mean(e)
             spec[f"{e}_std"] = vagg.std(e)
             spec[f"{e}_min"] = vagg.min(e)

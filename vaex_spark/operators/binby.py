@@ -21,6 +21,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from ..missing import nan_to_null
+
 
 def _limit_float(v) -> float:
     """Bin-limit value as a float on the SAME scale ``bin_index_col``'s
@@ -50,24 +52,24 @@ def _limit_float(v) -> float:
 
 
 def _bin_col(df, b):
-    """Binnable column for dimension ``b``: DATE columns pre-cast to
-    timestamp, because Spark's date→double cast is NULL (not an error —
-    probed live on 4.1.2), which would silently send every row to the
-    null bin; timestamp→double is epoch seconds and matches
-    ``_limit_float``'s scale."""
+    """Binnable column for dimension ``b``: NaN as null (missing.py).
+    DATE columns pre-cast to timestamp, because Spark's date→double cast
+    is NULL (not an error — probed live on 4.1.2), which would silently
+    send every row to the null bin; timestamp→double is epoch seconds
+    and matches ``_limit_float``'s scale."""
     c = df._to_expr(b).col
     try:
         dt = df.data_type(b)
-        if dt == "date":
-            return c.cast("timestamp")
-        if dt.startswith("interval"):
-            # interval→double cast is invalid; epoch-anchor to SECONDS
-            # (float) to match _limit_float's timedelta scale (r14)
-            from ..temporal import interval_to_us
-            return interval_to_us(c) / F.lit(1e6)
     except Exception:
-        pass
-    return c
+        return c
+    if dt == "date":
+        return c.cast("timestamp")
+    if dt.startswith("interval"):
+        # interval→double cast is invalid; epoch-anchor to SECONDS
+        # (float) to match _limit_float's timedelta scale (r14)
+        from ..temporal import interval_to_us
+        return interval_to_us(c) / F.lit(1e6)
+    return nan_to_null(c, dt)
 
 
 def compute_limits(df, expression, value=None, selection=None, delay=False):
@@ -141,12 +143,10 @@ def _normalize_limits(df, binby, limits):
         else:
             out[i] = compute_limits(df, b, spec)
     if minmax_dims:
-        from ..dataframe import _dropnan
         delayed = []
         for i in minmax_dims:
             c = _bin_col(df, binby[i])
-            delayed.append(df.executor.schedule(
-                [F.min(_dropnan(c)), F.max(_dropnan(c))], unwrap=False))
+            delayed.append(df.executor.schedule([F.min(c), F.max(c)], unwrap=False))
         df.executor.execute()
         for i, d in zip(minmax_dims, delayed):
             lo, hi = d.get()
@@ -167,7 +167,7 @@ def bin_index_col(col, lo, hi, shape, edges: bool):
     # top edge inclusive (vaex clips x==hi into the last bin)
     data_bin = F.when(col.cast("double") == F.lit(float(hi)), F.lit(shape - 1)).otherwise(scaled)
     if edges:
-        return (F.when(col.isNull() | F.isnan(col.cast("double")), F.lit(0))
+        return (F.when(col.isNull(), F.lit(0))
                 .when(data_bin < 0, F.lit(1))
                 .when(data_bin >= shape, F.lit(shape + 2))
                 .otherwise(data_bin + 2))
