@@ -1,5 +1,7 @@
 """Dedup / similarity / text / multimodal / streaming operators."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -830,17 +832,6 @@ def test_near_dup_against_corpus_builds_candidates_once(spark):
                           plan)) == 1, plan
 
 
-def test_exact_dedup_strategies_agree(spark):
-    import vaex_spark as vs
-    from vaex_spark.datapipe import dedup
-    texts = ["a b", "A  b", "c", "d", "a b", "c"]
-    df = vs.from_arrays(doc_id=list(range(6)), text=texts, spark=spark)
-    for keep in ("min", "max"):
-        w = sorted(dedup.exact_dedup(df, keep=keep, strategy="window").to_pandas_df()["doc_id"])
-        a = sorted(dedup.exact_dedup(df, keep=keep, strategy="agg").to_pandas_df()["doc_id"])
-        assert w == a, keep
-
-
 def test_tfidf_terms(spark):
     import math
     import vaex_spark as vs
@@ -1016,16 +1007,25 @@ def test_near_dup_against_corpus_drops_fuzzy_matches(spark):
 
 
 def test_exact_dedup_strategies_agree(spark):
-    """window / agg / minby / auto must select identical rows."""
+    """window / minby / auto select identical rows under keep=min and
+    keep=max, on a frame with normalized duplicates and on the
+    documents table; an unknown strategy raises."""
     import vaex_spark as vs
     from vaex_spark.datapipe.dedup import exact_dedup
+    small = vs.from_arrays(doc_id=list(range(6)), spark=spark,
+                           text=["a b", "A  b", "c", "d", "a b", "c"])
     docs = vs.open("/root/testdata/sf0.001/documents.parquet", spark=spark)
-    results = {}
-    for s in ("window", "agg", "minby", "auto"):
-        got = exact_dedup(docs, strategy=s)
-        results[s] = sorted(r["doc_id"] for r in
-                            got.spark.select("doc_id").collect())
-    assert results["window"] == results["agg"] == results["minby"] == results["auto"]
+    want = {"min": [0, 2, 3], "max": [3, 4, 5]}
+    for df in (small, docs):
+        for keep in ("min", "max"):
+            got = {s: sorted(exact_dedup(df, keep=keep, strategy=s)
+                             .to_pandas_df()["doc_id"])
+                   for s in ("window", "minby", "auto")}
+            assert got["window"] == got["minby"] == got["auto"], (keep, got)
+            if df is small:
+                assert got["window"] == want[keep], (keep, got)
+    with pytest.raises(ValueError, match="strategy"):
+        exact_dedup(small, strategy="agg")
 
 
 def test_streaming_curation_matches_batch(spark, tmp_path):
@@ -1855,7 +1855,7 @@ def test_exact_dedup_quality_survivor(spark):
         text=["aa", "AA", "aa", "bb", "bb", "cc"],
         q=[0.1, 0.9, 0.9, 0.5, 0.5, 0.2],
         spark=spark)
-    for strat in ("window", "agg", "minby"):
+    for strat in ("window", "minby"):
         out = sorted(r["doc_id"] for r in
                      exact_dedup(df, quality_col="q", strategy=strat)
                      .spark.collect())
@@ -3650,6 +3650,133 @@ def test_fingerprint_table_normalize_stamp(spark, tmp_path):
     # legacy table with mismatched normalize silently misses the dup -
     # exactly the hazard the stamp closes for new artifacts
     assert sorted(kept2.to_pandas_df()["doc_id"]) == [10, 11]
+
+
+def _spark_footer(d) -> str:
+    """The Spark schema JSON in the footer of one parquet file under d."""
+    import glob
+
+    import pyarrow.parquet as pq
+    f = sorted(glob.glob(str(d) + "/*.parquet"))[0]
+    return pq.read_schema(f).metadata[
+        b"org.apache.spark.sql.parquet.row.metadata"].decode()
+
+
+def test_index_stamp_footer_format(spark, docs, tmp_path):
+    """Each index family's stamp as it sits in the parquet footer, byte
+    for byte (key order and JSON types included): indexes already on
+    disk keep validating only while this holds.  The checker returns
+    the same stamp from the read-back schema."""
+    import json
+
+    from vaex_spark.datapipe import dedup as D
+    from vaex_spark.datapipe import similarity as S
+    from vaex_spark.datapipe import stamp
+    from vaex_spark.datapipe import text as T
+    vecs = spark.createDataFrame([(0, [1.0, 0.0, 0.0]), (2, [0.9, 0.1, 0.0])],
+                                 "vec_id bigint, embedding array<double>")
+    cases = {
+        "fp": (D.corpus_fingerprints(docs, normalize=False).spark, "fp",
+               '{"vaex_spark_fp":{"normalize":false}}'),
+        "minhash": (D.corpus_lsh_index(docs, shingle_k=4, num_perm=32,
+                                       num_bands=16).spark, "minhash",
+                    '{"vaex_spark_minhash":{"num_perm":32,"num_bands":16,'
+                    '"shingle_k":4}}'),
+        "winnow": (T.corpus_winnow_index(docs, k=5, window=4,
+                                         fp_type="gram").spark, "winnow",
+                   '{"vaex_spark_winnow":{"fp_type":"gram","window":4,"k":5}}'),
+        "winnow_grouped": (T.corpus_winnow_index(docs, k=6, window=3,
+                                                 grouped=True).spark, "winnow",
+                           '{"vaex_spark_winnow":{"fp_type":"hash","window":3,'
+                           '"k":6}}'),
+        "vector": (S.corpus_vector_index(vecs, bits=3, n_tables=2, seed=7),
+                   "vector",
+                   '{"vaex_spark_lsh":{"seed":7,"bits":3,"dim":3,"n_tables":2}}'),
+    }
+    for name, (sdf, family, meta) in cases.items():
+        sdf.write.parquet(str(tmp_path / name))
+        assert f'"metadata":{meta}' in _spark_footer(tmp_path / name), name
+        back = spark.read.parquet(str(tmp_path / name))
+        want = next(iter(json.loads(meta).values()))
+        assert stamp.check(back, family) == want, name
+
+
+def test_index_screen_and_builder_defaults_agree():
+    """For every stamped key, each screen and its index builder default
+    to the same value: curate_stream leaves every key it is not given
+    to those defaults on both sides."""
+    import inspect
+
+    from vaex_spark.datapipe import dedup as D
+    from vaex_spark.datapipe import similarity as S
+    from vaex_spark.datapipe import stamp
+    from vaex_spark.datapipe import text as T
+    pairs = [("fp", D.exact_dedup_incremental, D.corpus_fingerprints),
+             ("minhash", D.near_dup_against_corpus, D.corpus_lsh_index),
+             ("winnow", T.winnow_overlap_against_corpus, T.corpus_winnow_index),
+             ("winnow", T.winnow_dedup_against_corpus, T.corpus_winnow_index),
+             ("vector", S.near_dup_embeddings_against_corpus,
+              S.corpus_vector_index),
+             ("vector", S.embedding_dedup_against_corpus,
+              S.corpus_vector_index)]
+    for family, screen, build in pairs:
+        for k in stamp.BUILD_KEYS[family]:
+            a = inspect.signature(screen).parameters[k].default
+            b = inspect.signature(build).parameters[k].default
+            assert a == b and a is not inspect.Parameter.empty, \
+                (screen.__name__, k, a, b)
+
+
+def test_curate_stream_winnow_params_screen_only_key(spark, tmp_path):
+    """winnow_params may hold the screen-only max_df: the index build
+    takes only the stamped keys, so batch 1 writes its winnow index
+    (stamped with the given k and window and the default fp_type) and
+    batch 2's screen runs with max_df."""
+    import pandas as pd
+
+    from vaex_spark import streaming as st
+    from vaex_spark.datapipe import stamp
+    src = tmp_path / "src"
+    src.mkdir()
+    pd.DataFrame({"doc_id": range(4), "text": [
+        f"document {i} carries a handful of its own words {i * 7}"
+        for i in range(4)]}).to_parquet(src / "b1.parquet")
+    common = dict(out_dir=str(tmp_path / "out"),
+                  state_dir=str(tmp_path / "state"),
+                  winnow_index_dir=str(tmp_path / "widx"),
+                  winnow_params=dict(k=4, window=3, max_df=8),
+                  min_quality=None, repetition_filter=False, dedup=None)
+    st.curate_stream(st.open_stream(str(src), spark=spark),
+                     checkpoint=str(tmp_path / "ckpt"), **common)
+    widx = spark.read.parquet(str(tmp_path / "widx"))
+    assert widx.count() > 0
+    assert stamp.check(widx, "winnow") == {"fp_type": "hash", "window": 3,
+                                           "k": 4}
+    pd.DataFrame({"doc_id": [10], "text": [
+        "an entirely fresh text with nothing shared at all"]}).to_parquet(
+        src / "b2.parquet")
+    st.curate_stream(st.open_stream(str(src), spark=spark),
+                     checkpoint=str(tmp_path / "ckpt"), **common)
+    ids = sorted(r["doc_id"] for r in spark.read.parquet(
+        str(tmp_path / "out")).select("doc_id").collect())
+    assert ids == [0, 1, 2, 3, 10], ids
+
+
+# a column-metadata read or write, or a stamp key spelled out
+_STAMP_CODE = re.compile(
+    r"withMetadata|\bmetadata=|\.metadata\b|[\"']vaex_spark_\w+[\"']")
+
+
+def test_index_stamp_lives_in_stamp_module():
+    """Only datapipe/stamp.py reads or writes column metadata."""
+    import pathlib
+
+    import vaex_spark as vs
+    pkg = pathlib.Path(vs.__file__).resolve().parent
+    offenders = [str(p.relative_to(pkg)) for p in sorted(pkg.rglob("*.py"))
+                 if p.relative_to(pkg).as_posix() != "datapipe/stamp.py"
+                 and _STAMP_CODE.search(p.read_text(encoding="utf-8"))]
+    assert offenders == []
 
 
 def test_lsh_params_must_be_positive(spark):

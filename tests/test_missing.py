@@ -298,6 +298,92 @@ def test_binby_agg_descriptors(mdf, ansi):
             _same(grids[j][k], _moments(a)["sum"], (c, k))
 
 
+def _exact_pct(a, p):
+    """F.percentile's linear interpolation on the sorted multiset."""
+    a = sorted(a)
+    pos = (len(a) - 1) * p / 100
+    lo = int(pos)
+    return a[lo] if pos == lo else a[lo] + (a[lo + 1] - a[lo]) * (pos - lo)
+
+
+def _is_median(got, a):
+    a = sorted(a)
+    return a[(len(a) - 1) // 2] <= float(got) <= a[len(a) // 2]
+
+
+def test_percentiles(mdf, ansi, spark):
+    """The percentile family skips NaN: percentile_approx and
+    median_approx (scalar and groupby descriptors) and percentile_exact,
+    single-task (one delayed job) and distributed."""
+    pct = [0, 50, 100]
+    pending = [(c, mdf.percentile_approx(c, [0, 100], delay=True),
+                mdf.median_approx(c, delay=True),
+                mdf.percentile_exact(c, pct, delay=True)) for c in NUMERIC]
+    mdf.execute()
+    for c, approx, med, exact in pending:
+        a = _num(c)
+        assert [float(v) for v in approx.get()] == [min(a), max(a)], c
+        assert _is_median(med.get(), a), (c, med.get())
+        for p, got in zip(pct, exact.get()):
+            _same(got, _exact_pct(a, p), (c, p))
+    key = "vaex_spark.percentile.maxSingleTaskBytes"
+    spark.conf.set(key, "1")  # every column is over budget: distributed
+    try:
+        for c in ("d", "f"):
+            for p, got in zip(pct, mdf.percentile_exact(c, pct)):
+                _same(got, _exact_pct(_num(c), p), (c, p, "distributed"))
+    finally:
+        spark.conf.unset(key)
+    spec = {}
+    for c in NUMERIC:
+        spec[f"{c}__max"] = vagg.percentile_approx(c, 100)
+        spec[f"{c}__med"] = vagg.median_approx(c)
+    out = mdf.groupby("g", agg=spec, sort=True).to_pandas_df()
+    for c in NUMERIC:
+        for k, a in enumerate(_groups(c)):
+            assert float(out[f"{c}__max"][k]) == max(a), (c, k)
+            assert _is_median(out[f"{c}__med"][k], a), (c, k)
+
+
+def test_sort_puts_nan_then_null_last(mdf, monkeypatch):
+    """NaN, then null, after the values in either direction; only the
+    descending keys' types are read, in one read."""
+    calls = []
+    probe = vs.DataFrame._data_types
+
+    def counting(self, names):
+        calls.append(list(names))
+        return probe(self, names)
+
+    monkeypatch.setattr(vs.DataFrame, "_data_types", counting)
+
+    def order(df, c):
+        return [r[c] for r in df.spark.select(c).collect()]
+
+    def want(vals, desc):
+        return sorted(v for v in vals if not _na(v))[::-1 if desc else 1] + \
+            [v for v in vals if _nan(v)] + [v for v in vals if v is None]
+
+    for c in ("d", "f", "i", "s"):
+        for desc in (False, True):
+            got = order(mdf.sort(c, ascending=not desc), c)
+            assert all(_eq(g, w) for g, w in zip(got, want(VALS[c], desc))), (c, desc, got)
+    assert calls == [["d"], ["f"], ["i"], ["s"]]
+    calls.clear()
+    out = mdf.sort(["g", "d", "f"], ascending=[True, False, False])
+    assert calls == [["d", "f"]]
+    got = order(out, "d")
+    split = [[v for v, g in zip(VALS["d"], G) if g == k] for k in (0, 1)]
+    assert all(_eq(g, w) for g, w in zip(got, want(split[0], True) + want(split[1], True)))
+
+
+def test_unique_keeps_null_string(mdf, ansi):
+    got = mdf.unique("s")
+    assert None in got.tolist() and "None" not in got.tolist()
+    assert sorted(v for v in got if v is not None) == \
+        sorted({v for v in VALS["s"] if v is not None})
+
+
 def test_describe(mdf, ansi):
     """df.describe and groupby(...).describe agree with the oracle and
     with each other: NaN is NA, and the moments skip it."""

@@ -287,13 +287,13 @@ def list(expression, selection=None, dropna=False):  # noqa: A001
 def median_approx(expression, selection=None):
     return _SimpleAgg("median_approx",
                       lambda c: F.percentile_approx(c, 0.5, 10000),
-                      expression, selection=selection)
+                      expression, selection=selection, stat=True)
 
 
 def percentile_approx(expression, percentage=50.0, selection=None):
     return _SimpleAgg("percentile_approx",
                       lambda c: F.percentile_approx(c, percentage / 100.0, 10000),
-                      expression, selection=selection)
+                      expression, selection=selection, stat=True)
 
 
 _BY_NAME = {

@@ -1349,15 +1349,24 @@ class DataFrame:
 
     def sort(self, by, ascending: bool | list[bool] = True) -> "DataFrame":
         """dataframe.py:4694 — NaN/NA to the end regardless of direction
-        (vaex uses arrow sort_indices with nulls last)."""
+        (vaex uses arrow sort_indices with nulls last): NaN, then null.
+        Spark orders NaN greatest, so only a descending key needs its
+        type, to move NaN behind the values."""
         if not isinstance(by, (list, tuple)):
             by = [by]
         if isinstance(ascending, bool):
             ascending = [ascending] * len(by)
+        desc = [b for b, asc in zip(by, ascending) if not asc]
+        desc_types = iter(self._data_types(desc) if desc else ())
         cols = []
         for b, asc in zip(by, ascending):
             c = self._to_expr(b).col
-            cols.append(c.asc_nulls_last() if asc else c.desc_nulls_last())
+            if asc:
+                cols.append(c.asc_nulls_last())
+            else:
+                dt = next(desc_types)
+                cols += [missing.nan_to_null(c, dt).desc_nulls_last(),
+                         missing.isnan(c, dt).desc()]
         o = DataFrame(self._spark_df().orderBy(*cols))
         o.variables = dict(self.variables)
         return o
@@ -1759,15 +1768,15 @@ class DataFrame:
         """dataframe.py:1632 — vaex interpolates a cumulative histogram
         (approximate); we use Spark's approx (different approximation,
         documented tolerance) — `percentile_exact` gives the exact one."""
-        expression = self._stat_input(expression, "percentile_approx")[0]
+        expr, dt = self._stat_input(expression, "percentile_approx")
+        c = missing.nan_to_null(self._agg_expr_col(expr, selection), dt)
         if isinstance(percentage, (list, tuple, np.ndarray)):
             pct = [float(p) / 100.0 for p in percentage]
-            col = F.percentile_approx(self._agg_expr_col(expression, selection), pct, 10000)
+            col = F.percentile_approx(c, pct, 10000)
             if delay:
                 return self.executor.schedule([col], post=np.array)
             return np.array(self._agg_scalar(col))
-        col = F.percentile_approx(
-            self._agg_expr_col(expression, selection), float(percentage) / 100.0, 10000)
+        col = F.percentile_approx(c, float(percentage) / 100.0, 10000)
         if delay:
             return self.executor.schedule([col])
         return self._agg_scalar(col)
@@ -1800,6 +1809,7 @@ class DataFrame:
             val_col = self._agg_expr_col(expr, selection)
             if val_col is None:
                 val_col = self._to_expr(expr).col
+            val_col = missing.nan_to_null(val_col, dt)
             big = stats_exceed_single_task_budget(
                 self._spark_df().select(val_col.alias("_v")))
         if big and delay:
@@ -1822,14 +1832,14 @@ class DataFrame:
             fracs = F.array(*[F.lit(float(p) / 100.0) for p in percentage])
 
             def make(c):
-                return F.percentile(c, fracs)
+                return F.percentile(missing.nan_to_null(c, dt), fracs)
 
             def post(v, _conv=conv):
                 out = np.array(v)
                 return _conv(out) if _conv is not None else out
         else:
             def make(c):
-                return F.percentile(c, float(percentage) / 100.0)
+                return F.percentile(missing.nan_to_null(c, dt), float(percentage) / 100.0)
             post = conv
         return self._compute_agg(make, expr, selection=selection,
                                  delay=delay, post=post)
@@ -2810,8 +2820,11 @@ class _Delayed:
 
 def _np_values(raw: list) -> np.ndarray:
     vals = np.array(raw, dtype=object)
+    kind = type(next((v for v in raw if v is not None), None))
+    if kind is str and None in raw:
+        return vals  # a str cast would read a null as the string 'None'
     try:
-        vals = vals.astype(type(next(v for v in vals if v is not None)))
+        vals = vals.astype(kind)
     except Exception:
         pass
     return vals

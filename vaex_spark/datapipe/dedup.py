@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame as SparkDataFrame
 from pyspark.sql import functions as F
 
+from . import stamp
 from .text import _c, _let, _words, _words_sql, fingerprint, shingles
 from ..cache import _register_persist
 from ..dataframe import _sdf, _wrap
@@ -64,8 +65,6 @@ def exact_dedup(df, text_col: str = "text", id_col: str = "doc_id",
       pairs, row_number over partitionBy(fingerprint) keeps rank 1,
       then a semi-join back onto the scan.  The 100 TB default — the
       shuffle is id-sized and the table is only re-scanned, not moved.
-    * ``'agg'`` — groupBy(fingerprint) -> min/max(id) -> semi-join.
-      Map-side combine collapses duplicates BEFORE the id exchange.
     * ``'minby'`` — groupBy(fingerprint) -> min_by/max_by(full row):
       one scan, one exchange, no join — but the exchange carries the
       surviving row BODIES (partial agg drops duplicates map-side).
@@ -86,6 +85,8 @@ def exact_dedup(df, text_col: str = "text", id_col: str = "doc_id",
     fp = fingerprint(F.col(text_col), normalize=normalize).alias("__fp")
     qk = (F.col(quality_col) if isinstance(quality_col, str)
           else quality_col)
+    if strategy not in ("auto", "window", "minby"):
+        raise ValueError(f"strategy={strategy!r}")
     if strategy == "auto":
         target = sdf.sparkSession.sparkContext.defaultParallelism
         size = size_bytes(sdf)
@@ -108,29 +109,20 @@ def exact_dedup(df, text_col: str = "text", id_col: str = "doc_id",
                    .select("__row.*"))
         return _wrap(out)
     # no _spread here: fingerprinting is one hash per row (not the
-    # 64-permutation minhash case) and the window/agg exchange below
+    # 64-permutation minhash case) and the window exchange below
     # redistributes anyway — a pre-repartition would shuffle the text
     # bodies a second time for nothing
+    from pyspark.sql import Window
     pairs = (sdf.select(fp, F.col(id_col)) if qk is None
              else sdf.select(fp, F.col(id_col), qk.alias("__q")))
-    if strategy == "window":
-        from pyspark.sql import Window
-        if qk is not None:
-            order = [F.col("__q").desc(), F.col(id_col).asc()]
-        else:
-            order = [F.col(id_col).asc() if keep == "min"
-                     else F.col(id_col).desc()]
-        w = Window.partitionBy("__fp").orderBy(*order)
-        keepers = (pairs.withColumn("__rn", F.row_number().over(w))
-                   .filter(F.col("__rn") == 1).select(id_col))
+    if qk is not None:
+        order = [F.col("__q").desc(), F.col(id_col).asc()]
     else:
-        if qk is not None:
-            key = F.struct(F.col("__q"), (F.lit(0) - F.col(id_col)))
-            keep_agg = F.max_by(id_col, key)
-        else:
-            keep_agg = F.min(id_col) if keep == "min" else F.max(id_col)
-        keepers = (pairs.groupBy("__fp").agg(keep_agg.alias(id_col))
-                   .select(id_col))
+        order = [F.col(id_col).asc() if keep == "min"
+                 else F.col(id_col).desc()]
+    w = Window.partitionBy("__fp").orderBy(*order)
+    keepers = (pairs.withColumn("__rn", F.row_number().over(w))
+               .filter(F.col("__rn") == 1).select(id_col))
     out = sdf.join(keepers, on=id_col, how="left_semi")
     return _wrap(out)
 
@@ -984,19 +976,7 @@ def exact_dedup_incremental(new_df, seen_df, text_col: str = "text",
     nsdf, ssdf = _sdf(new_df), _sdf(seen_df)
     fp = fingerprint(F.col(text_col), normalize=normalize)
     if "__fp" in ssdf.columns:
-        # validate the fingerprint table's normalize stamp
-        # (corpus_fingerprints column metadata, round 10): a mismatch
-        # hashes different strings and silently misses every dup
-        _fld = next((f_ for f_ in ssdf.schema.fields
-                     if f_.name == "__fp"), None)
-        _im = dict((_fld.metadata or {}).get("vaex_spark_fp") or {}) \
-            if _fld is not None else {}
-        if _im and bool(_im.get("normalize", normalize)) != bool(normalize):
-            raise ValueError(
-                f"seen_df fingerprint table was built with normalize="
-                f"{bool(_im['normalize'])} but the screen was called "
-                f"with normalize={bool(normalize)}: the fingerprints "
-                f"cannot match — pass the table's setting (or rebuild)")
+        stamp.check(ssdf, "fp", normalize=normalize)
         seen_fp = ssdf.select("__fp")
     else:
         seen_fp = ssdf.select(fp.alias("__fp"))
@@ -1032,16 +1012,12 @@ def exact_dedup_incremental(new_df, seen_df, text_col: str = "text",
 
 
 def corpus_fingerprints(df, text_col: str = "text", normalize: bool = True):
-    """The persistable fingerprint table for exact_dedup_incremental.
-    ``normalize`` rides in the artifact as column metadata (the
-    round-10 index-stamp contract): a normalize-mismatched screen
-    hashes DIFFERENT strings and silently misses every dup."""
+    """The persistable fingerprint table for exact_dedup_incremental,
+    stamped with ``normalize`` (stamp.py)."""
     sdf = _sdf(df)
-    return _wrap(sdf.select(
+    return _wrap(stamp.write(sdf.select(
         fingerprint(F.col(text_col), normalize=normalize).alias("__fp"))
-        .distinct()
-        .withMetadata("__fp", {"vaex_spark_fp": {
-            "normalize": bool(normalize)}}))
+        .distinct(), "fp", normalize=normalize))
 
 
 # --------------------------------------------------------------------------
@@ -1208,16 +1184,11 @@ def corpus_lsh_index(corpus, text_col: str = "text", id_col: str = "doc_id",
     csdf = _sdf(corpus).select(F.col(id_col), F.col(text_col))
     # codegen fast path; values bit-identical to the Column signature
     # form, so indexes built by either path interoperate.  The build
-    # parameters ride in the artifact as column metadata (parquet
-    # footer) — the corpus_vector_index stamp contract (round 10)
-    # applied family-wide: a parameter-mismatched screen would join on
-    # incomparable buckets and silently return a near-empty screen.
-    meta = {"vaex_spark_minhash": {"shingle_k": int(shingle_k),
-                                   "num_perm": int(num_perm),
-                                   "num_bands": int(num_bands)}}
-    return _wrap(_banded_auto(csdf, id_col, text_col,
-                              num_perm, num_bands, shingle_k)
-                 .withMetadata("band", meta))
+    # parameters ride in the artifact (stamp.py).
+    return _wrap(stamp.write(_banded_auto(csdf, id_col, text_col,
+                                          num_perm, num_bands, shingle_k),
+                             "minhash", shingle_k=shingle_k,
+                             num_perm=num_perm, num_bands=num_bands))
 
 
 def near_dup_against_corpus(batch, corpus, text_col: str = "text",
@@ -1256,25 +1227,8 @@ def near_dup_against_corpus(batch, corpus, text_col: str = "text",
     bb = band_table(bsdf)
     if corpus_index is not None:
         cix = _sdf(corpus_index)
-        # validate the index's parameter stamp (corpus_lsh_index
-        # column metadata): a (shingle_k, num_perm, num_bands)
-        # mismatch joins incomparable buckets and silently returns a
-        # near-empty screen.  Stamp-less indexes skip the check.
-        _fld = next((f_ for f_ in cix.schema.fields
-                     if f_.name == "band"), None)
-        _im = dict((_fld.metadata or {}).get("vaex_spark_minhash") or {}) \
-            if _fld is not None else {}
-        if _im:
-            want = {"shingle_k": int(shingle_k), "num_perm": int(num_perm),
-                    "num_bands": int(num_bands)}
-            got = {k_: int(v_) for k_, v_ in _im.items() if k_ in want}
-            if any(got.get(k_, v_) != v_ for k_, v_ in want.items()):
-                raise ValueError(
-                    f"corpus_index was built with "
-                    f"{ {k_: got.get(k_) for k_ in want} } but the "
-                    f"screen was called with {want}: the MinHash "
-                    f"buckets cannot match — pass the index's "
-                    f"parameters (or rebuild the index)")
+        stamp.check(cix, "minhash", shingle_k=shingle_k, num_perm=num_perm,
+                    num_bands=num_bands)
         cb = cix.select(F.col(id_col), "band", "bucket")
     else:
         # spread only when the corpus is minhashed here; otherwise its

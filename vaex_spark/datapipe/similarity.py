@@ -25,6 +25,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame as SparkDataFrame, Window
 from pyspark.sql import functions as F
 
+from . import stamp
 from ..dataframe import _same_kind, _sdf
 from ..plan import range_partition_count, size_bytes
 
@@ -911,19 +912,9 @@ def corpus_vector_index(corpus, vec_col: str = "embedding",
         first = sdf.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
         dim = int(first[0]["d"]) if first else 0
     pk = _bucket_packed(sdf, id_col, vec_col, dim, bits, n_tables, seed)
-    # The build parameters RIDE IN THE ARTIFACT as column metadata
-    # (survives a parquet round-trip in the footer schema, costs zero
-    # rows/bytes per vector): an index built at different (bits,
-    # n_tables, seed) than a later screen call would otherwise degrade
-    # SILENTLY — a seed mismatch blocks on garbage buckets (near-empty
-    # screen), an n_tables mismatch joins only the overlapping
-    # posexplode positions (quietly cut recall).  The screen validates
-    # these alongside its dim check (round 10, advised).
-    meta = {"vaex_spark_lsh": {"bits": int(bits), "n_tables": int(n_tables),
-                               "seed": int(seed), "dim": int(dim)}}
-    return pk.select(F.col(id_col),
-                     F.col("__buckets").alias("__buckets", metadata=meta),
-                     F.col("__unit"))
+    # the build parameters ride in the artifact (stamp.py)
+    return stamp.write(pk, "vector", bits=bits, n_tables=n_tables, seed=seed,
+                       dim=dim)
 
 
 def near_dup_embeddings_against_corpus(batch, corpus=None,
@@ -997,39 +988,11 @@ def near_dup_embeddings_against_corpus(batch, corpus=None,
         dim = int(first[0]["d"]) if first else 0
     if corpus_index is not None:
         cpk = _sdf(corpus_index)
-        # Parameter check from the ARTIFACT's own metadata (round 10):
-        # corpus_vector_index stamps (bits, n_tables, seed, dim) on
-        # __buckets, so a screen called with a different seed (blocks
-        # on garbage buckets — near-empty screen) or n_tables (joins
-        # only the overlapping posexplode positions — silently cut
-        # recall) fails loudly instead of degrading.  Indexes from
-        # before the stamp carry no metadata and fall back to the
-        # dim-only probe below.
-        _fld = next((f_ for f_ in cpk.schema.fields
-                     if f_.name == "__buckets"), None)
-        _im = dict((_fld.metadata or {}).get("vaex_spark_lsh") or {}) \
-            if _fld is not None else {}
-        if _im:
-            want = {"bits": int(bits), "n_tables": int(n_tables),
-                    "seed": int(seed)}
-            got = {k_: int(_im[k_]) for k_ in want if k_ in _im}
-            if any(got.get(k_, v_) != v_ for k_, v_ in want.items()):
-                raise ValueError(
-                    f"corpus_index was built with "
-                    f"{ {k_: got.get(k_) for k_ in want} } but the screen "
-                    f"was called with {want}: the LSH planes cannot "
-                    f"match — pass the index's parameters (or rebuild "
-                    f"the index)")
-            if "dim" in _im:
-                if int(dim or 0) == 0:
-                    dim = int(_im["dim"])  # empty batch: adopt
-                elif int(_im["dim"]) != int(dim):
-                    raise ValueError(
-                        f"corpus_index was built at dim={int(_im['dim'])} "
-                        f"but the batch vectors have dim={int(dim)}: the "
-                        f"LSH planes cannot match — rebuild the index "
-                        f"with the batch's embedding model (or pass the "
-                        f"right index)")
+        # an empty batch has no dim of its own: it adopts the stamp's
+        built = stamp.check(cpk, "vector", bits=bits, n_tables=n_tables,
+                            seed=seed, dim=dim or None)
+        if not dim and "dim" in built:
+            dim = int(built["dim"])
         # bounded probe (one limit(1) job, the _dispatch_queries
         # discipline): a persisted index built from a different
         # embedding model would otherwise block on garbage buckets and
@@ -1038,7 +1001,7 @@ def near_dup_embeddings_against_corpus(batch, corpus=None,
         # NULL units, so probe a non-null one; an all-null index has
         # no determinable dim and skips the check.  Skipped when the
         # metadata stamp above already pinned the dim (one less job).
-        d = [] if "dim" in _im else \
+        d = [] if "dim" in built else \
             (cpk.filter(F.col("__unit").isNotNull())
              .select(F.size("__unit").alias("d")).limit(1).collect())
         if d and int(dim) == 0:

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import stamp
 from ..dataframe import _same_kind, _sdf
 from ..plan import range_partition_count
 
@@ -662,20 +663,11 @@ def corpus_winnow_index(corpus, text_col: str = "text",
     fsdf = winnow_fingerprints(corpus, text_col=text_col, id_col=id_col,
                                k=k, window=window, fp_type=fp_type,
                                strategy=strategy)
-    # The build parameters RIDE IN THE ARTIFACT as column metadata
-    # (parquet footer, zero bytes per row) — the corpus_vector_index
-    # stamp contract (round 10) applied family-wide: a screen called
-    # with a different (k, window, fp_type) than the index was built
-    # with selects DIFFERENT fingerprints and silently returns a
-    # near-empty overlap; the screen validates the stamp instead.
-    meta = {"vaex_spark_winnow": {"k": int(k), "window": int(window),
-                                  "fp_type": str(fp_type)}}
-    fsdf = fsdf.withMetadata("fp", meta)
-    if not grouped:
-        return fsdf
-    out = (fsdf.groupBy("fp")
-           .agg(F.array_sort(F.collect_list(id_col)).alias("__cids")))
-    return out.withMetadata("fp", meta)
+    if grouped:
+        fsdf = (fsdf.groupBy("fp")
+                .agg(F.array_sort(F.collect_list(id_col)).alias("__cids")))
+    # the build parameters ride in the artifact (stamp.py)
+    return stamp.write(fsdf, "winnow", k=k, window=window, fp_type=fp_type)
 
 
 @_same_kind
@@ -714,27 +706,7 @@ def winnow_overlap_against_corpus(batch, corpus=None, text_col: str = "text",
     grp = None
     if corpus_index is not None:
         cfps = _sdf(corpus_index)
-        # validate the index's parameter stamp (corpus_winnow_index
-        # column metadata): a (k, window, fp_type) mismatch selects
-        # DIFFERENT fingerprints and silently returns a near-empty
-        # screen — the worst failure mode of an incremental pipeline.
-        # Stamp-less (pre-round-10) indexes skip the check.
-        _fld = next((f_ for f_ in cfps.schema.fields
-                     if f_.name == "fp"), None)
-        _im = dict((_fld.metadata or {}).get("vaex_spark_winnow") or {}) \
-            if _fld is not None else {}
-        if _im:
-            want = {"k": int(k), "window": int(window),
-                    "fp_type": str(fp_type)}
-            got = {k_: (str(v_) if k_ == "fp_type" else int(v_))
-                   for k_, v_ in _im.items() if k_ in want}
-            if any(got.get(k_, v_) != v_ for k_, v_ in want.items()):
-                raise ValueError(
-                    f"corpus_index was built with "
-                    f"{ {k_: got.get(k_) for k_ in want} } but the "
-                    f"screen was called with {want}: the winnowed "
-                    f"fingerprints cannot match — pass the index's "
-                    f"parameters (or rebuild the index)")
+        stamp.check(cfps, "winnow", k=k, window=window, fp_type=fp_type)
         if "__cids" in cfps.columns:  # pre-grouped index: no exchange
             grp = cfps.select("fp", "__cids")
         else:

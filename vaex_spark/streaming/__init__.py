@@ -436,7 +436,18 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
     (``keep_latest=1``), so checkpoint replays of the in-flight batch
     stay idempotent.
     """
-    from ..datapipe import dedup as D
+    from ..datapipe import dedup as D, stamp
+
+    # each screen's and builder's signature holds the defaults
+    fuzzy_params, winnow_params, vector_params = (
+        p or {} for p in (fuzzy_params, winnow_params, vector_params))
+
+    def built(family, params):
+        # a screen-only key (max_df, strategy, ...) is legal for the
+        # screen but would TypeError the index build after the batch's
+        # output emission, wedging the stream
+        return {k_: v for k_, v in params.items()
+                if k_ in stamp.BUILD_KEYS[family]}
 
     kw = dict(curate_kw)
     if kw.get("dedup", "exact") == "exact" and kw.get("pack_tokens") is None:
@@ -509,35 +520,29 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
                     id_col=id_col)
             else:
                 fresh = D.exact_dedup(fresh, text_col=text_col, id_col=id_col)
-            fp = {**dict(shingle_k=5, num_perm=64, num_bands=32),
-                  **(fuzzy_params or {})}
             if "lsh" in priors:
                 fresh = D.near_dup_against_corpus(
                     fresh, DataFrame(priors["out"]), text_col=text_col,
                     id_col=id_col, threshold=float(fuzzy_threshold),
-                    corpus_index=DataFrame(priors["lsh"]), **fp)
+                    corpus_index=DataFrame(priors["lsh"]), **fuzzy_params)
             if winnow_index_dir is not None:
                 from ..datapipe import text as T
-                wp = {**dict(k=5, window=4, fp_type="hash", max_df=256),
-                      **(winnow_params or {})}
                 if "winnow" in priors:
                     fresh = T.winnow_dedup_against_corpus(
                         fresh, text_col=text_col, id_col=id_col,
                         min_shared=int(winnow_min_shared),
-                        corpus_index=priors["winnow"], **wp)
+                        corpus_index=priors["winnow"], **winnow_params)
             if vector_index_dir is not None:
                 from ..datapipe import similarity as SIM
                 if vec_col not in fresh._spark_df().columns:
                     raise ValueError(
                         f"vector_index_dir= needs the stream to carry "
                         f"{vec_col!r}; columns: {fresh._spark_df().columns}")
-                vp = {**dict(bits=6, n_tables=8, seed=42),
-                      **(vector_params or {})}
                 if "vector" in priors:
                     fresh = SIM.embedding_dedup_against_corpus(
                         fresh, vec_col=vec_col, id_col=id_col,
                         threshold=float(vector_threshold),
-                        corpus_index=priors["vector"], **vp)
+                        corpus_index=priors["vector"], **vector_params)
             fsdf = fresh._spark_df()
             write(fsdf, out_dir)
         # the derived sinks read back the partition just written instead
@@ -555,28 +560,16 @@ def curate_stream(stream_df, out_dir: str, state_dir: str, checkpoint: str,
             emitted, text_col=text_col)._spark_df(), state_dir))]
         if fuzzy_lsh_dir is not None:
             sinks.append(("lsh", lambda: write(D.corpus_lsh_index(
-                emitted, text_col=text_col, id_col=id_col, **fp)._spark_df(),
-                fuzzy_lsh_dir)))
+                emitted, text_col=text_col, id_col=id_col,
+                **fuzzy_params)._spark_df(), fuzzy_lsh_dir)))
         if winnow_index_dir is not None:
-            wbuild = {**dict(k=5, window=4, fp_type="hash"),
-                      **{k_: v for k_, v in (winnow_params or {}).items()
-                         if k_ in ("k", "window", "fp_type")}}
             sinks.append(("winnow", lambda: write(T.corpus_winnow_index(
-                emitted, text_col=text_col, id_col=id_col, **wbuild)._spark_df(),
-                winnow_index_dir)))
+                emitted, text_col=text_col, id_col=id_col,
+                **built("winnow", winnow_params))._spark_df(), winnow_index_dir)))
         if vector_index_dir is not None:
-            # key-filter to the BUILD signature, mirroring the winnow
-            # branch above: a screen-only key in vector_params
-            # (strategy, round_to, max_dense_batch) is legal for the
-            # screen but would TypeError the index-build write AFTER the
-            # batch's output emission — wedging the stream on an
-            # argument error
-            vbuild = {**dict(bits=6, n_tables=8, seed=42),
-                      **{k_: v for k_, v in (vector_params or {}).items()
-                         if k_ in ("bits", "n_tables", "seed", "dim")}}
             sinks.append(("vector", lambda: write(SIM.corpus_vector_index(
-                emitted, vec_col=vec_col, id_col=id_col, **vbuild),
-                vector_index_dir)))
+                emitted, vec_col=vec_col, id_col=id_col,
+                **built("vector", vector_params)), vector_index_dir)))
         if sketch_dir is not None:
             # per-batch HLL sketch of the EMITTED documents: a few-KB
             # mergeable state row per group, same idempotent-by-batch-id
@@ -721,8 +714,9 @@ def compact_index_dir(spark, index_dir: str, keep_latest: int = 1,
       replay-idempotency contract of curate_stream is untouched.
       ``keep_latest=0`` is for offline compaction of a STOPPED, fully
       committed stream only;
-    * parameter stamps ride in column metadata inside the parquet
-      footers and survive the rewrite (pinned by test).
+    * the indexes' parameter stamps (``datapipe/stamp.py``) ride in
+      column metadata inside the parquet footers and survive the
+      rewrite (pinned by test).
 
     Crash-safe without a manifest: the consolidated copy is fully
     written to an underscore-prefixed temp dir (invisible to Spark

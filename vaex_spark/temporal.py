@@ -45,10 +45,10 @@ _US_PER_DAY = 86_400_000_000
 # statistics over which a boolean counts as 0/1
 _NUMERIC = frozenset({"sum", "mean", "std", "var", "skew", "kurtosis",
                       "sum_moment", "percentile", "percentile_approx",
-                      "covar", "corr"})
+                      "median_approx", "covar", "corr"})
 # statistics a temporal input computes over µs (percentile_approx works
 # on timestamps and intervals natively)
-_MICROS = _NUMERIC - {"percentile_approx"}
+_MICROS = _NUMERIC - {"percentile_approx", "median_approx"}
 
 
 def temporal_kind(dtype: str | None) -> str | None:
