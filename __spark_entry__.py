@@ -883,7 +883,7 @@ def _q37_ngram_jaccard_exact(spark, sf_dir):
     from vaex_spark.datapipe.text import shingles
     docs = _t(spark, sf_dir, "documents").spark
     sets_df = docs.filter(F.col("doc_id") < 20).select(
-        "doc_id", F.array_distinct(shingles(F.col("text"), k=3)).alias("s"))
+        "doc_id", F.array_distinct(shingles("text", k=3)).alias("s"))
     a, b = sets_df.alias("a"), sets_df.alias("b")
     return (a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
             .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"),

@@ -79,8 +79,8 @@ EXTENDED = [
     # index derived in-plan + DENSE exact-cosine screen (at the
     # recall-1 oracle params bits=2/n_tables=24, strategy='auto'
     # resolves dense — n_tables >= 2^bits; the blocked scale path is
-    # plan-audited in PLANS and timed at 1M rows with selective
-    # suggest_lsh_params parameters in SCALECHECK_r10)
+    # plan-audited in tests/test_plan_audit.py and was timed at 1M rows
+    # with selective suggest_lsh_params parameters in commit ebb09a2)
     "q100_embedding_against_corpus",
     # repeated-query ANN over a persisted IVF index (r9): per-batch
     # cost excludes centroid training and the corpus assignment scan

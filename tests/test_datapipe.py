@@ -355,7 +355,7 @@ def test_bucket_long_matches_column_form(spark):
     emb = vs.open("/root/testdata/sf0.001/embeddings.parquet", spark=spark)
     sdf = emb.spark.select("vec_id", "embedding")
     dim, bits, nt, seed = 64, 6, 8, 42
-    buckets = F.array(*[hyperplane_bucket(F.col("embedding"),
+    buckets = F.array(*[hyperplane_bucket("embedding",
                                           _hyperplanes(dim, bits, seed + t))
                         for t in range(nt)])
     old = sorted(map(tuple, sdf.select(
@@ -370,7 +370,7 @@ def test_bucket_long_matches_column_form(spark):
     assert "MapInPandas" not in small._jdf.queryExecution().executedPlan().toString()
     # ...while the full nt=8 set (1.5M coords) goes Arrow even at one
     # partition (Column measured 3.8-4.8s vs Arrow 0.43-0.54s at
-    # comparable work, SCALECHECK_r09)
+    # comparable work)
     coords = _bucket_auto(sdf, "vec_id", "embedding", dim, bits, nt, seed)
     assert "MapInPandas" in coords._jdf.queryExecution().executedPlan().toString()
     try:
@@ -415,7 +415,7 @@ def test_shingles(spark):
     import vaex_spark as vs
     from vaex_spark.datapipe.text import shingles
     df = vs.from_arrays(spark=spark, t=["a b c d e"])
-    arr = df._spark_df().select(shingles(F.col("t"), k=3).alias("s")).collect()[0]["s"]
+    arr = df._spark_df().select(shingles("t", k=3).alias("s")).collect()[0]["s"]
     assert arr == ["a b c", "b c d", "c d e"]
 
 
@@ -2581,7 +2581,7 @@ def test_suggest_lsh_params_dim_aware_candidates():
     dim-aware expected candidates must (a) exceed the dim-less
     estimate, (b) shrink monotonically toward it as dim grows, and
     (c) reproduce the 1M x dim-64 probe's MEASURED candidate count
-    (1,776/query, SCALECHECK_r10) within a few percent — the naive
+    (1,776/query, commit ebb09a2) within a few percent — the naive
     form underestimated it 1.88x.  The recall floor and chosen
     (bits, n_tables) are per-PAIR quantities, untouched by dim."""
     from vaex_spark.datapipe.similarity import suggest_lsh_params
@@ -3124,21 +3124,23 @@ def test_curate_stream_vector_cross_batch(spark, tmp_path):
 
 def test_banded_long_bit_identical_to_column_form(spark):
     """_banded_long (explode + codegen min-aggregates) must produce the
-    EXACT (id, band, bucket) rows of the Column signature form
-    (posexplode(minhash_bands_col(minhash_signature(text)))) on real
-    documents — the fast path is a physical rewrite of the same hash
-    family, and persisted LSH indexes built by either must
+    EXACT (id, band, bucket) rows of the row-level band array
+    (posexplode of _minhash_bands_sql over _minhash_signature_sql) on
+    real documents — the fast path is a physical rewrite of the same
+    hash family, and persisted LSH indexes built by either must
     interoperate.  Covers short docs (n < k) via planted rows."""
     import vaex_spark as vs
-    from vaex_spark.datapipe.dedup import (_banded_long, minhash_bands_col,
-                                           minhash_signature)
+    from vaex_spark.datapipe.dedup import (_banded_long, _minhash_bands_sql,
+                                           _minhash_signature_sql)
+    from vaex_spark.datapipe.text import _shingles_sql
     docs = vs.open("/root/testdata/sf0.001/documents.parquet", spark=spark)
     extra = vs.from_arrays(doc_id=[9001, 9002, 9003],
                            text=["tiny", "two words", ""], spark=spark)
     sdf = docs.spark.select("doc_id", "text").unionByName(extra.spark)
     num_perm, num_bands, k = 64, 16, 5
-    sig = minhash_signature(F.col("text"), num_perm=num_perm, shingle_k=k)
-    bands = minhash_bands_col(sig, num_bands, num_perm // num_bands)
+    bands = F.expr(_minhash_bands_sql(
+        _minhash_signature_sql(_shingles_sql("text", k), num_perm),
+        num_bands, num_perm // num_bands))
     old = sorted((r["doc_id"], r["band"], r["bucket"]) for r in
                  sdf.select("doc_id", F.posexplode(bands).alias("band", "bucket"))
                  .collect())
@@ -3186,7 +3188,7 @@ def test_winnow_fingerprints_matches_bruteforce(spark):
         got.setdefault(r["doc_id"], set()).add(r["fp"])
     # brute force from the same hash function (Spark xxhash64 on grams)
     rows = (docs.spark.select(
-        "doc_id", F.posexplode(shingles(F.col("text"), k=k)).alias("p", "g"))
+        "doc_id", F.posexplode(shingles("text", k=k)).alias("p", "g"))
         .select("doc_id", "p", F.xxhash64("g").alias("h"))
         .collect())
     seqs = {}
@@ -3552,14 +3554,15 @@ def test_null_text_column_fns_emit_null(spark, fn_name):
     empty docs — and stays non-null for empty text ('' is a real,
     hashable document)."""
     from pyspark.sql import functions as F
-    from vaex_spark.datapipe.text import shingles
-    from vaex_spark.datapipe.dedup import (minhash_signature,
-                                           minhash_bands_col, simhash)
+    from vaex_spark.datapipe.text import _shingles_sql, shingles
+    from vaex_spark.datapipe.dedup import (_minhash_bands_sql,
+                                           _minhash_signature_sql,
+                                           minhash_signature, simhash)
     col = {
         "shingles": lambda: shingles("text", 3),
         "minhash_signature": lambda: minhash_signature("text", num_perm=4),
-        "minhash_bands": lambda: minhash_bands_col(
-            minhash_signature("text", num_perm=4), 2, 2),
+        "minhash_bands": lambda: F.expr(_minhash_bands_sql(
+            _minhash_signature_sql(_shingles_sql("text", 5), 4), 2, 2)),
         "simhash": lambda: simhash("text", num_bits=8),
     }[fn_name]()
     sdf = spark.createDataFrame(
@@ -3572,23 +3575,25 @@ def test_null_text_column_fns_emit_null(spark, fn_name):
 
 
 def test_null_text_strategy_parity_minhash(spark):
-    """The MinHash Column band form and the exploding _banded_long
-    codegen twin (auto-dispatched by stats) emit IDENTICAL (id, band,
+    """The row-level MinHash band array and the exploding _banded_long
+    codegen form (auto-dispatched by stats) emit IDENTICAL (id, band,
     bucket) sets on a frame with planted NULL / empty / whitespace
-    texts — before r9 the Column form emitted bands for NULL docs that
-    the exploding twin dropped, so the auto dispatch made near-dup
+    texts — before r9 the row-level form emitted bands for NULL docs
+    that the exploding form dropped, so the auto dispatch made near-dup
     candidacy of NULL docs depend on partition-count stats."""
     from pyspark.sql import functions as F
-    from vaex_spark.datapipe.dedup import (minhash_signature,
-                                           minhash_bands_col, _banded_long)
+    from vaex_spark.datapipe.dedup import (_minhash_bands_sql,
+                                           _minhash_signature_sql,
+                                           _banded_long)
+    from vaex_spark.datapipe.text import _shingles_sql
     sdf = spark.createDataFrame(
         [(1, None), (2, ""), (3, "   "), (4, "a b c d e f g"),
          (5, "a b c d e f g"), (6, None)],
         "doc_id bigint, text string")
     col_form = sdf.select(
         "doc_id",
-        F.posexplode(minhash_bands_col(
-            minhash_signature("text", num_perm=8), 4, 2))
+        F.posexplode(F.expr(_minhash_bands_sql(
+            _minhash_signature_sql(_shingles_sql("text", 5), 8), 4, 2)))
         .alias("band", "bucket"))
     long_form = _banded_long(sdf, "doc_id", "text", 8, 4, 5)
     a = {tuple(r) for r in col_form.collect()}
@@ -4223,7 +4228,7 @@ def test_suggest_winnow_params_closed_form():
     assert abs(p["expected_fps_per_gram"] - 0.4088) < 1e-3
     # sizing twin of the winnow_1m probe: 1M docs x 60 words, k=5, w=4
     q = suggest_winnow_params(8, 5, n_docs=1_000_000, words_per_doc=60)
-    measured = 22_883_870  # SCALECHECK_r11 winnow_1m flat index rows
+    measured = 22_883_870  # winnow_1m probe flat index rows (ee8532f)
     assert abs(q["expected_index_rows"] - measured) / measured < 0.01
     # tighter guarantee -> smaller window -> denser index
     dense = suggest_winnow_params(6, 5)

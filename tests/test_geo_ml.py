@@ -448,8 +448,8 @@ def test_kmeans_assign_strategies_agree(spark):
 
 
 def test_kmeans_oversampled_init(spark):
-    """init='oversampled' (k-means|| spirit, SCALECHECK_r07
-    kmeans_init_study): a driver-side sample Lloyd pre-converges the
+    """init='oversampled' (k-means|| spirit; kmeans_init_study probe,
+    commit 06cd14e): a driver-side sample Lloyd pre-converges the
     centers, the distributed loop then needs fewer corpus scans.  On
     planted blobs it must land each blob in its own cluster,
     deterministically; over-asking clusters vs distinct rows raises."""

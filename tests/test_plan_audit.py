@@ -381,3 +381,156 @@ def test_sample_replace_no_global_sort(spark):
     plan = _plan(out._spark_df())
     assert "Sort [" not in plan or "SinglePartition" not in plan, plan
     assert "max_by" in plan, plan
+
+
+# --------------------------------------------------------------------------
+# executed-plan markers of representative queries at sf0.01: each entry
+# is (the property the plan must show, regexes; a leading "!" marks a
+# must-NOT-match pattern).  Read from the physical plan's toString,
+# where an operator and its arguments share one line.
+# --------------------------------------------------------------------------
+_SF01 = "/root/testdata/sf0.01"
+
+_PLAN_MARKERS = {
+    # projection + filter reach the parquet scan
+    "q02_filter_project": [r"PushedFilters: \[.*IsNotNull", r"\*\(\d+\) Filter"],
+    # every dimension join of the 3-way chain broadcasts
+    "q05_revenue_by_nation": [r"BroadcastHashJoin"],
+    "q10_window_diff": [r"Window"],
+    # positional window: pid from the contiguous row id — no range
+    # exchange, persist-free; the one-partition fast path (constant _w1
+    # spec) at this size, the __ptag exchange above it
+    "q110_positional_window": [r"Window", r"!rangepartitioning",
+                               r"!InMemoryTableScan",
+                               r"__ptag|windowspecdefinition\(_w1"],
+    # take(): positions broadcast against the row-id frame, a
+    # metadata-only offset probe, one range exchange to restore order
+    "q111_take_fancy": [r"BroadcastHashJoin", r"ReadSchema: struct<>",
+                        r"rangepartitioning\(__take_pos",
+                        r"!CartesianProduct"],
+    # DATE moments: one aggregate pair summing decimal(38,0) epoch-µs
+    # (an int64 sum wraps at ~5,400 rows), no Window, no Python stage
+    "q112_date_stats": [r"HashAggregate", r"decimal\(38,0\)", r"!Window",
+                        r"!BatchEvalPython"],
+    # diff(ts) -> interval -> groupby: the aggregate rides the keyed
+    # diff's event_type partitioning; interval conversion stays in JVM
+    "q113_interval_gap_stats": [r"Window", r"HashAggregate",
+                                r"Exchange hashpartitioning\(event_type",
+                                r"!BatchEvalPython", r"!ArrowEvalPython"],
+    "q26_dedup_exact": [r"HashAggregate"],
+    # the narrow band relation is persisted: one signature pass
+    "q35_minhash_near_dups": [r"InMemoryTableScan"],
+    # shipped crossover at corpus≈2×batch: plain anti-join, no Arrow
+    # membership stage
+    "q77_bloom_incremental_dedup": [r"LeftAnti", r"!ArrowEvalPython"],
+    # bloom path forced: corpus fingerprints only probe broadcast joins,
+    # membership scan is Arrow, corpus never exchanged
+    "q77_bloom_forced": [r"BroadcastHashJoin.*LeftSemi",
+                         r"BroadcastHashJoin.*LeftAnti",
+                         r"ArrowEvalPython", r"!SortMergeJoin"],
+    # per-domain caps pre-truncate each map task's groups
+    "q78_domain_caps": [r"WindowGroupLimit"],
+    # small-frame stratified sample: per-group rank, counts broadcast
+    "q80_stratified_sample": [r"BroadcastHashJoin", r"row_number"],
+    # interval overlap opted out of skew routing: one bucket join, no
+    # broadcast tails, no Union
+    "q88_interval_overlap": [
+        r"(Exchange hashpartitioning.*__bk|BroadcastHashJoin \[__bk)",
+        r"!BroadcastNestedLoopJoin", r"!Union"],
+    # vocabulary top-N via map-side top-N + driver merge
+    "q89_vocabulary": [r"TakeOrderedAndProject"],
+    # GroupBy.apply(engine='arrow'): one grouped Arrow map stage
+    "q93_group_delta_min": [r"(FlatMapGroupsInArrow|ArrowGroupMap)"],
+    # salted two-phase count
+    "q94_salted_priority_count": [r"HashAggregate"],
+    # zero-exchange winnow selection: row-level Column, no window/sort,
+    # self-join, persist or Python
+    "q96_winnow_overlap": [r"Generate explode", r"collect_list",
+                           r"!InMemoryTableScan", r"!Window",
+                           r"!SortMergeJoin", r"!MapInPandas"],
+    # pre-grouped parquet index: no query-time groupBy, window or text
+    # scan of the corpus
+    "q99_winnow_screen_indexed": [r"vaex_spark_widx", r"Generate",
+                                  r"!Window", r"!MapInPandas",
+                                  r"!CartesianProduct"],
+    # auto resolves DENSE at n_tables >= 2^bits: one BLAS pass, no
+    # bucket explode, no candidate join, no pair product
+    "q100_embedding_against_corpus": [
+        r"MapInPandas", r"!Generate posexplode", r"!CartesianProduct",
+        r"!BroadcastNestedLoop", r"!SortMergeJoin"],
+    # forced blocked: bucket arrays exploded, persisted batch packing
+    # feeds blocking and verify
+    "q100_blocked_form": [r"Generate posexplode", r"InMemoryTableScan",
+                          r"!CartesianProduct", r"!BroadcastNestedLoop"],
+    "q44_embedding_near_dups": [r"MapInPandas", r"!InMemoryTableScan",
+                                r"!CartesianProduct",
+                                r"!BroadcastNestedLoop", r"!SortMergeJoin"],
+    # forced blocked: the narrow hyperplane relation is persisted so
+    # both self-join sides share one projection pass
+    "q44_blocked_form": [r"InMemoryTableScan", r"!CartesianProduct",
+                         r"!BroadcastNestedLoop"],
+    # a >1024-value isin as a virtual column: a broadcast flag join,
+    # never a per-row array-literal scan
+    "isin_large_flag": [r"BroadcastHashJoin .*LeftOuter",
+                        r"!CartesianProduct", r"!array_contains"],
+}
+
+
+def _bloom_forced(spark, sf_dir):
+    """q77 with the crossover bypassed (the corpus>>batch regime)."""
+    import vaex_spark as vs
+    from vaex_spark.datapipe.dedup import (build_fingerprint_bloom,
+                                           exact_dedup_incremental)
+    docs = vs.open(f"{sf_dir}/documents.parquet", spark=spark)
+    seen = docs[docs.doc_id % 3 != 0]
+    batch = docs[docs.doc_id % 3 == 0]
+    bloom = build_fingerprint_bloom(seen, fpp=0.01)
+    return exact_dedup_incremental(batch, seen, bloom=bloom,
+                                   bloom_min_corpus_ratio=0)
+
+
+def _q100_blocked(spark, sf_dir):
+    from vaex_spark.datapipe import similarity
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    idx = similarity.corpus_vector_index(
+        emb.filter(emb.vec_id % 5 != 0), bits=2, n_tables=24)
+    return similarity.near_dup_embeddings_against_corpus(
+        emb.filter(emb.vec_id % 5 == 0), corpus_index=idx, threshold=0.42,
+        bits=2, n_tables=24, round_to=6, strategy="blocked")
+
+
+def _q44_blocked(spark, sf_dir):
+    from vaex_spark.datapipe import similarity
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return similarity.embedding_near_dups(
+        emb, threshold=0.42, bits=2, n_tables=24, round_to=6,
+        strategy="blocked")
+
+
+def _isin_large_flag(spark, sf_dir):
+    import vaex_spark as vs
+    df = vs.open(f"{sf_dir}/orders.parquet", spark=spark)
+    df["is_hot"] = df.o_custkey.isin(list(range(1, 4001, 2)))
+    return df[["o_orderkey", "is_hot"]]
+
+
+_EXTRA_BUILDERS = {"q77_bloom_forced": _bloom_forced,
+                   "q100_blocked_form": _q100_blocked,
+                   "q44_blocked_form": _q44_blocked,
+                   "isin_large_flag": _isin_large_flag}
+
+
+@pytest.mark.parametrize("name", list(_PLAN_MARKERS))
+def test_plan_markers(spark, name):
+    import vaex_spark as vs
+    import __spark_entry__ as entry
+    from vaex_spark.dataframe import _sdf
+    build = _EXTRA_BUILDERS.get(name) or entry.queries()[name]
+    try:
+        plan = _sdf(build(spark, _SF01))._jdf.queryExecution() \
+            .executedPlan().toString()
+        missing = [p for p in _PLAN_MARKERS[name]
+                   if bool(re.search(p.lstrip("!"), plan)) == p.startswith("!")]
+        assert not missing, f"{name}: {missing}\n{plan}"
+    finally:
+        vs.cache.release_operator_caches()

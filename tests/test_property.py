@@ -193,7 +193,7 @@ def test_contamination_self_probe(spark, words):
     probes = vs.from_arrays(probe_id=[9], text=[text], spark=spark)
     out = contamination(docs, probes, k=8, probe_id_col="probe_id").collect()
     n_distinct = docs._spark_df().select(
-        F.size(F.array_distinct(shingles(F.col("text"), k=8))).alias("n")
+        F.size(F.array_distinct(shingles("text", k=8))).alias("n")
     ).collect()[0]["n"]
     assert len(out) == 1
     assert out[0]["n_overlap"] == n_distinct

@@ -26,3 +26,28 @@ def quote_name(name: str) -> str:
 def qcol(name: str):
     """``F.col`` that survives non-identifier column names."""
     return F.col(quote_name(name))
+
+
+def name_sql(x, builder: str) -> str:
+    """Quoted SQL name of a SQL-text builder's column argument: a column
+    name, or a vaex ``Expression`` that names a stored column
+    (``df.text``, ``df['a b']``).  The builders assemble one parsed SQL
+    string around this name, so a computed ``Column`` or expression has
+    no spelling here and raises ``TypeError`` naming ``builder``."""
+    if isinstance(x, str):
+        return quote_name(x)
+    from .expression import Expression
+    if isinstance(x, Expression) and x._sql is not None:
+        names = x.df.get_column_names(hidden=True)
+        name = x._sql
+        if name not in names and name.startswith("df[") and name.endswith("]"):
+            import ast
+            try:
+                name = ast.literal_eval(name[3:-1])
+            except (ValueError, SyntaxError):
+                pass
+        if isinstance(name, str) and name in names:
+            return quote_name(name)
+    raise TypeError(
+        f"{builder}() takes a column name or an Expression naming a "
+        f"stored column, got {type(x).__name__}: {x!r}")

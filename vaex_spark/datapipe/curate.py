@@ -53,7 +53,7 @@ def curate(df, text_col: str = "text", id_col: str = "doc_id",
     if langs is not None:
         df = df.filter(lang_id(t).isin(list(langs)))
     if min_quality is not None:
-        df = df.filter(quality_score(t) >= float(min_quality))
+        df = df.filter(quality_score(text_col) >= float(min_quality))
     if repetition_filter:
         df = gopher_filter(df, text_col=text_col, id_col=id_col)
     if dedup == "exact":

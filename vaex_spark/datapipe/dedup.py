@@ -142,9 +142,9 @@ def exact_dup_groups(df, text_col: str = "text", id_col: str = "doc_id"):
 # --------------------------------------------------------------------------
 # minhash + LSH
 # --------------------------------------------------------------------------
-def minhash_signature(text, num_perm: int = 64, shingle_k: int = 5,
-                      precomputed_shingles: Column | None = None) -> Column:
-    """MinHash signature as array<bigint>, pure Column math.
+def minhash_signature(text, num_perm: int = 64, shingle_k: int = 5) -> Column:
+    """MinHash signature as array<bigint>, ONE parsed SQL expression
+    over a column name (or an Expression naming one).
 
     h_i(doc) = min over shingles of xxhash64(xxhash64(shingle), i) —
     each shingle string is hashed ONCE to a bigint, and the num_perm
@@ -155,35 +155,23 @@ def minhash_signature(text, num_perm: int = 64, shingle_k: int = 5,
     array let-bound once; everything stays in codegen — no UDF, no
     explode.
 
-    NULL text / NULL shingle array → NULL signature (r9): the outer
+    NULL text / NULL shingle array → NULL signature: the outer
     transform iterates a LITERAL sequence, so without the guard a null
-    shingle array yielded a non-null array of null minima — a
-    "signature" the exploding :func:`_banded_long` twin never emits
-    (explode of the null gram zip drops the doc).  One contract both
+    shingle array yields a non-null array of null minima — a
+    "signature" the exploding :func:`_banded_long` form never emits
+    (explode of the null gram array drops the doc).  One contract both
     ways: NULL docs are not near-dup candidates."""
-    if precomputed_shingles is None and isinstance(text, str):
-        # ONE-parse SQL-text fast path (r14 opt): the Column form below
-        # is ~5 HOF-lambda constructions ≈ 70 ms of py4j plan-build per
-        # call on this driver; the parsed string is ~1 ms, same tree
-        # (parity pinned in tests/test_sqlexpr_parity.py)
-        from ..colname import quote_name
-        from .text import _shingles_sql
-        return F.expr(_minhash_signature_sql(
-            _shingles_sql(quote_name(text), shingle_k), num_perm))
-    sh = precomputed_shingles if precomputed_shingles is not None else shingles(text, k=shingle_k)
-    base = F.transform(sh, lambda s: F.xxhash64(s))
-    return _let(base, lambda arr: F.when(
-        arr.isNotNull(),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_perm - 1)),
-            lambda i: F.array_min(F.transform(arr, lambda h: F.xxhash64(h, i))))
-    ).otherwise(F.lit(None).cast("array<bigint>")))
+    from ..colname import name_sql
+    from .text import _shingles_sql
+    return F.expr(_minhash_signature_sql(
+        _shingles_sql(name_sql(text, "minhash_signature"), shingle_k),
+        num_perm))
 
 
 def _minhash_signature_sql(sh_sql: str, num_perm: int) -> str:
     """SQL text of :func:`minhash_signature` over a shingle-array SQL
-    expression — identical tree to the Column form (base hashes
-    let-bound once, null-signature guard, per-permutation array_min)."""
+    expression (base hashes let-bound once, null-signature guard,
+    per-permutation array_min)."""
     base = f"transform({sh_sql}, s -> xxhash64(s))"
     body = (f"CASE WHEN arr IS NOT NULL THEN "
             f"transform(sequence(0, {int(num_perm) - 1}), "
@@ -193,10 +181,11 @@ def _minhash_signature_sql(sh_sql: str, num_perm: int) -> str:
 
 
 def _minhash_bands_sql(sig_sql: str, num_bands: int, rows_per_band: int) -> str:
-    """SQL text of :func:`minhash_bands_col` over a signature SQL
-    expression — identical tree to the Column form (signature
-    let-bound, null guard, xxhash64 of the '_'-joined slice per band,
-    seed b + 1000)."""
+    """SQL text of the band-hash array over a signature SQL expression:
+    xxhash64 of each contiguous '_'-joined signature slice, seed
+    b + 1000.  The signature is let-bound so it is computed once, not
+    per band; a NULL signature (NULL doc) gives a NULL band array, so
+    ``posexplode`` drops the doc — matching :func:`_banded_long`."""
     rpb = int(rows_per_band)
     body = (f"CASE WHEN s IS NOT NULL THEN "
             f"transform(sequence(0, {int(num_bands) - 1}), "
@@ -204,22 +193,6 @@ def _minhash_bands_sql(sig_sql: str, num_bands: int, rows_per_band: int) -> str:
             f"{rpb}), x -> cast(x as string)), '_'), b + 1000)) "
             f"ELSE cast(null as array<bigint>) END")
     return f"element_at(transform(array({sig_sql}), s -> {body}), 1)"
-
-
-def minhash_bands_col(sig: Column, num_bands: int, rows_per_band: int) -> Column:
-    """Array of band hashes: hash of each contiguous signature slice.
-    The signature is let-bound so it is computed once, not per band.
-    NULL signature (NULL doc) → NULL band array, so ``posexplode``
-    drops the doc — matching :func:`_banded_long`."""
-    return _let(sig, lambda s: F.when(
-        s.isNotNull(),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_bands - 1)),
-            lambda b: F.xxhash64(
-                F.array_join(F.transform(F.slice(s, b * rows_per_band + 1, rows_per_band),
-                                         lambda x: x.cast("string")), "_"),
-                b + 1000))
-    ).otherwise(F.lit(None).cast("array<bigint>")))
 
 
 def _gram_hashes(sdf, id_col, text_col, shingle_k):
@@ -261,18 +234,17 @@ def _banded_long(sdf, id_col, text_col, num_perm, num_bands, shingle_k):
     """The long-format (id, band, bucket) LSH relation — codegen fast
     path for the hot candidate-generation passes.
 
-    BIT-IDENTICAL to ``posexplode(minhash_bands_col(minhash_signature(
-    text)))`` (asserted in tests): same xxhash64(gram) base hashes,
-    same xxhash64(h, i) permutation family, same xxhash64('_'-joined
-    signature slice, 1000+b) band buckets.  The difference is purely
-    physical: Spark's higher-order functions (transform/aggregate) are
-    CodegenFallback — the Column signature evaluates num_perm ×
-    n_shingles interpreted lambda calls per document — while this form
-    explodes grams to rows and computes the num_perm minima as
-    map-side-combined codegen aggregates (one doc-keyed exchange
-    carrying num_perm longs per doc).  The Column forms stay exported
-    for composition (streaming index build, custom pipelines); both
-    yield the same values so persisted indexes remain compatible."""
+    BIT-IDENTICAL to ``posexplode`` of the :func:`_minhash_bands_sql`
+    band array over :func:`minhash_signature` (asserted in tests): same
+    xxhash64(gram) base hashes, same xxhash64(h, i) permutation family,
+    same xxhash64('_'-joined signature slice, 1000+b) band buckets.
+    The difference is purely physical: Spark's higher-order functions
+    (transform/aggregate) are CodegenFallback — the row-level signature
+    evaluates num_perm × n_shingles interpreted lambda calls per
+    document — while this form explodes grams to rows and computes the
+    num_perm minima as map-side-combined codegen aggregates (one
+    doc-keyed exchange carrying num_perm longs per doc).  Both yield
+    the same values, so persisted indexes stay compatible."""
     rows_per_band = num_perm // num_bands
     grams = _gram_hashes(sdf, id_col, text_col, shingle_k)
     # F.expr strings instead of nested Column calls: the 64-perm agg
@@ -296,7 +268,7 @@ def _banded_auto(sdf, id_col, text_col, num_perm, num_bands, shingle_k):
     """Stats-gated choice between the two band-table forms (values are
     bit-identical either way):
 
-    * ONE advisory partition (Catalyst size stats): the Column
+    * ONE advisory partition (Catalyst size stats): the row-level
       signature form — zero exchanges; the interpreted-HOF cost on a
       few MB of text is smaller than any shuffle's fixed cost
       (measured: 0.56 s vs 1.19 s at 5k docs).
@@ -307,9 +279,9 @@ def _banded_auto(sdf, id_col, text_col, num_perm, num_bands, shingle_k):
       at 100 TB where the interpreted form's per-(gram × perm) lambda
       dispatch dominates)."""
     if (range_partition_count(sdf) or 2) <= 1:
-        # whole band table as ONE parsed SQL expression (r14 opt:
-        # shingles + signature + bands as Columns cost ~0.25 s of py4j
-        # HOF-lambda construction per plan build; same tree)
+        # whole band table as ONE parsed SQL expression (the same
+        # tree built through the Column API cost ~0.25 s of py4j
+        # HOF-lambda construction per plan build)
         from ..colname import quote_name
         from .text import _shingles_sql
         rows_per_band = num_perm // num_bands
@@ -357,7 +329,7 @@ def minhash_lsh_candidates(df, text_col: str = "text", id_col: str = "doc_id",
     """
     sdf = _spread(_sdf(df).select(F.col(id_col), F.col(text_col)))
     # long-format (band, bucket, id) via the codegen fast path
-    # (_banded_long — bit-identical to the Column signature form),
+    # (_banded_long — bit-identical to the row-level signature form),
     # persisted so the self-join's sides share one signature pass
     banded = _register_persist(_cap_buckets(
         _banded_auto(sdf, id_col, text_col, num_perm, num_bands, shingle_k),
@@ -481,7 +453,7 @@ def near_dup_pairs(df, text_col: str = "text", id_col: str = "doc_id",
     """
     sdf = _spread(_sdf(df).select(F.col(id_col), F.col(text_col)))
     # candidate generation through the codegen fast path (_banded_long
-    # — bit-identical values to the Column signature form).  Persist
+    # — bit-identical values to the row-level signature form).  Persist
     # the narrow (id, band, bucket) relation: the self-join's two
     # sides would otherwise each recompute the full num_perm-hash
     # signature pass (no CSE across join branches) — caching num_bands
@@ -1182,7 +1154,7 @@ def corpus_lsh_index(corpus, text_col: str = "text", id_col: str = "doc_id",
     batch side uses — the seed family is deterministic, so equal params
     mean equal buckets."""
     csdf = _sdf(corpus).select(F.col(id_col), F.col(text_col))
-    # codegen fast path; values bit-identical to the Column signature
+    # codegen fast path; values bit-identical to the row-level signature
     # form, so indexes built by either path interoperate.  The build
     # parameters ride in the artifact (stamp.py).
     return _wrap(stamp.write(_banded_auto(csdf, id_col, text_col,
@@ -1215,7 +1187,7 @@ def near_dup_against_corpus(batch, corpus, text_col: str = "text",
     """
     bsdf = _spread(_sdf(batch).select(F.col(id_col), F.col(text_col)))
 
-    def band_table(sdf):  # stats-gated fast path, Column-form-identical
+    def band_table(sdf):  # stats-gated; both forms give identical bands
         return _banded_auto(sdf, id_col, text_col,
                             num_perm, num_bands, shingle_k)
 

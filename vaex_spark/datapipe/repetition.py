@@ -26,18 +26,19 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .text import _let, _words, _words_sql
+from .text import _words_sql
 from ..dataframe import _same_kind
 
 __all__ = ["word_ngrams", "repetition_stats", "gopher_filter"]
 
 
 def _word_ngrams_sql(qn: str, n: int) -> str:
-    """SQL text of :func:`word_ngrams` for a quoted column name — the
-    identical tree assembled with ~1 py4j round-trip instead of the
-    ~10 HOF-lambda constructions of the Column form (driver plan-build
-    cost is query latency at any scale, guide §5; same mechanism as
-    text._shingles_sql)."""
+    """SQL text of :func:`word_ngrams` for a quoted column name.  Grams
+    are n let-bound ``try_element_at`` references joined by
+    ``concat_ws`` (no per-gram ``array_join(slice(...))`` allocation;
+    every window is in range, so the values are the slice's) — the
+    let-binding keeps the split evaluated once, see
+    text._shingles_sql."""
     n = int(n)
     words = _words_sql(qn)
     refs = ", ".join(f"try_element_at(wd, i + {1 + j})" for j in range(n))
@@ -49,29 +50,11 @@ def _word_ngrams_sql(qn: str, n: int) -> str:
 
 def word_ngrams(text, n: int = 2) -> Column:
     """Array of space-joined word n-grams of the normalized text
-    (empty array when the document has fewer than n words).
-
-    r15: grams are n let-bound ``try_element_at`` references joined by
-    ``concat_ws`` instead of per-gram ``array_join(slice(...))``
-    allocations — the same rewrite text.shingles() got in r14 (values
-    identical: every window is in-range so the refs are the slice's
-    elements; the let-binding keeps the split evaluated once, which is
-    load-bearing under interpreted HOF evaluation — see shingles()'s
-    5.7x-regression war story).  A string column name takes the
-    one-parse SQL-text twin."""
-    if isinstance(text, str):
-        from ..colname import quote_name
-        return F.expr(_word_ngrams_sql(quote_name(text), n))
-    words = _words(text)
-
-    def _body(wd):
-        size = F.size(wd)
-        return F.when(size < n, F.array().cast("array<string>")).otherwise(
-            F.transform(F.sequence(F.lit(0), size - n),
-                        lambda i: F.concat_ws(" ", *[
-                            F.try_element_at(wd, i + 1 + j)
-                            for j in range(n)])))
-    return _let(words, _body)
+    (empty array when the document has fewer than n words), built as
+    ONE parsed SQL expression over a column name (or an Expression
+    naming one)."""
+    from ..colname import name_sql
+    return F.expr(_word_ngrams_sql(name_sql(text, "word_ngrams"), n))
 
 
 def _gram_stats(sdf, id_col: str, gram_sql: str, out_top: str, out_dup: str):

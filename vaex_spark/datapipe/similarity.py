@@ -83,28 +83,22 @@ def _stack_f64(vals) -> np.ndarray:
     return np.stack([_vec_f64(v) for v in vals])
 
 
-def _lit_vec(c) -> Column:
-    """Literal double-array Column via ONE parsed SQL expression.
-
-    ``F.lit(list)`` expands to one ``lit()`` py4j round-trip PER
-    ELEMENT plus the CreateArray call — a 64-dim vector is ~65 driver
-    round-trips, and a centroid/plane loop multiplies that (r14
-    measurement: the 8×64 ivf_topk distance array cost 1.6 s of pure
-    plan construction; the parsed-string form 3 ms, values
-    bit-identical).  ``repr(float)`` is the shortest exact round-trip
-    decimal, and Java's Double.parseDouble restores it exactly; NaN
-    and ±Infinity spell the cast-string forms Spark's parser accepts.
-    """
-    return F.expr(_lit_vec_sql(c))
-
-
 def _qn(name: str) -> str:
     from ..colname import quote_name
     return quote_name(name)
 
 
 def _lit_vec_sql(c) -> str:
-    """SQL text of a literal double array (see :func:`_lit_vec`)."""
+    """SQL text of a literal double array.
+
+    ``F.lit(list)`` expands to one ``lit()`` py4j round-trip PER
+    ELEMENT plus the CreateArray call — a 64-dim vector is ~65 driver
+    round-trips, and a centroid/plane loop multiplies that (the 8×64
+    ivf_topk distance array cost 1.6 s of plan construction that way,
+    the parsed-string form 3 ms, values bit-identical).  ``repr(float)``
+    is the shortest exact round-trip decimal, and Java's
+    Double.parseDouble restores it exactly; NaN and ±Infinity spell the
+    cast-string forms Spark's parser accepts."""
     def _f(x):
         x = float(x)
         if x != x:
@@ -387,39 +381,27 @@ def _hyperplanes(dim: int, bits: int, seed: int) -> np.ndarray:
     return rng.randn(bits, dim)
 
 
-def hyperplane_bucket(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-pattern bucket id from literal hyperplanes — pure expressions:
+def hyperplane_bucket(vec, planes: np.ndarray) -> Column:
+    """Sign-pattern bucket id from literal hyperplanes, ONE parsed SQL
+    expression over a column name (or an Expression naming one):
     bucket = sum_b (dot(vec, plane_b) > 0) << b.
 
-    The ``~isnan`` term pins REPRESENTATION parity with the Arrow BLAS
-    form on degenerate vectors (round 10): Spark's NaN-greatest
-    comparison lets a NaN dot pass ``> 0`` (bit set) where numpy's
-    ``NaN > 0`` is False (bit clear).  Degenerate rows never pair
-    anyway (NULL unit / null cosine gates the verify), so this aligns
-    stored index bytes across builder strategies, not results."""
-    if not isinstance(vec, str):
-        # Column input (external composition): route through the same
-        # SQL builder via an alias binding is impossible — keep the
-        # Column construction for this rare path
-        out = F.lit(0).cast("long")
-        for b, plane in enumerate(planes):
-            d = F.aggregate(
-                F.zip_with(vec, _lit_vec(plane),
-                           lambda x, p: x.cast("double") * p),
-                F.lit(0.0), lambda acc, v: acc + v)
-            out = out + F.when((d > 0) & ~F.isnan(d),
-                               F.lit(1 << b).cast("long")).otherwise(
-                                   F.lit(0).cast("long"))
-        return out
-    return F.expr(_hyperplane_bucket_sql(vec, planes))
+    The ``NOT isnan`` term pins REPRESENTATION parity with the Arrow
+    BLAS form on degenerate vectors: Spark's NaN-greatest comparison
+    lets a NaN dot pass ``> 0`` (bit set) where numpy's ``NaN > 0`` is
+    False (bit clear).  Degenerate rows never pair anyway (NULL unit /
+    null cosine gates the verify), so this aligns stored index bytes
+    across builder strategies, not results."""
+    from ..colname import name_sql
+    return F.expr(_hyperplane_bucket_sql(
+        name_sql(vec, "hyperplane_bucket"), planes))
 
 
 def _hyperplane_bucket_sql(vec_sql: str, planes: np.ndarray) -> str:
-    """SQL text of :func:`hyperplane_bucket` (r14 — see _cos_sql for
-    why the hot sites build SQL text).  Each plane's dot product is
-    LET-BOUND so it evaluates once per row — the Column form inlined
-    it twice (once in ``> 0``, once in ``isnan``); same value, half
-    the flops, and ~(2·bits·n_tables) fewer lambda constructions."""
+    """SQL text of :func:`hyperplane_bucket` (see _cos_sql for why the
+    hot sites build SQL text).  Each plane's dot product is LET-BOUND
+    so it evaluates once per row, not once in ``> 0`` and again in
+    ``isnan``."""
     terms = []
     for b, plane in enumerate(planes):
         d = (f"aggregate(zip_with({vec_sql}, {_lit_vec_sql(plane)}, "
@@ -439,12 +421,12 @@ def _bucket_long(sdf, id_col, vec_col, dim, bits, n_tables, seed,
     stage: all n_tables × bits projections are a single BLAS matmul
     X @ Pᵀ per batch (P = the stacked hyperplane matrix, closure-
     shipped), signs packed to bucket ids in numpy, long format emitted
-    directly (no posexplode).  Values match the Column form
+    directly (no posexplode).  Values match the row-level form
     (hyperplane_bucket) — same planes, same sign rule; only a dot
     product within FP epsilon of zero could flip a bucket, which
     perturbs candidate recall marginally and never the exact-cosine
-    verify.  Measured 4.2 s → 0.5 s at 50k × 64 dims (the Column form
-    evaluates n_tables × bits interpreted zip_with/aggregate lambdas
+    verify.  Measured 4.2 s → 0.5 s at 50k × 64 dims (the row-level
+    form evaluates n_tables × bits interpreted zip_with/aggregate lambdas
     of dim multiply-adds per row — CodegenFallback, the minhash
     banding story again)."""
     import pandas as pd
@@ -1172,30 +1154,18 @@ def train_centroids(corpus, n_cells: int = 16, vec_col: str = "embedding",
     return cent
 
 
-def ivf_assign(vec: Column, centroids: np.ndarray) -> Column:
-    """Nearest-centroid cell id, pure expressions.
+def ivf_assign(vec, centroids: np.ndarray) -> Column:
+    """Nearest-centroid cell id, ONE parsed SQL expression over a
+    column name (or an Expression naming one).
 
     Argmin via a let-bound distance array + array_position(array_min):
     each centroid's distance expression appears ONCE in the plan.  (The
     naive chained-when argmin nests every previous distance inside each
     comparison — exponential expression size that OOMs plan construction
     at realistic dim × n_cells; same pathology as the lang_id argmax.)
-    Ties keep the first (lowest) cell id, matching a strict-less scan.
-
-    r14: built as ONE parsed SQL expression (``vec`` may be a column
-    NAME for the fast path; Column inputs keep the Column-API build —
-    see _cos_sql for the py4j-latency numbers)."""
-    if isinstance(vec, str):
-        from ..colname import quote_name
-        return F.expr(_ivf_assign_sql(quote_name(vec), centroids))
-    from .text import _let
-    dists = F.array(*[
-        F.aggregate(
-            F.zip_with(vec, _lit_vec(c),
-                       lambda x, cc: (x.cast("double") - cc) * (x.cast("double") - cc)),
-            F.lit(0.0), lambda acc, v: acc + v)
-        for c in centroids])
-    return _let(dists, lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int"))
+    Ties keep the first (lowest) cell id, matching a strict-less scan."""
+    from ..colname import name_sql
+    return F.expr(_ivf_assign_sql(name_sql(vec, "ivf_assign"), centroids))
 
 
 def _ivf_assign_sql(vec_sql: str, centroids) -> str:
@@ -1457,37 +1427,6 @@ def first_k_centroids(corpus, k: int, vec_col: str = "embedding",
             .orderBy(id_col).select(vec_col).limit(k).collect())
     return (_stack_f64([r[0] for r in rows]) if rows
             else np.empty((0, 0)))
-
-
-def assign_cluster(vec: Column, centroids: np.ndarray, round_to: int = 6) -> Column:
-    """Nearest-centroid cell by ROUNDED cosine (argmax, ties -> lowest
-    cluster id).  Let-bound cosine array so each centroid's expression
-    appears once in the plan (same pathology note as ivf_assign).
-    One ``_lit_vec`` per centroid ROW (ONE parsed expression per
-    vector; r14 — ``F.lit(list)`` expands to a py4j round-trip per
-    ELEMENT and dominated plan build at ~0.2 s per 64-dim centroid).
-
-    Literal-expression form: right for SMALL k (IVF cells).  For k that
-    grows with the corpus (SemDeDup's k ~ sqrt(n)) use the broadcast
-    centroid-table join inside semantic_dedup — k=50k centroids cannot
-    be an expression tree.
-
-    r14: ``vec`` may be a column NAME — the whole argmax is then ONE
-    parsed SQL expression (see _cos_sql for why)."""
-    if isinstance(vec, str):
-        from ..colname import quote_name
-        v = quote_name(vec)
-        vecs = ",".join(_lit_vec_sql(c) for c in centroids)
-        coss = (f"transform(array({vecs}), "
-                f"c -> round({_cos_sql(v, 'c')}, {int(round_to)}))")
-        return F.expr(_let_sql(
-            coss, "cs",
-            "cast(array_position(cs, array_max(cs)) - 1 as int)"))
-    from .text import _let
-    coss = F.array(*[
-        F.round(cosine(vec, _lit_vec(c)), round_to)
-        for c in centroids])
-    return _let(coss, lambda cs: (F.array_position(cs, F.array_max(cs)) - 1).cast("int"))
 
 
 def semantic_dedup(corpus, n_clusters: int = 8, threshold: float = 0.95,

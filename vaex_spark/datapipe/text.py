@@ -103,39 +103,30 @@ def quality_features(text) -> dict[str, Column]:
 
 
 def quality_score(text) -> Column:
-    """Scalar quality score in [0,1]: product of clipped signal scores.
-    Deterministic, expression-only.
-
-    ``text`` may be a column NAME (r14): the whole score is then ONE
-    parsed SQL expression mirroring the Column tree exactly — ~30
-    Column-API calls at 1-2 ms py4j latency each were ~0.1 s of plan
-    build per query (see similarity._cos_sql)."""
-    if isinstance(text, str):
-        from ..colname import quote_name
-        t = quote_name(text)
-        ntok = (f"CASE WHEN length(trim({t})) = 0 THEN 0 "
-                f"ELSE size(split(trim({t}), '\\\\s+')) END")
-        safe_chars = f"cast(greatest(length({t}), 1) as double)"
-        stop_re = "\\\\b(" + "|".join(_STOPWORDS_EN) + ")\\\\b"
-        stop_hits = (f"size(regexp_extract_all(lower({t}), "
-                     f"'{stop_re}', 0))")
-        len_score = f"least(cast({ntok} as double) / 20.0D, 1.0D)"
-        alpha = (f"(cast(length(regexp_replace({t}, '[^A-Za-z]', '')) "
-                 f"as double) / {safe_chars})")
-        stop_score = (f"least(cast({stop_hits} as double) / "
-                      f"greatest({ntok}, 1) * 4.0D, 1.0D)")
-        not_digit = (f"greatest(0.0D, 1.0D - "
-                     f"cast(length(regexp_replace({t}, '[^0-9]', '')) "
-                     f"as double) / {safe_chars} * 3.0D)")
-        return F.expr(f"round({len_score} * {alpha} * {stop_score} * "
-                      f"{not_digit}, 6)")
-    f = quality_features(text)
-    # each component scaled into [0,1]
-    len_score = F.least(f["n_tokens"].cast("double") / 20.0, F.lit(1.0))
-    alpha_score = f["alpha_ratio"]
-    stop_score = F.least(f["stopword_ratio"] * 4.0, F.lit(1.0))
-    not_digit = F.greatest(F.lit(0.0), F.lit(1.0) - f["digit_ratio"] * 3.0)
-    return F.round(len_score * alpha_score * stop_score * not_digit, 6)
+    """Scalar quality score in [0,1]: product of clipped signal scores
+    (the :func:`quality_features` signals, each scaled into [0,1]).
+    Deterministic, expression-only.  ``text`` is a column name or an
+    Expression naming one; the score is ONE parsed SQL expression — the
+    Column-API build of the same tree costs ~30 py4j round trips (50-60
+    ms of driver time per call, 4-core box)."""
+    from ..colname import name_sql
+    t = name_sql(text, "quality_score")
+    ntok = (f"CASE WHEN length(trim({t})) = 0 THEN 0 "
+            f"ELSE size(split(trim({t}), '\\\\s+')) END")
+    safe_chars = f"cast(greatest(length({t}), 1) as double)"
+    stop_re = "\\\\b(" + "|".join(_STOPWORDS_EN) + ")\\\\b"
+    stop_hits = (f"size(regexp_extract_all(lower({t}), "
+                 f"'{stop_re}', 0))")
+    len_score = f"least(cast({ntok} as double) / 20.0D, 1.0D)"
+    alpha = (f"(cast(length(regexp_replace({t}, '[^A-Za-z]', '')) "
+             f"as double) / {safe_chars})")
+    stop_score = (f"least(cast({stop_hits} as double) / "
+                  f"greatest({ntok}, 1) * 4.0D, 1.0D)")
+    not_digit = (f"greatest(0.0D, 1.0D - "
+                 f"cast(length(regexp_replace({t}, '[^0-9]', '')) "
+                 f"as double) / {safe_chars} * 3.0D)")
+    return F.expr(f"round({len_score} * {alpha} * {stop_score} * "
+                  f"{not_digit}, 6)")
 
 
 # --------------------------------------------------------------------------
@@ -186,53 +177,30 @@ def fingerprint(text, normalize: bool = True) -> Column:
 
 
 def shingles(text, k: int = 5) -> Column:
-    """Array of k-word shingles (for MinHash / Jaccard).  NULL text →
-    NULL array (r9: was ``[null]`` — ``size(null)`` = -1 < k took the
-    whole-text branch and ``array_join(null)`` = null became a phantom
-    single-null shingle, which made every pair of NULL docs Jaccard-1.0
-    duplicates and fed the MinHash Column form a signature the
-    exploding ``_banded_long`` twin never computes).
-
-    r14: grams are built from k ``try_element_at`` references on a
-    LET-BOUND words array instead of ``array_join(slice(words, i+1,
-    k))`` on the raw split expression.  The let-binding is load-
-    bearing, not a style choice: interpreted HOF evaluation re-runs
-    every occurrence of a non-variable subexpression, so k references
-    to the INLINE ``words`` re-ran the regex+split chain k times PER
-    GRAM — measured 0.34 → 1.17 s at k=8 on the exploded sf0.1 corpus
-    (a 5.7× q50 regression this round's own 113-query profile caught)
-    — while k references to a lambda VARIABLE are k array accesses
-    (0.34 → 0.21 s, the intended ~2× win; values identical — the loop
-    stops at n-k so every window is full-width).
-
-    A plain column NAME takes the ONE-parse SQL-text fast path (r14
-    opt: the Column form is ~6 HOF-lambda constructions ≈ 90 ms of
-    py4j plan-build per call on this driver; the parsed string is
-    ~1 ms and yields the identical tree — same mechanism as
-    _winnow_fps_expr / _gram_hashes, parity pinned in
-    tests/test_sqlexpr_parity.py)."""
-    if isinstance(text, str):
-        from ..colname import quote_name
-        return F.expr(_shingles_sql(quote_name(text), k))
-    t = _c(text)
-    words = _words(t)
-
-    def _body(wd):
-        n = F.size(wd)
-        # transform over 0..n-k producing space-joined k-grams
-        idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-        return F.when(n < k, F.array(F.array_join(wd, " "))).otherwise(
-            F.transform(idx, lambda i: F.concat_ws(" ", *[
-                F.try_element_at(wd, i + 1 + j) for j in range(k)])))
-    return F.when(t.isNull(), F.lit(None).cast("array<string>")).otherwise(
-        _let(words, _body))
+    """Array of k-word shingles (for MinHash / Jaccard), built as ONE
+    parsed SQL expression over a column name (or an Expression naming
+    one).  NULL text → NULL array: ``size(null)`` = -1 < k would take
+    the whole-text branch and ``array_join(null)`` = null would become a
+    phantom single-null shingle, making every pair of NULL docs
+    Jaccard-1.0 duplicates.  A doc with fewer than k words is one
+    whole-text shingle."""
+    from ..colname import name_sql
+    return F.expr(_shingles_sql(name_sql(text, "shingles"), k))
 
 
 def _shingles_sql(qn: str, k: int) -> str:
-    """SQL text of :func:`shingles` for a quoted column name — the
-    same tree :func:`shingles` builds through the Column API (null
-    guard, let-bound words, n<k whole-text branch, k try_element_at
-    references per gram), assembled with zero py4j round-trips."""
+    """SQL text of :func:`shingles` for a quoted column name: null
+    guard, let-bound words, n<k whole-text branch, k
+    ``try_element_at`` references per gram.
+
+    The let-binding is load-bearing, not a style choice: interpreted
+    HOF evaluation re-runs every occurrence of a non-variable
+    subexpression, so k references to an INLINE ``words`` re-ran the
+    regex+split chain k times PER GRAM — measured 0.34 → 1.17 s at k=8
+    on the exploded sf0.1 corpus — while k references to a lambda
+    VARIABLE are k array accesses (0.34 → 0.21 s against the older
+    per-gram ``array_join(slice(words, i+1, k))`` form; values
+    identical — the loop stops at n-k so every window is full-width)."""
     k = int(k)
     words = _words_sql(qn)
     refs = ", ".join(f"try_element_at(wd, i + {1 + j})" for j in range(k))
@@ -254,7 +222,8 @@ def _winnow_fps_expr(text_col: str, k: int, window: int, gram: bool) -> Column:
     The selection is row-local per document (a window's minimum never
     needs another doc's grams), so nothing forces the Exchange(doc) +
     Sort + window + distinct machinery the declarative twin pays (two
-    full shuffles of the exploded gram relation, PLANS_r07 q96):
+    full shuffles of the exploded gram relation in q96's plan at
+    commit 06cd14e):
 
     * ``words``  — one split of the normalized text (let-bound via
       :func:`_let` so the split appears once in the expression tree;
@@ -584,7 +553,7 @@ def suggest_winnow_params(min_match_words: int, noise_words: int = 5,
     index) satisfying the guarantee at t = ``min_match_words``.
     Expected density is 2/(window+1) fingerprints per gram — measured
     at 1.022x on a 1M-doc corpus (+2.2% window-start boundary term,
-    SCALECHECK_r11 winnow_1m), so predictions carry that factor.
+    winnow_1m probe, commit ee8532f), so predictions carry that factor.
 
     With ``n_docs`` and ``words_per_doc`` given, also predicts
     fingerprints per document, total index rows, and flat-index bytes
@@ -760,7 +729,7 @@ def with_text_stats(df, text_col: str = "text"):
     return (df
             .withColumn("n_tokens", token_count_whitespace(t))
             .withColumn("n_tokens_bpe", token_count_bpe(t))
-            .withColumn("quality", quality_score(t))
+            .withColumn("quality", quality_score(text_col))
             .withColumn("lang_guess", lang_id(t))
             .withColumn("fingerprint", fingerprint(t)))
 
@@ -1190,7 +1159,7 @@ def corpus_profile(df, text_col: str = "text", group_col: str = "source",
     profile row into incremental state (see datapipe/sketches.py).
     """
     toks = token_count_whitespace(F.col(text_col))
-    q = quality_score(F.col(text_col))
+    q = quality_score(text_col)
     aggs = [
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(toks.cast("long")).cast("long").alias("n_tokens"),

@@ -940,8 +940,8 @@ class KMeans(Transformer):
         with the sample's converged centers.
 
         Why: every distributed Lloyd iteration is a full corpus scan —
-        at k=2048 × 6.4M rows the measured traces (SCALECHECK_r07
-        kmeans_init_study) put this init 1.5–2 distributed iterations
+        at k=2048 × 6.4M rows the measured traces (kmeans_init_study
+        probe, commit 06cd14e) put this init 1.5–2 distributed iterations
         ahead of the seeded-random init for ~6 s of driver work, and
         the gap grows with corpus size (the sample cost is constant).
         The sample Lloyd is blocked (4096-row tiles against the k×d

@@ -156,7 +156,7 @@ def _block_window(sdf, before: int, after: int, n, donor_cols=None):
     r12 form derived pids from physical partition placement and had to
     persist the FULL-WIDTH frame to keep the main/donor/pidmap branches
     on one materialization — ~20 GB at 1e8×22 cols, the engine's single
-    biggest measured wall, SCALECHECK_r12.)
+    biggest measured wall, commit eeaa6b4.)
 
     Exactness: row ids are globally contiguous 0..n-1 (the with_row_id
     contract, rowid.py), every block except the last holds exactly B
